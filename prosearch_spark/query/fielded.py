@@ -22,25 +22,16 @@ from pyspark.sql import functions as F
 
 from prosearch_spark.analyzer import analyze_query, parse_query_lenient
 from prosearch_spark.index.build import InvertedIndex
+from prosearch_spark.query.block_engine import (
+    block_cols,
+    block_key,
+    overlap_semi,
+    term_ranges,
+)
 from prosearch_spark.query.bm25 import SCORE_EXPR
+from prosearch_spark.query.wand import align_seg, block_max_wand
 
 DEFAULT_FIELD_BOOSTS = {"title": 1.5, "body": 1.0}
-
-
-def _align_seg(frames: list[DataFrame]) -> list[DataFrame]:
-    """Align per-field block frames on the optional ``seg`` tag before
-    unionByName: a live (tombstoned) segment-stack field tags its
-    blocks with the source segment while a clean field does not — the
-    clean side gets seg='' (matches no tombstone; apply_deletes drops
-    the column after the anti-join)."""
-    if not any("seg" in f.columns for f in frames):
-        return frames
-    return [f if "seg" in f.columns else f.withColumn("seg", F.lit(""))
-            for f in frames]
-
-
-def _seg_cols(df: DataFrame) -> list[str]:
-    return ["seg"] if "seg" in df.columns else []
 
 
 def field_boost_expr(field_boosts: dict[str, float]):
@@ -297,10 +288,7 @@ class FieldedBlockSearchEngine:
 
         postings = term_stats = stats = None
         for field, art in sorted(self.artifacts.items()):
-            fb = blocks.filter(F.col("field") == field).select(
-                "term", "first_doc", "last_doc", "n", "max_tf", "min_dl",
-                "docs", "tfs", "dls", *_seg_cols(blocks),
-            )
+            fb = block_cols(blocks.filter(F.col("field") == field))
             p = apply_deletes(decode_blocks(fb), art.deletes())
             p = p.select(F.lit(field).alias("field"), "term", "doc_id",
                          "tf", "dl")
@@ -316,6 +304,10 @@ class FieldedBlockSearchEngine:
                             stats=stats)
         return FieldedSearchEngine(self.spark, idx, self.field_boosts)
 
+    def _sources(self) -> list:
+        return [(field, art, float(self.field_boosts.get(field, 1.0)))
+                for field, art in sorted(self.artifacts.items())]
+
     def topk_wand(self, q: str, k: int = 10, round_to: int | None = None,
                   min_prune_blocks: int | None = None
                   ) -> tuple[DataFrame, dict]:
@@ -323,469 +315,47 @@ class FieldedBlockSearchEngine:
         score-bound block pruning for the reference's production query
         shape: multi-field OR with boosts title 1.5 / body 1.0
         (serve.rs:336-351) served from block-max skip data
-        (serve.rs:413-419 BooleanQuery over Tantivy segments).
-
-        Same rarest-term zipper as BlockSearchEngine.topk_wand, with
-        two fielded twists:
-
-        - the driver term is rarest by TOTAL df across fields, and its
-          candidate doc ranges are the union of its block ranges over
-          every field (a match contains the driver term in >= 1 field);
-        - a range's score bound sums, per term, the FIELD-SUM of max
-          block upper bounds (a doc can match a term in both fields and
-          collect both contributions), each block bound pre-multiplied
-          by its field boost. ``title`` is record:"basic" (tf==1 at
-          commit), so its stored max_tf==1 gives the tight title bound
-          for free. A range where some term overlaps NO field's blocks
-          cannot host a conjunctive match and dies outright.
-
-        Soundness mirrors the flat engine: any doc passing the
-        conjunction matched the driver clause, so it lies inside a
-        driver range, and every posting of a doc inside a kept range is
-        decoded (one block per (field, term) contains it) — partially
-        decoded outside docs can never pass the clause-count filter.
-        Returns (result, stats with blocks_total/blocks_decoded).
-
-        Sparse-field mitigation (round 4): a field where the driver
-        term is SPARSE (e.g. scattered background mentions in titles)
-        yields blocks spanning huge docid ranges; bounding those
-        ranges whole collects the GLOBAL maxima and pruning
-        degenerates to a full decode (the r3 known limit — measured
-        1577/1579 decoded at 800k). Wide driver ranges therefore
-        SUBDIVIDE into at most 64 fixed-stride chunks before the
-        bounds pass: chunks partition each range exactly, so the
-        soundness proof holds verbatim with "chunk" for "range",
-        while each chunk's bound collects only LOCAL overlapping
-        maxima — 48% of blocks prune on the same corpus (BENCH.md
-        §2e). Narrow (healthy) driver blocks stay whole
-        (MIN_STRIDE).
-        """
-        from prosearch_spark.index.blocks import (
-            BLOCK_SIZE,
-            block_upper_bound_expr,
-        )
-        from prosearch_spark.query.block_engine import (
-            SEED_BLOCK_CAP,
-            WAND_MIN_PRUNE_BLOCKS,
-        )
-        from prosearch_spark.query.engine import (
-            TOPK_SCHEMA,
-            materialize_topk,
-        )
-
-        if min_prune_blocks is None:
-            min_prune_blocks = WAND_MIN_PRUNE_BLOCKS
+        (serve.rs:413-419 BooleanQuery over Tantivy segments). The
+        conjunctive ladder of query/wand.py with one source per field:
+        the driver term is rarest by TOTAL df across fields, each
+        block bound carries its field boost, and a range's bound sums
+        per term the FIELD-SUM of max block bounds (a doc can match a
+        term in both fields). ``title`` is record:"basic" (tf==1 at
+        commit), so its stored max_tf==1 gives the tight title bound
+        for free. Returns (result, stats with
+        blocks_total/blocks_decoded)."""
         clauses = analyze_query(q)
         terms = sorted({t for t, _ in clauses})
-        weights = {t: 0.0 for t in terms}
-        for t, b in clauses:
-            weights[t] += b
 
-        metas = []
-        dfs_total = {t: 0 for t in terms}
-        for field, art in sorted(self.artifacts.items()):
-            boost = float(self.field_boosts.get(field, 1.0))
-            ts = art.term_stats(terms)
-            for r in ts.collect():
-                dfs_total[r["term"]] += int(r["df"])
-            fblocks = art.blocks(terms)
-            m = (
-                fblocks
-                .join(F.broadcast(ts), "term")
-                .join(F.broadcast(art.stats()))
-                .withColumn("wub",
-                            F.lit(boost) * F.expr(block_upper_bound_expr()))
-                .select(F.lit(field).alias("field"), "term", "first_doc",
-                        "last_doc", "n", "max_tf", "min_dl", "docs", "tfs",
-                        "dls", "wub", *_seg_cols(fblocks))
-            )
-            metas.append(m)
-        metas = _align_seg(metas)
-        if any(dfs_total[t] == 0 for t in terms):
-            # a clause with zero postings in EVERY field: conjunction
-            # is empty by the same rule as the flat engine
-            return (self.spark.createDataFrame([], TOPK_SCHEMA),
-                    {"blocks_total": 0, "blocks_decoded": 0})
-        meta = metas[0]
-        for m in metas[1:]:
-            meta = meta.unionByName(m)
-        meta = meta.persist()
-        try:
-            # ONE metadata job yields n_blocks AND n_rarest (driver is
-            # picked from the already-collected per-field term stats) —
-            # the flat ladder's r3-verdict count fold, applied here too
-            driver = min(terms, key=lambda t: (dfs_total[t], t))
-            cnt_rows = meta.groupBy(
-                (F.col("term") == driver).alias("is_r")
-            ).agg(F.count("*").alias("n")).collect()
-            n_blocks = sum(r["n"] for r in cnt_rows)
-            n_rarest = sum(r["n"] for r in cnt_rows if r["is_r"])
-            if n_blocks == 0:
-                return (self.spark.createDataFrame([], TOPK_SCHEMA),
-                        {"blocks_total": 0, "blocks_decoded": 0})
-            if n_blocks < min_prune_blocks:
-                out = materialize_topk(
-                    self.spark,
-                    self._engine_on_blocks(meta, terms).topk(q, k, round_to),
-                )
-                return out, {"blocks_total": n_blocks,
-                             "blocks_decoded": n_blocks,
-                             "blocks_seed": 0, "blocks_final": n_blocks,
-                             "short_circuit": True}
-            rmeta = meta.filter(F.col("term") == driver)
+        def score(blocks: DataFrame, rt: int | None) -> DataFrame:
+            return self._engine_on_blocks(blocks, terms).topk(q, k, rt)
 
-            B = min(max(4, -(-k // BLOCK_SIZE) * 2), SEED_BLOCK_CAP)
-            while True:
-                covers_all = B >= n_rarest
-                ranges = [
-                    (r["first_doc"], r["last_doc"])
-                    for r in rmeta.select("wub", "first_doc", "last_doc",
-                                          "field")
-                    .orderBy(F.desc("wub"), F.asc("first_doc"),
-                             F.asc("field"))
-                    .limit(B).collect()
-                ]
-                ranges_df = self.spark.createDataFrame(
-                    ranges, "rf long, rl long"
-                )
-                seed_blocks = meta.join(
-                    F.broadcast(ranges_df),
-                    (F.col("first_doc") <= F.col("rl"))
-                    & (F.col("last_doc") >= F.col("rf")),
-                    "left_semi",
-                )
-                n_seed = seed_blocks.count()
-                rt = round_to if covers_all else None
-                seed_rows = self._engine_on_blocks(seed_blocks, terms) \
-                    .topk(q, k, round_to=rt).collect()
-                if covers_all:
-                    out = (self.spark.createDataFrame(seed_rows, TOPK_SCHEMA)
-                           if seed_rows else
-                           self.spark.createDataFrame([], TOPK_SCHEMA))
-                    return out, {"blocks_total": n_blocks,
-                                 "blocks_decoded": n_seed,
-                                 "blocks_seed": n_seed, "blocks_final": 0}
-                if len(seed_rows) >= k:
-                    break
-                B *= 4
-                if min(B, n_rarest) > SEED_BLOCK_CAP:
-                    return self.topk(q, k, round_to), {
-                        "blocks_total": n_blocks,
-                        "blocks_decoded": n_blocks,
-                        "seed_capped": True,
-                    }
-            theta = min(r["score"] for r in seed_rows)
-            eps = (10 ** (-round_to) if round_to is not None
-                   else 1e-9 * abs(theta))
-            if n_blocks - n_seed < min_prune_blocks:
-                out = self._engine_on_blocks(meta, terms).topk(
-                    q, k, round_to=round_to
-                )
-                return out, {"blocks_total": n_blocks,
-                             "blocks_decoded": n_blocks,
-                             "blocks_seed": n_seed,
-                             "blocks_final": n_blocks - n_seed,
-                             "bounds_skipped": True}
-
-            # bound per driver CHUNK: sum_t w_t * sum_f max_f(wub).
-            # Round 4: wide-span driver ranges are SUBDIVIDED into at
-            # most CHUNKS_PER_RANGE fixed strides before bounding —
-            # a sparse-field driver block spanning the whole docid
-            # space previously made every bound collect the GLOBAL
-            # maxima (pruning degenerated to a full decode, the
-            # documented r3 limit; BENCH.md §2e measured 1577/1579
-            # decoded at 800k). Chunks partition each driver range
-            # exactly, so the soundness argument is unchanged with
-            # "chunk" substituted for "range": every posting block of
-            # a doc inside a chunk overlaps that chunk, hence the
-            # chunk bound dominates the doc's score, and all blocks
-            # overlapping a surviving chunk decode. Pure column math
-            # (no extra driver job); ≤ 64 chunks per driver block
-            # keeps the bounds join metadata-sized.
-            CHUNKS_PER_RANGE = 64
-            # narrow (healthy) driver blocks stay ~whole: only spans
-            # well past a block's worth of docids subdivide
-            MIN_STRIDE = BLOCK_SIZE * 16
-            span = F.col("rl") - F.col("rf") + F.lit(1)
-            stride = F.greatest(
-                F.ceil(span / F.lit(CHUNKS_PER_RANGE)).cast("long"),
-                F.lit(MIN_STRIDE).cast("long"))
-            r_ranges = (
-                rmeta.select(
-                    F.col("first_doc").alias("rf"),
-                    F.col("last_doc").alias("rl"),
-                ).dropDuplicates()
-                .select(
-                    "rf", "rl", stride.alias("stride"),
-                    F.explode(F.sequence(
-                        F.lit(0).cast("long"),
-                        F.floor((span - F.lit(1)) / stride).cast("long"),
-                    )).alias("i"),
-                )
-                .select(
-                    (F.col("rf") + F.col("i") * F.col("stride"))
-                    .alias("rf"),
-                    F.least(
-                        F.col("rf") + (F.col("i") + F.lit(1))
-                        * F.col("stride") - F.lit(1),
-                        F.col("rl"),
-                    ).alias("rl"),
-                )
-                .dropDuplicates()
-            )
-            w_expr = None
-            for t in terms:
-                e = (F.when(F.col("term") == t, F.lit(weights[t]))
-                     if w_expr is None
-                     else w_expr.when(F.col("term") == t, F.lit(weights[t])))
-                w_expr = e
-            contrib = (
-                meta.select("field", "term", "first_doc", "last_doc", "wub")
-                .join(
-                    F.broadcast(r_ranges),
-                    (F.col("first_doc") <= F.col("rl"))
-                    & (F.col("last_doc") >= F.col("rf")),
-                )
-                .groupBy("rf", "rl", "term", "field")
-                .agg(F.max("wub").alias("mx"))
-                .groupBy("rf", "rl", "term")
-                .agg(F.sum("mx").alias("fsum"))
-            )
-            bounds = (
-                contrib.withColumn("w", w_expr)
-                .groupBy("rf", "rl")
-                .agg(F.sum(F.col("w") * F.col("fsum")).alias("bound"),
-                     F.countDistinct("term").alias("nterms"))
-                # a range missing ANY clause term (in every field)
-                # cannot host a conjunctive match
-                .filter(F.col("nterms") == len(terms))
-            )
-            surviving = bounds.filter(
-                F.col("bound") >= F.lit(theta - eps)
-            ).select("rf", "rl")
-            survivors = meta.join(
-                F.broadcast(surviving),
-                (F.col("first_doc") <= F.col("rl"))
-                & (F.col("last_doc") >= F.col("rf")),
-                "left_semi",
-            )
-            # block key includes seg on a live stack view (an upserted
-            # doc keeps its id, so same-keyed blocks can exist in two
-            # segments and the seed anti-join must not conflate them)
-            key = ["field", "term", "first_doc"] + _seg_cols(seed_blocks)
-            new_blocks = survivors.join(
-                seed_blocks.select(*key), key, "left_anti",
-            )
-            n_new = new_blocks.count()
-            out = self._engine_on_blocks(
-                seed_blocks.unionByName(new_blocks), terms
-            ).topk(q, k, round_to=round_to)
-            return out, {"blocks_total": n_blocks,
-                         "blocks_decoded": n_seed + n_new,
-                         "blocks_seed": n_seed, "blocks_final": n_new}
-        finally:
-            meta.unpersist()
+        return block_max_wand(self.spark, self._sources(), clauses, score,
+                              k, round_to, min_prune_blocks,
+                              conjunctive=True)
 
     def topk_wand_or(self, q: str, k: int = 10,
                      round_to: int | None = None,
                      min_prune_blocks: int | None = None,
                      min_match: int = 1) -> tuple[DataFrame, dict]:
         """DISJUNCTIVE Block-Max WAND over PER-FIELD artifacts — the
-        flat topk_wand_or ladder with (field, term) playing the role
-        of the term: every block is its own candidate, bounded by
-
-            bound(b) = wub(b) + sum over groups (t', f') != (term(b),
-                       field(b)) of max{wub(b') : b' overlaps b}
-
-        where wub folds BOTH weights (clause weight x field boost x
-        block upper bound). Soundness is the flat argument verbatim:
-        a doc d scoring in (t', f') has its posting in exactly one
-        (t', f')-block, which contains d and therefore overlaps every
-        block holding one of d's postings — so each of d's blocks
-        bounds d's full score, and if score(d) >= theta ALL of d's
-        blocks survive (d decodes completely and exactly). The SAME
-        term in the OTHER field is one of the summed groups — a doc
-        can match a term in both fields and collect both
-        contributions. Partially decoded survivors only understate
-        sub-theta scores. ``min_match`` relaxes/filters DISTINCT
-        clause counts at scoring only (bounds dominate any subset).
-        Cost cutoffs mirror the flat disjunctive ladder.
-        """
-        from prosearch_spark.index.blocks import (
-            BLOCK_SIZE,
-            block_upper_bound_expr,
-        )
-        from prosearch_spark.query.block_engine import (
-            SEED_BLOCK_CAP,
-            WAND_OR_MIN_PRUNE_BLOCKS,
-        )
-        from prosearch_spark.query.engine import (
-            TOPK_SCHEMA,
-            materialize_topk,
-        )
-
-        if min_prune_blocks is None:
-            min_prune_blocks = WAND_OR_MIN_PRUNE_BLOCKS
+        disjunctive ladder of query/wand.py with (field, term) playing
+        the role of the term: the SAME term in the OTHER field is one
+        of the summed groups of a block's bound (a doc can match a
+        term in both fields and collect both contributions), and each
+        block bound folds clause weight x field boost. ``min_match``
+        filters DISTINCT clause counts at scoring only (bounds
+        dominate any subset)."""
         clauses = analyze_query(q)
         terms = sorted({t for t, _ in clauses})
-        weights = {t: 0.0 for t in terms}
-        for t, b in clauses:
-            weights[t] += b
-        if not terms:
-            return (self.spark.createDataFrame([], TOPK_SCHEMA),
-                    {"blocks_total": 0, "blocks_decoded": 0})
 
-        w_expr = None
-        for t in terms:
-            e = F.when(F.col("term") == t, F.lit(weights[t]))
-            w_expr = e if w_expr is None else w_expr.when(
-                F.col("term") == t, F.lit(weights[t]))
-
-        metas = []
-        for field, art in sorted(self.artifacts.items()):
-            boost = float(self.field_boosts.get(field, 1.0))
-            fblocks = art.blocks(terms)
-            m = (
-                fblocks
-                .join(F.broadcast(art.term_stats(terms)), "term")
-                .join(F.broadcast(art.stats()))
-                .withColumn(
-                    "wub",
-                    w_expr * F.lit(boost)
-                    * F.expr(block_upper_bound_expr()))
-                .select(F.lit(field).alias("field"), "term", "first_doc",
-                        "last_doc", "n", "max_tf", "min_dl", "docs",
-                        "tfs", "dls", "wub", *_seg_cols(fblocks))
-            )
-            metas.append(m)
-        metas = _align_seg(metas)
-        meta = metas[0]
-        for m in metas[1:]:
-            meta = meta.unionByName(m)
-        meta = meta.persist()
-
-        def _topk_or(blks, rt):
-            return self._engine_on_blocks(blks, terms).topk_or(
+        def score(blocks: DataFrame, rt: int | None) -> DataFrame:
+            return self._engine_on_blocks(blocks, terms).topk_or(
                 q, k, round_to=rt, min_match=min_match)
 
-        try:
-            n_blocks = meta.count()
-            if n_blocks == 0:
-                return (self.spark.createDataFrame([], TOPK_SCHEMA),
-                        {"blocks_total": 0, "blocks_decoded": 0})
-            if n_blocks < min_prune_blocks:
-                out = materialize_topk(self.spark, _topk_or(meta, round_to))
-                return out, {"blocks_total": n_blocks,
-                             "blocks_decoded": n_blocks,
-                             "blocks_seed": 0, "blocks_final": n_blocks,
-                             "short_circuit": True}
-
-            B = min(max(4, -(-k // BLOCK_SIZE) * 2), SEED_BLOCK_CAP)
-            while True:
-                covers_all = B >= n_blocks
-                ranges = [
-                    (r["first_doc"], r["last_doc"])
-                    for r in meta.select("wub", "first_doc", "last_doc",
-                                         "field")
-                    .orderBy(F.desc("wub"), F.asc("first_doc"),
-                             F.asc("field"))
-                    .limit(B).collect()
-                ]
-                ranges_df = self.spark.createDataFrame(
-                    ranges, "rf long, rl long")
-                seed_blocks = meta.join(
-                    F.broadcast(ranges_df),
-                    (F.col("first_doc") <= F.col("rl"))
-                    & (F.col("last_doc") >= F.col("rf")),
-                    "left_semi",
-                )
-                n_seed = seed_blocks.count()
-                rt = round_to if covers_all else None
-                seed_rows = _topk_or(seed_blocks, rt).collect()
-                if covers_all:
-                    out = (self.spark.createDataFrame(seed_rows,
-                                                      TOPK_SCHEMA)
-                           if seed_rows else
-                           self.spark.createDataFrame([], TOPK_SCHEMA))
-                    return out, {"blocks_total": n_blocks,
-                                 "blocks_decoded": n_seed,
-                                 "blocks_seed": n_seed,
-                                 "blocks_final": 0}
-                if len(seed_rows) >= k:
-                    break
-                B *= 4
-                if min(B, n_blocks) > SEED_BLOCK_CAP:
-                    out = materialize_topk(
-                        self.spark, _topk_or(meta, round_to))
-                    return out, {"blocks_total": n_blocks,
-                                 "blocks_decoded": n_blocks,
-                                 "seed_capped": True}
-            theta = min(r["score"] for r in seed_rows)
-            eps = (10 ** (-round_to) if round_to is not None
-                   else 1e-9 * abs(theta))
-
-            if n_blocks - n_seed < min_prune_blocks:
-                out = _topk_or(meta, round_to)
-                return out, {"blocks_total": n_blocks,
-                             "blocks_decoded": n_blocks,
-                             "blocks_seed": n_seed,
-                             "blocks_final": n_blocks - n_seed,
-                             "bounds_skipped": True}
-
-            # per-block bound via ONE metadata self-range-join over
-            # (field, term) groups
-            ra = meta.select(
-                F.col("field").alias("rfld"),
-                F.col("term").alias("rt"),
-                F.col("first_doc").alias("rf"),
-                F.col("last_doc").alias("rl"),
-                F.col("wub").alias("rwub"),
-            )
-            others = meta.select("field", "term", "first_doc",
-                                 "last_doc", "wub")
-            per_group_max = (
-                others.join(
-                    F.broadcast(ra),
-                    (F.col("first_doc") <= F.col("rl"))
-                    & (F.col("last_doc") >= F.col("rf"))
-                    & ~((F.col("term") == F.col("rt"))
-                        & (F.col("field") == F.col("rfld"))),
-                )
-                .groupBy("rfld", "rt", "rf", "rl", "rwub", "term", "field")
-                .agg(F.max("wub").alias("mx"))
-            )
-            osum = per_group_max.groupBy("rfld", "rt", "rf", "rl",
-                                         "rwub").agg(
-                F.sum("mx").alias("osum"))
-            surviving = (
-                ra.join(osum, ["rfld", "rt", "rf", "rl", "rwub"], "left")
-                .withColumn("bound",
-                            F.col("rwub") + F.coalesce(F.col("osum"),
-                                                       F.lit(0.0)))
-                .filter(F.col("bound") >= F.lit(theta - eps))
-                .select(F.col("rfld").alias("field"),
-                        F.col("rt").alias("term"),
-                        F.col("rf").alias("first_doc"))
-            )
-            # live-stack note: the survival semi-join on (field, term,
-            # first_doc) may keep a same-keyed sibling block from
-            # another segment — conservative (extra decode); the seed
-            # ANTI-join keys on the full block key so no distinct
-            # block is ever dropped
-            survivors = meta.join(F.broadcast(surviving),
-                                  ["field", "term", "first_doc"],
-                                  "left_semi")
-            key = ["field", "term", "first_doc"] + _seg_cols(seed_blocks)
-            new_blocks = survivors.join(
-                seed_blocks.select(*key), key, "left_anti",
-            )
-            n_new = new_blocks.count()
-            out = _topk_or(seed_blocks.unionByName(new_blocks), round_to)
-            return out, {"blocks_total": n_blocks,
-                         "blocks_decoded": n_seed + n_new,
-                         "blocks_seed": n_seed, "blocks_final": n_new}
-        finally:
-            meta.unpersist()
+        return block_max_wand(self.spark, self._sources(), clauses, score,
+                              k, round_to, min_prune_blocks,
+                              conjunctive=False)
 
     # -- fielded lenient mixed (term + phrase) queries -------------------------
 
@@ -863,14 +433,6 @@ class FieldedBlockSearchEngine:
         def _ret(df: DataFrame, stats: dict):
             return (df, stats) if return_stats else df
 
-        def _overlap_semi(side: DataFrame, ranges: DataFrame) -> DataFrame:
-            return side.join(
-                F.broadcast(ranges),
-                (F.col("first_doc") <= F.col("rl"))
-                & (F.col("last_doc") >= F.col("rf")),
-                "left_semi",
-            )
-
         # parse_query_slop is a strict superset of the lenient
         # grammar (byte-identical clauses on every slop-free query),
         # so "..."~N proximity clauses serve fielded too (round 6):
@@ -907,28 +469,23 @@ class FieldedBlockSearchEngine:
             if not return_stats:
                 return {}
 
-            def _key(f: DataFrame) -> list[str]:
-                return ["field", "term", "first_doc"] + _seg_cols(f)
+            def _keys(frames: list[DataFrame]) -> DataFrame | None:
+                return reduce(lambda a, b: a.unionByName(b), [
+                    f.select(*block_key(f, "field"))
+                    for f in align_seg(frames)]).dropDuplicates() \
+                    if frames else None
 
-            tot = reduce(lambda a, b: a.unionByName(b),
-                         [t.select(*_key(t)) for t in _align_seg(totals)])\
-                .dropDuplicates() if totals else None
-            dec = reduce(lambda a, b: a.unionByName(b),
-                         [d.select(*_key(d)) for d in _align_seg(decoded)])\
-                .dropDuplicates() if decoded else None
+            tot, dec = _keys(totals), _keys(decoded)
             return {"blocks_total": tot.count() if tot is not None else 0,
                     "blocks_decoded": dec.count() if dec is not None else 0}
 
         def _tagged_term_blocks() -> DataFrame:
             frames = []
             for field, art in sorted(self.artifacts.items()):
-                fb = art.blocks(terms)
-                frames.append(fb.select(
-                    F.lit(field).alias("field"), "term",
-                    "first_doc", "last_doc", "n", "max_tf",
-                    "min_dl", "docs", "tfs", "dls", *_seg_cols(fb)))
+                frames.append(block_cols(art.blocks(terms))
+                              .withColumn("field", F.lit(field)))
             return reduce(lambda a, b: a.unionByName(b),
-                          _align_seg(frames))
+                          align_seg(frames))
 
         persisted: list[DataFrame] = []
         try:
@@ -964,17 +521,13 @@ class FieldedBlockSearchEngine:
                     side = pblocks.filter(F.col("term").isin(tp))
                     if len(tp) > 1:
                         rarest_p = min(tp, key=lambda t: (dfs_p[t], t))
-                        rng = pblocks.filter(
-                            F.col("term") == rarest_p
-                        ).select(F.col("first_doc").alias("rf"),
-                                 F.col("last_doc").alias("rl"))
-                        side = _overlap_semi(side, rng)
+                        side = overlap_semi(
+                            side, term_ranges(pblocks, rarest_p))
                     pieces.append(side)
                 from prosearch_spark.index.artifact import apply_deletes
 
                 ph_needed = reduce(lambda a, b: a.unionByName(b), pieces) \
-                    .dropDuplicates(["term", "first_doc",
-                                     *_seg_cols(pieces[0])])
+                    .dropDuplicates(block_key(pieces[0]))
                 decoded.append(ph_needed)
                 pp = apply_deletes(decode_blocks(ph_needed.drop("field")),
                                    body_art.deletes()).persist()
@@ -1039,7 +592,7 @@ class FieldedBlockSearchEngine:
                         ranges.append((lo, prev))
                         ranges_df = self.spark.createDataFrame(
                             ranges, "rf long, rl long")
-                        need = _overlap_semi(tagged, ranges_df)
+                        need = overlap_semi(tagged, ranges_df)
                 decoded.append(need)
                 # _engine_on_blocks supplies the artifacts'
                 # manifest-era per-field df/N/avgdl, so the pruned
@@ -1134,14 +687,10 @@ class FieldedBlockSearchEngine:
                 terms = sorted({t for _q, _c, t, _b in term_rows})
                 frames = []
                 for field, art in sorted(self.artifacts.items()):
-                    fb_ = art.blocks(terms)
-                    frames.append(fb_.select(
-                        F.lit(field).alias("field"), "term",
-                        "first_doc", "last_doc", "n", "max_tf",
-                        "min_dl", "docs", "tfs", "dls",
-                        *_seg_cols(fb_)))
+                    frames.append(block_cols(art.blocks(terms))
+                                  .withColumn("field", F.lit(field)))
                 tagged = reduce(lambda a, b: a.unionByName(b),
-                                _align_seg(frames))
+                                align_seg(frames))
                 idx = self._engine_on_blocks(tagged, terms).index
                 qdf = self.spark.createDataFrame(
                     term_rows,

@@ -9,9 +9,9 @@ engine's per-clause sum.
 
 One positional posting table serves both clause kinds (tf/dl for term
 scoring, the position arrays for the phrase intersection), so the
-corpus is tokenized once — and a SERVING caller (query/serve.Searcher)
-builds that table once and passes it in, so per-request cost is
-O(query), not O(corpus).
+corpus is tokenized once — and a caller that serves many queries
+builds that table once and passes it in (``pp``), so per-request cost
+is O(query), not O(corpus).
 """
 
 from __future__ import annotations

@@ -15,8 +15,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prosearch_spark.index.build import InvertedIndex
-from prosearch_spark.query.engine import SearchEngine
 from prosearch_spark.query.snippet import with_snippet
 
 
@@ -62,43 +60,59 @@ class ArtifactSearcher:
         self.vectors = vectors
         self.n_probe = n_probe
 
+    def _dispatch(self, q: str, k: int, round_to: int | None,
+                  want_stats: bool) -> tuple[DataFrame, str, dict]:
+        """The one routing table: (predicate, plan name, engine call)
+        rows in priority order, the first whose predicate holds serves
+        ``q``. Calls return (hits, stats); ``want_stats`` asks the
+        mixed engines for their pruning counters (two extra count
+        jobs, so route() skips them — WAND stats come free).
+
+        Proximity suffix ("..."~N, round 6): the lenient parser would
+        read the glued ~N as a bare term clause that matches nothing —
+        conjunction dead, EMPTY results for a user typing the standard
+        Lucene syntax. The slop rows fire whenever the two grammars
+        PARSE DIFFERENTLY (a glued ~suffix exists — including ~0 folds
+        and dropped bad suffixes, which the lenient parse would also
+        turn into dead term clauses), so they are behavior-preserving
+        for every query without one. The fielded mixed engine parses
+        the proximity grammar itself: term clauses keep title 1.5 /
+        body 1.0, slop clauses score body-only like phrases."""
+        from prosearch_spark.analyzer import (
+            parse_query_lenient,
+            parse_query_slop,
+        )
+
+        quoted = '"' in q
+        slop = quoted and parse_query_slop(q) != parse_query_lenient(q)
+        fld, blk = self.fielded, self.block
+
+        def mixed(eng):
+            def call():
+                out = eng.mixed_topk(q, k, round_to,
+                                     return_stats=want_stats)
+                return out if want_stats else (out, {})
+            return call
+
+        table = (
+            (slop and fld is not None, "fielded_mixed_slop", mixed(fld)),
+            (slop, "mixed_slop",
+             lambda: (blk.mixed_slop_topk(q, k, round_to), {})),
+            (quoted and fld is not None, "fielded_mixed", mixed(fld)),
+            (quoted, "mixed", mixed(blk)),
+            (fld is not None, "fielded_wand",
+             lambda: fld.topk_wand(q, k, round_to)),
+            (True, "wand", lambda: blk.topk_wand(q, k, round_to)),
+        )
+        plan, call = next((p, c) for ok, p, c in table if ok)
+        hits, stats = call()
+        return hits, plan, stats
+
     def route(self, q: str, k: int = 10,
               round_to: int | None = None) -> tuple[DataFrame, str]:
         """Pick the plan for ``q``; returns (hits, plan_name)."""
-        if '"' in q:
-            # proximity suffix ("..."~N, round 6): the lenient parser
-            # would read the glued ~N as a bare term clause that
-            # matches nothing — conjunction dead, EMPTY results for a
-            # user typing the standard Lucene syntax. The branch
-            # fires whenever the two grammars PARSE DIFFERENTLY (a
-            # glued ~suffix exists — including ~0 folds and dropped
-            # bad suffixes, which the lenient parse would also turn
-            # into dead term clauses), so it is behavior-preserving
-            # for every query without one.
-            from prosearch_spark.analyzer import (
-                parse_query_lenient,
-                parse_query_slop,
-            )
-
-            if parse_query_slop(q) != parse_query_lenient(q):
-                if self.fielded is not None:
-                    # the fielded mixed engine parses the proximity
-                    # grammar itself (round 6): term clauses keep
-                    # title 1.5 / body 1.0, slop clauses score
-                    # body-only like phrases
-                    return (self.fielded.mixed_topk(q, k, round_to),
-                            "fielded_mixed_slop")
-                return (self.block.mixed_slop_topk(q, k, round_to),
-                        "mixed_slop")
-            if self.fielded is not None:
-                return (self.fielded.mixed_topk(q, k, round_to),
-                        "fielded_mixed")
-            return self.block.mixed_topk(q, k, round_to), "mixed"
-        if self.fielded is not None:
-            df, _stats = self.fielded.topk_wand(q, k, round_to)
-            return df, "fielded_wand"
-        df, _stats = self.block.topk_wand(q, k, round_to)
-        return df, "wand"
+        hits, plan, _stats = self._dispatch(q, k, round_to, False)
+        return hits, plan
 
     def more_like_this(self, seed_doc_id: int, k: int = 10,
                        round_to: int | None = None,
@@ -243,36 +257,7 @@ class ArtifactSearcher:
         (blocks_total/blocks_decoded/...) where the branch produces
         them. Diagnostic endpoint: hits are collected and discarded."""
         t0 = time.perf_counter()
-        stats: dict = {}
-        if '"' in q:
-            from prosearch_spark.analyzer import (
-                parse_query_lenient,
-                parse_query_slop,
-            )
-
-            has_slop = parse_query_slop(q) != parse_query_lenient(q)
-            if self.fielded is not None:
-                # the fielded mixed engine parses the proximity
-                # grammar itself; plan name matches route()
-                hits, stats = self.fielded.mixed_topk(
-                    q, k, round_to=6, return_stats=True)
-                plan = "fielded_mixed_slop" if has_slop \
-                    else "fielded_mixed"
-            elif has_slop:
-                # the single-field slop path has no staged pruning
-                # (and so no pruning counters) — route()'s engine
-                hits = self.block.mixed_slop_topk(q, k, round_to=6)
-                plan = "mixed_slop"
-            else:
-                hits, stats = self.block.mixed_topk(
-                    q, k, round_to=6, return_stats=True)
-                plan = "mixed"
-        elif self.fielded is not None:
-            hits, stats = self.fielded.topk_wand(q, k, round_to=6)
-            plan = "fielded_wand"
-        else:
-            hits, stats = self.block.topk_wand(q, k, round_to=6)
-            plan = "wand"
+        hits, plan, stats = self._dispatch(q, k, 6, True)
         n = len(hits.collect())
         return {
             "q": q,
@@ -325,117 +310,6 @@ class ArtifactSearcher:
                 {
                     "doc": {c: r[c] for c in
                             ("rank", "doc_id", "score", *display)},
-                    "snip": r["snip"],
-                }
-                for r in rows
-            ],
-            "timings_ms": round(ms, 3),
-        }
-
-
-class Searcher:
-    def __init__(self, spark: SparkSession, index: InvertedIndex,
-                 docs: DataFrame, id_col: str = "doc_id",
-                 body_col: str = "content",
-                 display_cols: tuple[str, ...] = ("repo", "path", "lang")):
-        self.spark = spark
-        self.engine = SearchEngine(spark, index)
-        self.docs = docs
-        self.id_col = id_col
-        self.body_col = body_col
-        self.display_cols = display_cols
-
-    def api(self, q: str, nhits: int = 10) -> dict:
-        """GET /api/?q=... analog. The reference parses an ``offset``
-        param but ignores it (serve.rs:573-587) — so do we."""
-        t0 = time.perf_counter()
-        hits = self.engine.topk(q, nhits)
-        fetched = self.engine.fetch(
-            hits,
-            self.docs.select(self.id_col, self.body_col, *self.display_cols),
-            self.id_col,
-        )
-        fetched = with_snippet(fetched, q, self.body_col)
-        rows = fetched.orderBy("rank").collect()
-        ms = (time.perf_counter() - t0) * 1000.0
-        return {
-            "q": q,
-            "num_hits": len(rows),
-            "hits": [
-                {
-                    # P1: drop the body from the returned doc
-                    "doc": {c: r[c] for c in
-                            ("rank", "doc_id", "score", *self.display_cols)},
-                    "snip": r["snip"],
-                }
-                for r in rows
-            ],
-            "timings_ms": round(ms, 3),
-        }
-
-    def warmup(self, queries: list[str], k: int = 2) -> dict[str, float]:
-        """Q11: run each query once (TopDocs(2) analog), return per-
-        query seconds. Heats codegen, broadcast caches, file indexes."""
-        out = {}
-        for q in queries:
-            t0 = time.perf_counter()
-            self.engine.topk(q, k).collect()
-            out[q] = round(time.perf_counter() - t0, 4)
-        return out
-
-    def _positional(self):
-        """Positional postings + stats, built ONCE per Searcher and
-        persisted — quoted-query latency must be O(query), never a
-        per-request corpus re-tokenize (round-2 review finding)."""
-        if not hasattr(self, "_pp"):
-            from prosearch_spark.query.mixed import build_positional
-
-            pp, stats = build_positional(self.spark, self.docs,
-                                         self.body_col, self.id_col)
-            self._pp = pp.persist()
-            self._pp.count()  # materialize the cache eagerly
-            self._pp_stats = stats
-        return self._pp, self._pp_stats
-
-    def api_lenient(self, q: str, nhits: int = 10) -> dict:
-        """The /api responder through the LENIENT grammar
-        (serve.rs:407-409): quoted spans run as phrase clauses, bad
-        clauses are dropped. Queries without quotes take the plain
-        engine path (identical scoring, no positional build)."""
-        from prosearch_spark.analyzer import parse_query_lenient
-        from prosearch_spark.query.mixed import mixed_topk
-
-        clauses = parse_query_lenient(q)
-        if '"' not in q:
-            # no quotes -> the lenient parse IS analyze_query's clause
-            # list (same raw-token boost rule); take the plain engine
-            # path and skip the positional build
-            return self.api(q, nhits)
-        t0 = time.perf_counter()
-        pp, stats = self._positional()
-        hits = mixed_topk(self.spark, self.docs, q, nhits,
-                          text_col=self.body_col, id_col=self.id_col,
-                          pp=pp, stats=stats)
-        fetched = self.engine.fetch(
-            hits,
-            self.docs.select(self.id_col, self.body_col, *self.display_cols),
-            self.id_col,
-        )
-        # highlight using every clause's terms
-        flat_terms = " ".join(
-            c[0] if kind == "term" else " ".join(c)
-            for kind, c in clauses
-        )
-        fetched = with_snippet(fetched, flat_terms, self.body_col)
-        rows = fetched.orderBy("rank").collect()
-        ms = (time.perf_counter() - t0) * 1000.0
-        return {
-            "q": q,
-            "num_hits": len(rows),
-            "hits": [
-                {
-                    "doc": {c: r[c] for c in
-                            ("rank", "doc_id", "score", *self.display_cols)},
                     "snip": r["snip"],
                 }
                 for r in rows

@@ -160,8 +160,11 @@ def test_wand_pass1_has_no_global_window(spark):
     import inspect
 
     from prosearch_spark.query.block_engine import BlockSearchEngine
+    from prosearch_spark.query.wand import block_max_wand
 
-    src = inspect.getsource(BlockSearchEngine.topk_wand)
+    # the engine's adapter plus the shared ladder it delegates to
+    src = (inspect.getsource(BlockSearchEngine.topk_wand)
+           + inspect.getsource(block_max_wand))
     assert "Window" not in src, "global window crept back into WAND pass 1"
     assert ".limit(B)" in src  # the TakeOrderedAndProject prefix
 

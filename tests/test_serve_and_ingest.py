@@ -1,45 +1,8 @@
-"""Search facade (Serp parity) + corrupt-row ingest (S2 PERMISSIVE)."""
+"""Routed /api facade (Serp parity) + corrupt-row ingest (S2 PERMISSIVE)."""
 
 from __future__ import annotations
 
-import json
-import os
-
 from prosearch_spark.index.build import build_index
-from prosearch_spark.query.serve import Searcher
-
-
-def _searcher(spark, corpus):
-    idx = build_index(corpus, text_col="content")
-    return Searcher(spark, idx, corpus, body_col="content",
-                    display_cols=("repo", "path", "lang"))
-
-
-def test_api_serp_shape(spark, corpus):
-    s = _searcher(spark, corpus)
-    serp = s.api("spark shuffle", nhits=5)
-    assert serp["q"] == "spark shuffle"
-    assert 0 < serp["num_hits"] <= 5
-    assert serp["timings_ms"] > 0
-    hit = serp["hits"][0]
-    assert set(hit) == {"doc", "snip"}
-    # P1: body must NOT be in the returned doc
-    assert "content" not in hit["doc"]
-    assert {"rank", "doc_id", "score", "repo", "path", "lang"} == set(hit["doc"])
-    assert "<b>spark</b>" in hit["snip"] or "<b>shuffle</b>" in hit["snip"]
-
-
-def test_api_empty_query(spark, corpus):
-    s = _searcher(spark, corpus)
-    serp = s.api("zzznotaterm", nhits=5)
-    assert serp["num_hits"] == 0 and serp["hits"] == []
-
-
-def test_warmup_runs_all(spark, corpus):
-    s = _searcher(spark, corpus)
-    out = s.warmup(["spark", "python merge"])
-    assert set(out) == {"spark", "python merge"}
-    assert all(v > 0 for v in out.values())
 
 
 # -- S2: corrupt rows are skipped, not fatal (index.rs:69-88 logs and
@@ -69,33 +32,6 @@ def test_corrupt_ndjson_rows_skipped(spark, tmp_path):
     # and the good rows index cleanly
     idx = build_index(good, text_col="text")
     assert idx.postings.count() > 0
-
-
-def test_api_lenient_phrase(spark, corpus):
-    """Quoted phrase routes through mixed scoring; result shape matches
-    the plain /api responder and the phrase highlights in the snippet."""
-    s = _searcher(spark, corpus)
-    serp = s.api_lenient('spark "merge commit"', nhits=5)
-    assert serp["q"] == 'spark "merge commit"'
-    if serp["num_hits"]:
-        hit = serp["hits"][0]
-        assert set(hit) == {"doc", "snip"}
-        assert "content" not in hit["doc"]
-    # unquoted queries take the plain path and agree with api()
-    a = s.api("spark shuffle", nhits=5)
-    b = s.api_lenient("spark shuffle", nhits=5)
-    assert [h["doc"]["doc_id"] for h in a["hits"]] == \
-        [h["doc"]["doc_id"] for h in b["hits"]]
-
-
-def test_api_lenient_phrase_restricts_matches(spark, corpus):
-    """A quoted phrase must be stricter than the same tokens unquoted."""
-    s = _searcher(spark, corpus)
-    loose = s.api("merge commit", nhits=100000)
-    tight = s.api_lenient('"merge commit"', nhits=100000)
-    loose_ids = {h["doc"]["doc_id"] for h in loose["hits"]}
-    tight_ids = {h["doc"]["doc_id"] for h in tight["hits"]}
-    assert tight_ids <= loose_ids
 
 
 # -- routed serving over committed artifacts ---------------------------------

@@ -7,8 +7,12 @@ Waits (bounded) until the box looks idle — 1-min loadavg under
 records staying under --max-spin — then runs bench.py unchanged and
 re-emits its JSON line with a "canonical" verdict attached:
 
-    canonical = started idle AND spin_sec_{before,after} both under
-                the threshold in the run's own attribution fields.
+    canonical = started idle AND, in the run's own attribution fields,
+                loadavg_before[0] under --max-load and
+                spin_sec_{before,after} both under --max-spin.
+
+The run's own loadavg_before is checked as well as the pre-launch gate,
+so load that arrives after the gate passes cannot stamp a run canonical.
 
 If the wait times out, the run STILL executes (a number with a
 pollution flag beats no number) but is marked non-canonical.
@@ -75,13 +79,14 @@ def main() -> None:
         sys.exit(1)
     out = json.loads(line)
     started_idle = not waited_out
+    load_ok = out.get("loadavg_before", [9e9])[0] <= args.max_load
     spins_ok = (out.get("spin_sec_before", 9e9) <= args.max_spin
                 and out.get("spin_sec_after", 9e9) <= args.max_spin)
-    out["canonical"] = bool(started_idle and spins_ok)
+    out["canonical"] = bool(started_idle and load_ok and spins_ok)
     out["wait_sec"] = wait_sec
     out["gate"] = {"max_load": args.max_load, "max_spin": args.max_spin,
                    "max_wait": args.max_wait, "started_idle": started_idle,
-                   "spins_ok": spins_ok}
+                   "load_ok": load_ok, "spins_ok": spins_ok}
     print(json.dumps(out))
 
 
