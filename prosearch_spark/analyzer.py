@@ -16,9 +16,15 @@ north-star mandates:
    splits, path-segment n-grams for tokens that look like paths, and
    per-language stopword removal applied to *subtokens only* (the verbatim
    token is always kept, so exact-identifier search keeps working).
-   Implemented as an Arrow-batched pandas UDF (no per-row Python UDF), with
-   a pure-Python twin ``analyze_code`` shared with the test oracle so
-   tf/df/dl are defined identically in both engines.
+   Implemented as a union of three flat JVM token streams
+   (:func:`code_token_stream`), with a pure-Python twin ``analyze_code``
+   shared with the test oracle so tf/df/dl are defined identically in
+   both engines.
+
+The Spark forms split on Java's ``\\s`` and test paths with Java's
+``\\w``; both classes are ASCII-only (as is the DuckDB oracle's RE2), so
+the Python twins compile their patterns with ``re.ASCII``: a no-break
+space is part of a token, and ``café/menu`` is not path-like.
 
 The ``raw`` analyzer (whole value = one term; reference meta.json:41 for
 the ``url`` field) is the identity and needs no code.
@@ -29,16 +35,15 @@ from __future__ import annotations
 import re
 from typing import Iterable
 
-import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 # --------------------------------------------------------------------------
 # 1. white_lower — reference-exact analyzer, JVM-side.
 # --------------------------------------------------------------------------
 
 _WS = r"\s+"
+_WS_RE = re.compile(_WS, re.ASCII)
 
 
 def white_lower_tokens(col: Column | str) -> Column:
@@ -54,7 +59,7 @@ def white_lower_tokens(col: Column | str) -> Column:
 
 def white_lower_py(text: str) -> list[str]:
     """Pure-Python twin of :func:`white_lower_tokens` for the oracle."""
-    return [t for t in re.split(_WS, text.lower()) if t]
+    return [t for t in _WS_RE.split(text.lower()) if t]
 
 
 # --------------------------------------------------------------------------
@@ -62,13 +67,18 @@ def white_lower_py(text: str) -> list[str]:
 # --------------------------------------------------------------------------
 
 # identifier boundary splits: camelCase, PascalCase, snake_case, kebab-case,
-# digits<->letters, plus generic non-alnum separators.
-_CAMEL_RE = re.compile(
-    r"(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])|(?<=[A-Za-z])(?=[0-9])|(?<=[0-9])(?=[A-Za-z])"
+# digits<->letters, plus generic non-alnum separators. Each pattern string
+# is Java-regex for the Spark plan and compiled for the Python twin.
+_CAMEL_RE_SQL = (
+    "(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])"
+    "|(?<=[A-Za-z])(?=[0-9])|(?<=[0-9])(?=[A-Za-z])"
 )
-_SEP_RE = re.compile(r"[^A-Za-z0-9]+")
-_PATHLIKE_RE = re.compile(r"^[\w.\-]+(/[\w.\-]+)+$")
-_TOKEN_RE = re.compile(r"\S+")
+_SEP_RE_SQL = "[^A-Za-z0-9]+"
+_PATHLIKE_RE_SQL = r"^[\w.\-]+(/[\w.\-]+)+$"
+_CAMEL_RE = re.compile(_CAMEL_RE_SQL)
+_SEP_RE = re.compile(_SEP_RE_SQL)
+_PATHLIKE_RE = re.compile(_PATHLIKE_RE_SQL, re.ASCII)
+_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 # per-language stopwords applied to subtokens (keywords so common in a
 # language that they carry no ranking signal). The verbatim token is kept.
@@ -115,132 +125,78 @@ def analyze_code(text: str, lang: str | None = None) -> list[str]:
     return out
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def code_tokens_udf(content: pd.Series, lang: pd.Series) -> pd.Series:
-    """Arrow-batched analyzer UDF — the extension-point seam for
-    analyzers that genuinely need Python (the B1 tokenize step).
+# token is "unchanged" by identifier splitting iff it is a single run:
+# all-lower / all-digit / all-upper / Capitalized (no separator, no
+# camel or letter<->digit boundary). Matches analyze_code's
+# "len(sub) > 1 or sub[0] != raw" condition exactly.
+_UNCHANGED_RE = "^([a-z]+|[0-9]+|[A-Z]+|[A-Z][a-z]+)$"
 
-    The production ``code`` analyzer does NOT go through here: it is
-    expressible as pure column expressions (see code_tokens_expr),
-    which stay in whole-stage codegen and scale ~4x better. This UDF
-    remains as the template for analyzers that can't (e.g. a real BPE
-    tokenizer) and is kept equivalent by tests.
+
+def code_token_stream(docs: DataFrame, text_col: str, id_col: str,
+                      lang_col: str) -> DataFrame:
+    """Code analyzer as a UNION of three flat JVM streams.
+
+    Per-token array building inside higher-order-function lambdas runs
+    interpreted (~25-50us/token) and Arrow UDFs anti-scale on this
+    allocation-heavy shape, so every regex here is a flat top-level
+    codegen expression and per-language stopword sets become a
+    broadcast anti-join:
+
+      A: verbatim lowercased whitespace tokens   (white_lower core)
+      B: identifier subtokens, only for tokens the splitter CHANGES
+         (cheap rlike pre-filter keeps the expensive split off ~75%
+         of tokens), stopwords anti-joined per lang
+      C: path-segment bigrams for path-like tokens (small minority)
+
+    Multiset-identical to :func:`analyze_code` (pinned by tests).
+    Returns ``(doc_id, term)``.
     """
-    return pd.Series(
-        [
-            analyze_code(c, l) if c is not None else []
-            for c, l in zip(content, lang)
-        ]
-    )
-
-
-# Java-regex versions of the same boundaries (lookarounds supported).
-_CAMEL_RE_SQL = (
-    "(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])"
-    "|(?<=[A-Za-z])(?=[0-9])|(?<=[0-9])(?=[A-Za-z])"
-)
-_PATHLIKE_RE_SQL = r"^[\w.\-]+(/[\w.\-]+)+$"
-
-
-def _stopwords_col(lang: Column) -> Column:
-    """Per-language stopword array, resolved from the lang column."""
-    expr = None
-    for lg, words in LANG_STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in sorted(words)])
-        cond = F.when(F.lower(lang) == lg, arr)
-        expr = cond if expr is None else expr.when(F.lower(lang) == lg, arr)
-    return expr.otherwise(F.array().cast("array<string>"))
-
-
-def code_tokens_expr(content: Column | str, lang: Column | str) -> Column:
-    """The code analyzer as PURE column expressions (JVM, codegen).
-
-    Exactly mirrors :func:`analyze_code` (equivalence pinned by tests):
-    per whitespace token emit the lowercased verbatim token, then
-    identifier subtokens when splitting changes anything (minus
-    per-lang stopwords), then path-segment bigrams for path-like
-    tokens. ~4x faster than the Arrow UDF at 32 cores because nothing
-    leaves the JVM.
-    """
-    c = F.col(content) if isinstance(content, str) else content
-    l = F.col(lang) if isinstance(lang, str) else lang
-    stop = _stopwords_col(l)
-
-    def per_token(t: Column) -> Column:
-        # subtokens with original case: separators -> space, then
-        # camel/digit boundaries -> space, then split
-        sub_str = F.regexp_replace(
-            F.regexp_replace(t, "[^A-Za-z0-9]+", " "), _CAMEL_RE_SQL, " "
+    spark = docs.sparkSession
+    raw = (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.lower(F.col(lang_col)).alias("_lang"),
+            F.explode(F.split(F.col(text_col), _WS)).alias("_raw"),
         )
-        subs_cased = F.filter(F.split(sub_str, " "), lambda s: s != F.lit(""))
-        changed = (F.size(subs_cased) > 1) | (
-            (F.size(subs_cased) == 1) & (F.element_at(subs_cased, 1) != t)
+        .filter(F.col("_raw") != "")
+    )
+    a = raw.select("doc_id", F.lower("_raw").alias("term"))
+
+    stop_rows = [
+        (lg, w) for lg, ws in LANG_STOPWORDS.items() for w in sorted(ws)
+    ]
+    stop_df = spark.createDataFrame(stop_rows, "_lang string, term string")
+    b = (
+        raw.filter(~F.col("_raw").rlike(_UNCHANGED_RE))
+        .select(
+            "doc_id", "_lang",
+            F.explode(
+                F.split(F.regexp_replace("_raw", _CAMEL_RE_SQL, " "),
+                        _SEP_RE_SQL)
+            ).alias("_s"),
         )
-        subs = F.filter(
-            F.transform(subs_cased, F.lower),
-            lambda s: ~F.array_contains(stop, s),
+        .filter(F.col("_s") != "")
+        .select("doc_id", "_lang", F.lower("_s").alias("term"))
+        .join(F.broadcast(stop_df), ["_lang", "term"], "left_anti")
+        .select("doc_id", "term")
+    )
+    c = (
+        raw.filter(F.col("_raw").rlike(_PATHLIKE_RE_SQL))
+        .select("doc_id", F.split(F.lower("_raw"), "/").alias("_segs"))
+        .select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("_segs") - 1),
+                    lambda i: F.concat(
+                        F.element_at("_segs", i), F.lit("/"),
+                        F.element_at("_segs", i + 1),
+                    ),
+                )
+            ).alias("term"),
         )
-        segs = F.transform(F.split(t, "/"), F.lower)
-        bigrams = F.transform(
-            F.sequence(F.lit(1), F.size(segs) - 1),
-            lambda i: F.concat(
-                F.element_at(segs, i), F.lit("/"), F.element_at(segs, i + 1)
-            ),
-        )
-        return F.concat(
-            F.array(F.lower(t)),
-            F.when(changed, subs).otherwise(F.array().cast("array<string>")),
-            F.when(t.rlike(_PATHLIKE_RE_SQL), bigrams)
-            .otherwise(F.array().cast("array<string>")),
-        )
-
-    raw_toks = F.filter(F.split(c, _WS), lambda t: t != F.lit(""))
-    return F.flatten(F.transform(raw_toks, per_token))
-
-
-def code_tokens(content: Column | str, lang: Column | str,
-                use_udf: bool = False) -> Column:
-    if use_udf:
-        c = F.col(content) if isinstance(content, str) else content
-        l = F.col(lang) if isinstance(lang, str) else lang
-        return code_tokens_udf(c, l)
-    return code_tokens_expr(content, lang)
-
-
-def code_token_parts(raw: Column, stop: Column) -> Column:
-    """Per-RAW-TOKEN emission array, as FLAT top-level expressions.
-
-    The hot-path formulation: callers explode whitespace tokens first
-    (a cheap JVM generator), then evaluate this on the flat token
-    column — regexp_replace / rlike become top-level codegen
-    expressions instead of interpreted lambdas nested inside
-    ``transform`` (which disables codegen and cost ~8x in practice;
-    see SURVEY.md §4 'stay JVM-side').
-    """
-    sub_str = F.regexp_replace(
-        F.regexp_replace(raw, "[^A-Za-z0-9]+", " "), _CAMEL_RE_SQL, " "
     )
-    subs_cased = F.filter(F.split(sub_str, " "), lambda s: s != F.lit(""))
-    changed = (F.size(subs_cased) > 1) | (
-        (F.size(subs_cased) == 1) & (F.element_at(subs_cased, 1) != raw)
-    )
-    subs = F.filter(
-        F.transform(subs_cased, F.lower),
-        lambda s: ~F.array_contains(stop, s),
-    )
-    segs = F.transform(F.split(raw, "/"), F.lower)
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(segs) - 1),
-        lambda i: F.concat(
-            F.element_at(segs, i), F.lit("/"), F.element_at(segs, i + 1)
-        ),
-    )
-    empty = F.array().cast("array<string>")
-    return F.concat(
-        F.array(F.lower(raw)),
-        F.when(changed, subs).otherwise(empty),
-        F.when(raw.rlike(_PATHLIKE_RE_SQL), bigrams).otherwise(empty),
-    )
+    return a.unionByName(b).unionByName(c)
 
 
 # --------------------------------------------------------------------------
@@ -421,8 +377,7 @@ __all__: Iterable[str] = [
     "white_lower_tokens",
     "white_lower_py",
     "analyze_code",
-    "code_tokens",
-    "code_tokens_udf",
+    "code_token_stream",
     "BOOST_TERMS",
     "TERM_BOOST",
     "escape_query_term",

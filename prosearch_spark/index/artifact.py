@@ -1,4 +1,4 @@
-"""Persistent index artifact: save/load/merge/delete/upsert.
+"""Persistent index artifact: save/load/merge/delete.
 
 The on-disk analog of a committed Tantivy index directory
 (index.rs:191 ``commit``, merge.rs:18-31 ``merge``, serve.rs:456-467
@@ -26,7 +26,8 @@ commit.
 
 Deletes are logical tombstones anti-joined at query time
 (alive-bitset analog, serve.rs:535); ``merge`` physically applies
-them and rewrites blocks (merge.rs:18-31).
+them and rewrites blocks (merge.rs:18-31). Upsert (delete-then-index)
+is ``SegmentedIndex.upsert``: tombstone the ids, seal a new segment.
 """
 
 from __future__ import annotations
@@ -94,10 +95,6 @@ def term_buckets_py(terms: list[str], n_buckets: int,
         for r in rows:
             _BUCKET_MEMO[(r["term"], n_buckets)] = int(r["b"])
     return {t: _BUCKET_MEMO[(t, n_buckets)] for t in terms}
-
-
-def term_bucket_py(term: str, n_buckets: int, spark: SparkSession) -> int:
-    return term_buckets_py([term], n_buckets, spark)[term]
 
 
 @dataclass
@@ -351,7 +348,7 @@ def save_index(spark: SparkSession, docs: DataFrame, path: str,
     postings = postings.persist()
     try:
         # doc_stats covers EVERY corpus doc: zero-token docs get dl=0.
-        # This is the one n_docs definition shared by save/merge/upsert/
+        # This is the one n_docs definition shared by save/merge/
         # lineage-finalize (n_docs = count(doc_stats)) so BM25 stats
         # never drift between build paths on corpora with empty docs.
         ff = fast_fields or {}
@@ -445,7 +442,7 @@ def _write_artifact(spark: SparkSession, path: str, postings: DataFrame,
     # refuse to commit over a LIVE artifact: overwriting blocks under a
     # readable old manifest breaks the atomic-publish guarantee (a crash
     # mid-commit would leave a valid-looking manifest over torn data).
-    # Every commit goes to a fresh generation dir, like merge/upsert.
+    # Every commit goes to a fresh generation dir, like merge.
     if os.path.exists(os.path.join(path, MANIFEST)):
         raise ValueError(
             f"{path} already holds a committed artifact; commit to a new "
@@ -532,11 +529,11 @@ def _write_artifact(spark: SparkSession, path: str, postings: DataFrame,
         "analyzer": analyzer,
         "positions": "positions" in postings.columns,
         # record:"basic" (meta.json:12): postings carry tf=1. Persisted
-        # so upsert/merge re-apply the same tf semantics to new postings
-        # instead of silently mixing true-tf docs into a basic artifact.
+        # so the segment merge policy never mixes true-tf docs into a
+        # basic artifact.
         "record_basic": bool(record_basic),
-        # fast-field name -> SOURCE column on the document table, so
-        # upsert can re-derive the typed values for incoming docs
+        # fast-field name -> SOURCE column on the document table; the
+        # segment merge policy merges only segments with the same map
         "fast_fields": dict(fast_fields or {}),
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
@@ -546,133 +543,3 @@ def _write_artifact(spark: SparkSession, path: str, postings: DataFrame,
         json.dump(manifest, f)
     os.replace(tmp, os.path.join(path, MANIFEST))
     return IndexArtifact(path=path, spark=spark, manifest=manifest)
-
-
-def upsert_docs(spark: SparkSession, artifact: IndexArtifact,
-                new_docs: DataFrame, out_path: str,
-                text_col: str = "text", id_col: str = "doc_id",
-                lang_col: str = "lang") -> IndexArtifact:
-    """B8 (TantivyCommitter.java:42-91): delete-then-reindex upsert.
-
-    Excludes the incoming doc_ids from the old postings in-plan,
-    indexes the new docs, and concatenates into a fresh commit with
-    recomputed collection stats. The previous generation is NEVER
-    mutated — if this crashes before the new manifest publishes,
-    readers keep the old commit whole. ``out_path`` must be a new
-    generation directory (see merge()).
-    """
-    if os.path.abspath(out_path) == os.path.abspath(artifact.path):
-        raise ValueError("upsert requires a new generation path")
-    # exclude the upserted doc_ids IN-PLAN (broadcast anti-join), never
-    # by writing tombstones into the previous generation: the old
-    # commit must stay fully intact until the new manifest publishes
-    # (atomic-publish guarantee; a crash here must not lose docs).
-    upsert_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct()
-    old = artifact.postings(None).join(
-        F.broadcast(upsert_ids), "doc_id", "left_anti"
-    )
-    if "positions" in old.columns:
-        # positional artifact: the new docs must be indexed with
-        # positions too, or the union schemas diverge
-        from prosearch_spark.index.positions import positional_postings
-
-        new_postings = positional_postings(new_docs, text_col=text_col,
-                                           id_col=id_col)
-        cols = ["term", "doc_id", "tf", "dl", "positions"]
-    else:
-        new_postings = build_index(
-            new_docs, text_col=text_col, id_col=id_col,
-            analyzer=artifact.manifest["analyzer"], lang_col=lang_col,
-        ).postings
-        cols = ["term", "doc_id", "tf", "dl"]
-    record_basic = bool(artifact.manifest.get("record_basic", False))
-    if record_basic and "positions" in old.columns:
-        # mirror save_index's guard: tf delimits the position stream in
-        # the block layout, so tf=1 over multi-position postings would
-        # corrupt decoding. Unreachable via save_index (which refuses
-        # the combination), but an artifact hand-built or corrupted
-        # into both flags must fail loudly here, not at decode time.
-        raise ValueError("record_basic and positional postings are "
-                         "mutually exclusive")
-    if record_basic:
-        # the artifact stores record:"basic" postings (tf=1) — re-apply
-        # the same tf semantics to the incoming docs or the artifact
-        # would silently mix tf conventions after the first upsert
-        new_postings = new_postings.withColumn("tf", F.lit(1).cast("long"))
-    merged = old.unionByName(
-        new_postings.select(*cols)
-    ).persist()  # multiple aggregations + encode sampling below
-    try:
-        # one n_docs definition (see save_index): old doc_stats minus
-        # the upserted ids, plus EVERY new doc (zero-token docs at dl=0)
-        ff = artifact.manifest.get("fast_fields") or {}
-        missing_ff = [s for s in ff.values() if s not in new_docs.columns]
-        if missing_ff:
-            raise ValueError(
-                f"artifact has fast_fields {ff}; new_docs lacks source "
-                f"columns {missing_ff}"
-            )
-        new_doc_stats = new_docs.select(
-            F.col(id_col).alias("doc_id"),
-            *[F.col(src).alias(name) for name, src in ff.items()],
-        ).join(
-            new_postings.select("doc_id", "dl").distinct(), "doc_id", "left"
-        ).select("doc_id", F.coalesce("dl", F.lit(0)).cast("long").alias("dl"),
-                 *ff.keys())
-        old_doc_stats = artifact.doc_stats().join(
-            F.broadcast(upsert_ids), "doc_id", "left_anti"
-        )
-        # pin each fast-field column to the PREVIOUS generation's
-        # doc_stats type: a compatible-but-different source type (INT
-        # where the store holds BIGINT) must not fail the union or
-        # silently retype the column across generations
-        old_types = {f.name: f.dataType for f in old_doc_stats.schema.fields}
-        for name in ff:
-            new_doc_stats = new_doc_stats.withColumn(
-                name, F.col(name).cast(old_types[name])
-            )
-        deletes = artifact.deletes()
-        if deletes is not None:
-            old_doc_stats = old_doc_stats.join(F.broadcast(deletes),
-                                               "doc_id", "left_anti")
-        doc_stats = old_doc_stats.unionByName(new_doc_stats)
-        agg = doc_stats.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("total")
-        ).collect()[0]
-        n_docs = int(agg["n"] or 0)
-        avgdl = (agg["total"] or 0) / n_docs if n_docs else 0.0
-        # carry stored/display fields forward like merge(): previous
-        # generation's doc_store minus the upserted ids, plus the new
-        # docs' stored columns (they must exist on new_docs — an upsert
-        # must not silently drop the store for surviving docs)
-        store = artifact.doc_store()
-        if store is not None:
-            missing = [c for c in store.columns if c not in new_docs.columns
-                       and c != "doc_id"]
-            if missing:
-                raise ValueError(
-                    "artifact has a doc_store with columns "
-                    f"{store.columns}; new_docs lacks {missing} — provide "
-                    "the stored fields on the upserted docs"
-                )
-            keep = store.join(F.broadcast(upsert_ids), "doc_id", "left_anti")
-            if deletes is not None:
-                # tombstoned docs are physically applied in the new
-                # generation — their stored rows must not survive either
-                keep = keep.join(F.broadcast(deletes), "doc_id", "left_anti")
-            store = keep.unionByName(
-                new_docs.select(F.col(id_col).alias("doc_id"),
-                                *[c for c in store.columns if c != "doc_id"])
-            )
-        return _write_artifact(
-            spark, out_path, merged, doc_stats,
-            n_docs=n_docs, avgdl=avgdl,
-            n_buckets=artifact.n_buckets,
-            analyzer=artifact.manifest["analyzer"],
-            doc_store=store,
-            record_basic=record_basic,
-            fast_fields=ff or None,
-            total_dl=int(agg["total"] or 0),
-        )
-    finally:
-        merged.unpersist()

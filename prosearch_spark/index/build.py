@@ -18,8 +18,8 @@ Logical ("flat") index layout — three DataFrames:
 
 Scale notes (100 TB / 10^12 files):
 - tokenize+explode+partial-count pipelines inside one stage per input
-  split (whole-stage codegen when the analyzer is the built-in
-  white_lower expression; Arrow-batched when the code analyzer UDF runs).
+  split, in whole-stage codegen for both analyzers (the code analyzer
+  is three flat JVM streams, ``analyzer.code_token_stream``).
 - ``groupBy(doc_id, term)`` keys are near-unique -> map-side combine does
   almost all the work; no skew (doc_id spreads hot terms).
 - ``groupBy(term)`` for df has partial aggregation, so hot terms ship one
@@ -33,10 +33,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from prosearch_spark.analyzer import code_tokens, white_lower_tokens
+from prosearch_spark.analyzer import code_token_stream
 
 
 @dataclass
@@ -58,10 +58,10 @@ def tokens(docs: DataFrame, text_col: str, id_col: str = "doc_id",
            analyzer: str = "white_lower", lang_col: str = "lang") -> DataFrame:
     """(doc_id, term) token stream — the B1 ``add_document`` analog.
 
-    ``code`` uses the two-explode formulation: explode whitespace
-    tokens (cheap generator), THEN per-token flat expressions, then
-    explode the small emission array — keeping every regex top-level
-    for whole-stage codegen (8x over nested-lambda / Arrow-UDF forms).
+    ``code`` is the three-stream JVM plan
+    :func:`~prosearch_spark.analyzer.code_token_stream`: every regex is
+    a flat top-level codegen expression (8x over nested-lambda /
+    Arrow-UDF forms).
     """
     if analyzer == "white_lower":
         # row-level empty filter AFTER explode: an array-level
@@ -76,109 +76,14 @@ def tokens(docs: DataFrame, text_col: str, id_col: str = "doc_id",
             .filter(F.col("term") != "")
         )
     if analyzer == "code":
-        return _code_token_stream(docs, text_col, id_col, lang_col)
-    if analyzer == "code_udf":
-        tok = code_tokens(text_col, lang_col, use_udf=True)
-        return docs.select(F.col(id_col).alias("doc_id"),
-                           F.explode(tok).alias("term"))
+        return code_token_stream(docs, text_col, id_col, lang_col)
     raise ValueError(f"unknown analyzer {analyzer!r}")
-
-
-# token is "unchanged" by identifier splitting iff it is a single run:
-# all-lower / all-digit / all-upper / Capitalized (no separator, no
-# camel or letter<->digit boundary). Matches analyze_code's
-# "len(sub) > 1 or sub[0] != raw" condition exactly.
-_UNCHANGED_RE = "^([a-z]+|[0-9]+|[A-Z]+|[A-Z][a-z]+)$"
-_PATHLIKE_RE_SQL = r"^[\w.\-]+(/[\w.\-]+)+$"
-
-
-def _code_token_stream(docs: DataFrame, text_col: str, id_col: str,
-                       lang_col: str) -> DataFrame:
-    """Code analyzer as a UNION of three flat JVM streams.
-
-    Per-token array building inside higher-order-function lambdas runs
-    interpreted (~25-50us/token) and Arrow UDFs anti-scale on this
-    allocation-heavy shape, so every regex here is a flat top-level
-    codegen expression and per-language stopword sets become a
-    broadcast anti-join:
-
-      A: verbatim lowercased whitespace tokens   (white_lower core)
-      B: identifier subtokens, only for tokens the splitter CHANGES
-         (cheap rlike pre-filter keeps the expensive split off ~75%
-         of tokens), stopwords anti-joined per lang
-      C: path-segment bigrams for path-like tokens (small minority)
-
-    Multiset-identical to analyzer.analyze_code (pinned by tests).
-    """
-    from prosearch_spark.analyzer import _CAMEL_RE_SQL, LANG_STOPWORDS
-
-    spark = docs.sparkSession
-    raw = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.lower(F.col(lang_col)).alias("_lang"),
-            F.explode(F.split(F.col(text_col), r"\s+")).alias("_raw"),
-        )
-        .filter(F.col("_raw") != "")
-    )
-    a = raw.select("doc_id", F.lower("_raw").alias("term"))
-
-    stop_rows = [
-        (lg, w) for lg, ws in LANG_STOPWORDS.items() for w in sorted(ws)
-    ]
-    stop_df = spark.createDataFrame(stop_rows, "_lang string, term string")
-    b = (
-        raw.filter(~F.col("_raw").rlike(_UNCHANGED_RE))
-        .select(
-            "doc_id", "_lang",
-            F.explode(
-                F.split(F.regexp_replace("_raw", _CAMEL_RE_SQL, " "),
-                        "[^A-Za-z0-9]+")
-            ).alias("_s"),
-        )
-        .filter(F.col("_s") != "")
-        .select("doc_id", "_lang", F.lower("_s").alias("term"))
-        .join(F.broadcast(stop_df), ["_lang", "term"], "left_anti")
-        .select("doc_id", "term")
-    )
-    c = (
-        raw.filter(F.col("_raw").rlike(_PATHLIKE_RE_SQL))
-        .select("doc_id", F.split(F.lower("_raw"), "/").alias("_segs"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("_segs") - 1),
-                    lambda i: F.concat(
-                        F.element_at("_segs", i), F.lit("/"),
-                        F.element_at("_segs", i + 1),
-                    ),
-                )
-            ).alias("term"),
-        )
-    )
-    return a.unionByName(b).unionByName(c)
-
-
-def _code_term_frequencies(docs: DataFrame, text_col: str, id_col: str,
-                           lang_col: str) -> DataFrame:
-    return (
-        _code_token_stream(docs, text_col, id_col, lang_col)
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
 
 
 def term_frequencies(docs: DataFrame, text_col: str, id_col: str = "doc_id",
                      analyzer: str = "white_lower",
                      lang_col: str = "lang") -> DataFrame:
-    """(doc_id, term, tf) — the aggregated form of the token stream.
-
-    The code analyzer computes tf directly (weighted streams above);
-    other analyzers go explode -> count.
-    """
-    if analyzer == "code":
-        return _code_term_frequencies(docs, text_col, id_col, lang_col)
+    """(doc_id, term, tf) — the aggregated form of the token stream."""
     return (
         tokens(docs, text_col, id_col, analyzer, lang_col)
         .groupBy("doc_id", "term")

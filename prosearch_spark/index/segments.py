@@ -540,18 +540,19 @@ class SegmentedIndex:
         postings = reduce(lambda a, b: a.unionByName(b),
                           [a.postings(None) for a in arts]).persist()
         try:
-            # doc_stats minus each segment's tombstones (merge applies
-            # deletes physically, like artifact.merge); n_docs/avgdl
-            # recomputed from the surviving rows — the ONE definition
-            def alive_stats(a: IndexArtifact) -> DataFrame:
-                ds = a.doc_stats()
+            # doc_stats and doc stores minus each segment's tombstones
+            # (merge applies deletes physically, like artifact.merge);
+            # n_docs/avgdl recomputed from the surviving rows — the ONE
+            # definition. Per segment: an upserted doc's dead old
+            # version shares its doc_id with the live re-add.
+            def alive(a: IndexArtifact, df: DataFrame) -> DataFrame:
                 d = a.deletes()
                 if d is not None:
-                    ds = ds.join(F.broadcast(d), "doc_id", "left_anti")
-                return ds
+                    df = df.join(F.broadcast(d), "doc_id", "left_anti")
+                return df
 
             doc_stats = reduce(lambda a, b: a.unionByName(b),
-                               [alive_stats(a) for a in arts])
+                               [alive(a, a.doc_stats()) for a in arts])
             agg = doc_stats.agg(
                 F.count("*").alias("n"), F.sum("dl").alias("total")
             ).collect()[0]
@@ -562,8 +563,8 @@ class SegmentedIndex:
             stores = [a.doc_store() for a in arts]
             store = None
             if all(st is not None for st in stores):
-                store = reduce(lambda a, b: a.unionByName(b), stores).join(
-                    doc_stats.select("doc_id"), "doc_id", "left_semi")
+                store = reduce(lambda a, b: a.unionByName(b),
+                               [alive(a, st) for a, st in zip(arts, stores)])
             _write_artifact(
                 self.spark, os.path.join(self.root, "segments", name),
                 postings, doc_stats,

@@ -158,9 +158,15 @@ def _dot_py(a: list[float], b: list[float]) -> float:
 
 
 def _pq_from_vecs(vecs: list[list[float]], pq_m: int) -> dict | None:
-    """Codebooks from already-sampled member vectors (the commit path
-    folds this sample into the centroid collect — one driver job pays
-    for both, pinned by test_vector_commit_job_count_is_flat)."""
+    """Deterministic product-quantization codebooks (FAISS ``IVF,PQm``
+    shape, sampled-member training — the same no-data-literals rule as
+    the coarse quantizer): subspace ``j``'s codewords are the j-th
+    subvectors of the sampled smallest-id UNIT-NORMALIZED vectors.
+    The commit path folds this sample into the centroid collect — one
+    driver job pays for both, pinned by
+    test_vector_commit_job_count_is_flat. Returns {m, k, dsub,
+    codebooks} or None when the dimension does not split into ``pq_m``
+    equal subspaces (PQ is skipped, never misaligned)."""
     if not vecs:
         return None
     dim = len(vecs[0])
@@ -177,21 +183,6 @@ def _pq_from_vecs(vecs: list[list[float]], pq_m: int) -> dict | None:
             for j in range(pq_m)
         ],
     }
-
-
-def train_pq(emb: DataFrame, pq_m: int, pq_k: int,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> dict | None:
-    """Deterministic product-quantization codebooks (FAISS ``IVF,PQm``
-    shape, sampled-member training — the same no-data-literals rule as
-    the coarse quantizer): subspace ``j``'s codewords are the j-th
-    subvectors of the ``pq_k`` smallest-id UNIT-NORMALIZED vectors.
-    Returns {m, k, dsub, codebooks} or None when the dimension does
-    not split into ``pq_m`` equal subspaces (PQ is skipped, never
-    misaligned)."""
-    rows = (emb.select(id_col, vec_col).orderBy(id_col).limit(pq_k)
-            .collect())
-    return _pq_from_vecs([[float(x) for x in r[1]] for r in rows], pq_m)
 
 
 def save_vector_index(spark: SparkSession, emb: DataFrame, path: str,

@@ -6,14 +6,13 @@ Two tiers, per the scale ladder:
   query vector. JVM-side ``F.zip_with`` + ``F.aggregate`` (sequential
   fold -> deterministic summation order, mirrorable in an oracle);
   ends in ``TakeOrderedAndProject`` so the scan is one pass, no shuffle.
-- :func:`lsh_topk` — random-hyperplane LSH bucketing: deterministic
-  md5-derived hyperplanes, signature = sign-bit string; candidates from
-  the query's bucket (+ optional multi-probe by flipping bits), exact
-  re-rank inside. The 100 TB path: bucket becomes the partition key so
-  a query touches one partition.
+- :func:`ivf_sampled_topk` — deterministic IVF ANN (sampled-member
+  coarse quantizer, n_probe buckets, exact re-rank inside); the
+  committed form is ``index/vectors.VectorArtifact``.
 - :func:`knn_join` — all-pairs k-NN between two embedding tables via
-  LSH-bucket equi-join then per-left top-k (window), for near-dup
-  semantic dedup at scale.
+  random-hyperplane LSH-bucket equi-join (deterministic md5-derived
+  hyperplanes) then per-left top-k (window), for near-dup semantic
+  dedup at scale.
 """
 
 from __future__ import annotations
@@ -127,90 +126,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_signature_col(vec_col, planes: list[list[float]]):
-    """Bit-string signature: '1' where dot(vec, plane) > 0."""
-    bits = [
-        F.when(_dot(vec_col, F.array(*[F.lit(c) for c in p])) > 0,
-               F.lit("1")).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
-def lsh_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             n_planes: int = 8, seed: int = 42,
-             probes: int = 1) -> DataFrame:
-    """ANN top-k: exact re-rank within the query's LSH bucket(s).
-
-    ``probes > 1`` enables multi-probe: also search the buckets at
-    Hamming distance 1 from the query signature, in order of how close
-    the query sits to each hyperplane — the standard recall lever that
-    avoids building more tables. Recall < 1 by design; at scale the
-    signature is a partition key and the IN-filter prunes partitions
-    before any vector math.
-    """
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes, seed)
-    margins = [sum(a * b for a, b in zip(query_vec, p)) for p in planes]
-    qsig = "".join("1" if m > 0 else "0" for m in margins)
-    sigs = [qsig]
-    if probes > 1:
-        # flip bits whose hyperplane margin is smallest first
-        order = sorted(range(len(planes)), key=lambda i: abs(margins[i]))
-        for i in order[: probes - 1]:
-            flipped = list(qsig)
-            flipped[i] = "0" if qsig[i] == "1" else "1"
-            sigs.append("".join(flipped))
-    bucketed = emb.withColumn("sig", lsh_signature_col(F.col(vec_col), planes))
-    cand = bucketed.filter(F.col("sig").isin(sigs))
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
-class IVFIndex:
-    """IVF (inverted-file) ANN: KMeans coarse quantizer + per-centroid
-    posting buckets — the other standard scale path besides LSH. At
-    100 TB the ``bucket`` column becomes the partition key; a query
-    reads only its n_probe nearest centroids' partitions.
-
-    Deterministic for a fixed seed + input. Train on a sample at
-    scale; assignment is a broadcast of k centroid vectors.
-    """
-
-    def __init__(self, assigned: DataFrame, centers: list, k: int,
-                 id_col: str, vec_col: str):
-        self.assigned = assigned  # original cols + 'bucket'
-        self.centers = centers    # list[np.ndarray]
-        self.k = k
-        self.id_col = id_col
-        self.vec_col = vec_col
-
-    @classmethod
-    def fit(cls, emb: DataFrame, n_centroids: int = 16, seed: int = 42,
-            id_col: str = "vec_id", vec_col: str = "embedding") -> "IVFIndex":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feat = emb.withColumn("_features", array_to_vector(F.col(vec_col)))
-        model = KMeans(k=n_centroids, seed=seed, featuresCol="_features",
-                       predictionCol="bucket").fit(feat)
-        assigned = model.transform(feat).drop("_features")
-        return cls(assigned, [c for c in model.clusterCenters()],
-                   n_centroids, id_col, vec_col)
-
-    def topk(self, query_vec: list[float], k: int = 10,
-             n_probe: int = 2) -> DataFrame:
-        """Exact cosine re-rank within the n_probe nearest buckets."""
-        import numpy as np
-
-        q = np.asarray(query_vec, dtype="float64")
-        dists = [float(np.linalg.norm(np.asarray(c) - q))
-                 for c in self.centers]
-        probe = sorted(range(self.k), key=lambda i: dists[i])[:n_probe]
-        cand = self.assigned.filter(F.col("bucket").isin(probe))
-        return cosine_topk(cand, query_vec, k, self.id_col, self.vec_col)
-
-
 def _round_half_up(x: float, nd: int = 6) -> float:
     """Half-up rounding matching SQL ROUND (Python's round() is
     banker's): the driver-side probe selection must order by the same
@@ -238,7 +153,7 @@ def ivf_sampled_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
                      n_centroids: int = 8, n_probe: int = 2,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      round_to: int = 6) -> DataFrame:
-    """Deterministic IVF ANN — the oracle-gated twin of :class:`IVFIndex`.
+    """Deterministic IVF ANN.
 
     Coarse quantizer = SAMPLED MEMBER VECTORS (the ``n_centroids``
     smallest ids in ``emb``) instead of KMeans: a standard IVF baseline

@@ -39,18 +39,6 @@ MLT_TERM_EXPR = (
 )
 
 
-def score_expr_sql(tf: str = "tf", df: str = "df", dl: str = "dl",
-                   n_docs: str = "n_docs", avgdl: str = "avgdl",
-                   boost: str = "boost") -> str:
-    """The scoring expression with column names substituted."""
-    return (
-        f"{boost}"
-        f" * ln(1.0 + ({n_docs} - {df} + 0.5) / ({df} + 0.5))"
-        f" * ({tf} * (1.2 + 1.0))"
-        f" / ({tf} + 1.2 * (1.0 - 0.75 + 0.75 * {dl} / {avgdl}))"
-    )
-
-
 def bm25_py(tf: float, df: int, dl: int, n_docs: int, avgdl: float,
             boost: float = 1.0) -> float:
     """Pure-Python twin for the pandas oracle (same operation order)."""

@@ -7,13 +7,13 @@ seeing commits eventually (ReloadPolicy::OnCommitWithDelay,
 serve.rs:353-355).
 
 Spark shape: ``readStream -> writeStream.foreachBatch`` where each
-micro-batch is one upsert commit producing a new index GENERATION
-directory; a ``CURRENT`` pointer file is swapped atomically after the
-generation commits. Readers resolve CURRENT per query — i.e. they see
-new commits on their next query, exactly the reference's
-eventually-visible reader semantics. Per-doc commit becomes per-batch
-commit (the scalable version of the same contract; one trigger = one
-snapshot).
+micro-batch is one upsert commit sealing a new SEGMENT of a
+``SegmentedIndex`` (delete-then-index: the batch's ids are tombstoned
+in the older segments), published by an atomic pointer swap. Readers
+resolve the pointer per query — i.e. they see new commits on their
+next query, exactly the reference's eventually-visible reader
+semantics. Per-doc commit becomes per-batch commit (the scalable
+version of the same contract; one trigger = one snapshot).
 """
 
 from __future__ import annotations
@@ -23,83 +23,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prosearch_spark.index.artifact import (
-    IndexArtifact,
-    save_index,
-    upsert_docs,
-)
 
-CURRENT = "CURRENT"
-
-
-class StreamingIndexer:
-    """foreachBatch sink maintaining a generation chain of artifacts."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 lang_col: str = "lang", analyzer: str = "white_lower",
-                 n_buckets: int = 8):
-        self.spark = spark
-        self.path = path
-        self.text_col = text_col
-        self.id_col = id_col
-        self.lang_col = lang_col
-        self.analyzer = analyzer
-        self.n_buckets = n_buckets
-        os.makedirs(path, exist_ok=True)
-
-    # -- generation chain ---------------------------------------------------
-
-    def current(self) -> IndexArtifact | None:
-        p = os.path.join(self.path, CURRENT)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            gen = f.read().strip()
-        return IndexArtifact.load(self.spark, os.path.join(self.path, gen))
-
-    def _publish(self, gen: str) -> None:
-        tmp = os.path.join(self.path, CURRENT + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(gen)
-        os.replace(tmp, os.path.join(self.path, CURRENT))
-
-    # -- the foreachBatch hook ------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """Idempotent per-batch upsert commit.
-
-        Re-delivery of the same batch_id (at-least-once semantics)
-        overwrites the same generation dir and republishes — safe.
-        """
-        if batch.isEmpty():
-            return
-        gen = f"gen{batch_id}"
-        gen_path = os.path.join(self.path, gen)
-        if os.path.exists(os.path.join(gen_path, "manifest.json")):
-            # re-delivered batch that already committed: just republish
-            self._publish(gen)
-            return
-        cur = self.current()
-        if cur is None:
-            save_index(self.spark, batch, gen_path,
-                       text_col=self.text_col, id_col=self.id_col,
-                       analyzer=self.analyzer, lang_col=self.lang_col,
-                       n_buckets=self.n_buckets)
-        else:
-            upsert_docs(self.spark, cur, batch, gen_path,
-                        text_col=self.text_col, id_col=self.id_col,
-                        lang_col=self.lang_col)
-        self._publish(gen)
+class _BatchSink:
+    """``attach`` for every foreachBatch sink below; subclasses define
+    ``process_batch(batch, batch_id)``."""
 
     def attach(self, stream: DataFrame, checkpoint: str,
                trigger_available_now: bool = True):
-        """Wire a streaming DataFrame into the indexer.
+        """Wire a streaming DataFrame into the sink.
 
         Throttling (the politeness-delay analog, Manager.java:76-82):
         cap per-trigger intake on the SOURCE, e.g.
         ``spark.readStream.option("maxFilesPerTrigger", 4).json(dir)``
-        — each trigger then commits a bounded generation.
+        — each trigger then commits a bounded segment.
         """
         w = (
             stream.writeStream.foreachBatch(self.process_batch)
@@ -110,17 +46,14 @@ class StreamingIndexer:
         return w.start()
 
 
-class SegmentedStreamingIndexer:
+class SegmentedStreamingIndexer(_BatchSink):
     """foreachBatch sink sealing each micro-batch as ONE new segment.
 
-    This is the scale-correct ingest: the generation-chain
-    StreamingIndexer above re-runs upsert_docs per batch — O(corpus)
-    rewrite every trigger, which dies at 100 TB. Here a trigger costs
-    O(batch) (tokenize + block-encode the batch, tombstone-probe the
-    alive segments) and the log merge policy amortizes compaction —
-    exactly the reference's ingest loop: every ``/index`` commit seals
-    a Tantivy segment (serve.rs:503-525, index.rs:191) and background
-    merges compact them (merge.rs:18-31).
+    A trigger costs O(batch) (tokenize + block-encode the batch,
+    tombstone-probe the alive segments) and the log merge policy
+    amortizes compaction — exactly the reference's ingest loop: every
+    ``/index`` commit seals a Tantivy segment (serve.rs:503-525,
+    index.rs:191) and background merges compact them (merge.rs:18-31).
 
     Idempotency under at-least-once delivery: the segment dir name is
     the batch_id. Re-delivered batch already in the pointer -> no-op;
@@ -222,16 +155,6 @@ class SegmentedStreamingIndexer:
             # read only.
             self.index.merge_once(size_by=self.merge_size_by)
 
-    def attach(self, stream: DataFrame, checkpoint: str,
-               trigger_available_now: bool = True):
-        w = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if trigger_available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
-
 
 class CuratedSegmentedStreamingIndexer(SegmentedStreamingIndexer):
     """Curation-funnel gate in front of the segment sink (round 5
@@ -308,7 +231,7 @@ class CuratedSegmentedStreamingIndexer(SegmentedStreamingIndexer):
             verdict.unpersist()
 
 
-class FieldedSegmentedStreamingIndexer:
+class FieldedSegmentedStreamingIndexer(_BatchSink):
     """foreachBatch sink for a FIELDED deployment: each micro-batch
     seals one new segment PER FIELD (round 5 — the last reference-shape
     gap: the live serve loop continuously ingests into the one fielded
@@ -397,18 +320,8 @@ class FieldedSegmentedStreamingIndexer:
         per call, so readers see each field's latest pointer (Q12)."""
         return {f: si.as_artifact() for f, si in self.indexes.items()}
 
-    def attach(self, stream: DataFrame, checkpoint: str,
-               trigger_available_now: bool = True):
-        w = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if trigger_available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
 
-
-class VectorStreamingIndexer:
+class VectorStreamingIndexer(_BatchSink):
     """foreachBatch sink for the EMBEDDING side: each micro-batch of
     (vec_id, embedding) rows seals one immutable vector segment, with
     upsert tombstoning older versions segment-locally — the vector
@@ -443,13 +356,3 @@ class VectorStreamingIndexer:
             self.segs.adopt(name)
         else:
             self.segs.upsert(batch, name=name)
-
-    def attach(self, stream: DataFrame, checkpoint: str,
-               trigger_available_now: bool = True):
-        w = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if trigger_available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()

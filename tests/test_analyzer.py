@@ -114,3 +114,32 @@ def test_parse_query_lenient_lowercases_phrase_tokens():
     assert parse_query_lenient('"Join HASH"') == [
         ("phrase", ["join", "hash"]),
     ]
+
+
+# Non-ASCII whitespace and word characters: the Spark analyzers split on
+# Java's ASCII ``\s`` and test paths with ASCII ``\w``, so the Python
+# twins must use the same ASCII classes.
+UNICODE_TEXTS = [
+    "foo\u00a0barBaz",
+    "a\u2003b",
+    "caf\u00e9/menu/item",
+    "x\u3000snake_case src/\u00fcber/v",
+]
+
+
+def test_spark_analyzers_match_python_twins_on_unicode(spark):
+    from collections import Counter
+
+    from prosearch_spark.index.build import tokens
+
+    docs = spark.createDataFrame(
+        [(i, t, "python") for i, t in enumerate(UNICODE_TEXTS)],
+        "doc_id long, text string, lang string")
+    for analyzer, twin in [("white_lower", white_lower_py),
+                           ("code", lambda t: analyze_code(t, "python"))]:
+        got: dict[int, Counter] = {i: Counter()
+                                   for i in range(len(UNICODE_TEXTS))}
+        for r in tokens(docs, "text", analyzer=analyzer).collect():
+            got[r["doc_id"]][r["term"]] += 1
+        for i, text in enumerate(UNICODE_TEXTS):
+            assert got[i] == Counter(twin(text)), (analyzer, text)

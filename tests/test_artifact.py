@@ -1,12 +1,12 @@
-"""Block encoding, artifact commit/load, delete/upsert/merge semantics
-(FIXTURES.md §5; reference B3-B8)."""
+"""Block encoding, artifact commit/load, delete/merge semantics
+(FIXTURES.md §5; reference B3-B7)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from prosearch_spark.index.artifact import IndexArtifact, save_index, upsert_docs
+from prosearch_spark.index.artifact import IndexArtifact, save_index
 from prosearch_spark.index.blocks import (
     decode_blocks,
     decode_varints,
@@ -102,26 +102,6 @@ def test_deletes_hide_docs_until_merge(spark, corpus, tmp_path):
     assert victim not in [r["doc_id"] for r in eng2.topk("spark", 10).collect()]
 
 
-def test_upsert_delete_then_reindex(spark, corpus, tmp_path):
-    path = str(tmp_path / "gen0")
-    art = save_index(spark, corpus, path, text_col="content")
-    eng = BlockSearchEngine(spark, art)
-    target = eng.topk("spark", 1).collect()[0]["doc_id"]
-
-    new_docs = spark.createDataFrame(
-        [(target, "totally fresh uniquetokenxyz content", "python")],
-        "doc_id long, content string, lang string",
-    )
-    art2 = upsert_docs(spark, art, new_docs, str(tmp_path / "gen1"),
-                       text_col="content")
-    eng2 = BlockSearchEngine(spark, art2)
-    # new content only: old term gone for that doc, new term found
-    assert target not in [r["doc_id"] for r in eng2.topk("spark", 200).collect()]
-    hits = eng2.topk("uniquetokenxyz", 5).collect()
-    assert [r["doc_id"] for r in hits] == [target]
-    assert art2.manifest["n_docs"] == art.manifest["n_docs"]
-
-
 def test_doc_store_and_space_usage(spark, corpus, artifact):
     artifact.write_doc_store(corpus, ["repo", "path", "lang"])
     eng = BlockSearchEngine(spark, artifact)
@@ -151,45 +131,6 @@ def test_and_range_pruning_correct(spark, corpus, artifact):
         assert a == b, q
 
 
-def test_fast_fields_survive_upsert(spark, corpus, tmp_path):
-    """Typed fast-field columns (new.rs:136-231 analog) must be
-    re-derived for incoming docs and carried for surviving ones."""
-    from pyspark.sql import functions as F
-
-    from prosearch_spark.query.block_engine import BlockSearchEngine
-
-    docs = corpus.withColumn("clen", F.length("content").cast("long"))
-    art = save_index(spark, docs, str(tmp_path / "g0"), text_col="content",
-                     fast_fields={"flen": "clen"})
-    assert art.manifest["fast_fields"] == {"flen": "clen"}
-    assert "flen" in art.doc_stats().columns
-
-    new_docs = docs.limit(3).withColumn(
-        "content", F.concat(F.col("content"), F.lit(" extra extra"))
-    ).withColumn("clen", F.length("content").cast("long"))
-    art2 = upsert_docs(spark, art, new_docs, str(tmp_path / "g1"),
-                       text_col="content")
-    ds = art2.doc_stats()
-    assert "flen" in ds.columns
-    assert ds.count() == docs.count()
-    # the upserted docs carry the NEW value
-    upd = {r["doc_id"]: r["flen"] for r in
-           ds.join(new_docs.select("doc_id"), "doc_id").collect()}
-    exp = {r["doc_id"]: r["clen"] for r in new_docs.collect()}
-    assert upd == exp
-    # and the filtered query path works on the new generation
-    blk = BlockSearchEngine(spark, art2)
-    out = blk.topk_filtered("spark", "flen >= 0", 5)
-    assert out.count() > 0
-
-    # upsert without the source column must refuse, not silently drop
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="fast_fields"):
-        upsert_docs(spark, art2, docs.limit(1).drop("clen"),
-                    str(tmp_path / "g2"), text_col="content")
-
-
 def test_merge_keeps_zero_token_docs_store(spark, tmp_path):
     """A doc with empty text has no postings but exists in doc_stats /
     n_docs — merge must not drop its stored fields (r2 review)."""
@@ -206,27 +147,3 @@ def test_merge_keeps_zero_token_docs_store(spark, tmp_path):
     assert merged.manifest["n_docs"] == 3
     store_ids = {r["doc_id"] for r in merged.doc_store().collect()}
     assert store_ids == {0, 1, 2}  # the empty doc's store row survives
-
-
-def test_upsert_drops_tombstoned_store_rows(spark, tmp_path):
-    """delete_docs then upsert: the deleted doc must vanish from the
-    new generation's doc_store too, not just postings (r2 review)."""
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(i, f"spark doc {i}", f"t{i}") for i in range(6)],
-        "doc_id long, content string, title string",
-    ).withColumn("lang", F.lit("md"))
-    art = save_index(spark, docs, str(tmp_path / "g0"), text_col="content")
-    art.write_doc_store(docs, ["title"])
-    art.delete_docs(spark.createDataFrame([(2,)], "doc_id long"))
-
-    new_docs = docs.filter("doc_id = 0").withColumn(
-        "content", F.lit("spark updated"))
-    art2 = upsert_docs(spark, art, new_docs, str(tmp_path / "g1"),
-                       text_col="content")
-    store_ids = {r["doc_id"] for r in art2.doc_store().collect()}
-    assert 2 not in store_ids
-    assert store_ids == {0, 1, 3, 4, 5}
-    # doc_stats agrees (half-present docs were the bug)
-    assert {r["doc_id"] for r in art2.doc_stats().collect()} == store_ids

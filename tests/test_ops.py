@@ -129,43 +129,6 @@ def test_cosine_topk_vs_numpy(spark):
         assert r["cosine"] == pytest.approx(float(cos[r["vec_id"]]), abs=1e-5)
 
 
-def test_lsh_topk_exact_within_bucket(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    vecs = rng.rand(80, 8).astype("float32")
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(80)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = [float(x) for x in vecs[3]]
-    got = sim.lsh_topk(emb, q, k=5, n_planes=4)
-    res = got.collect()
-    # the query vector itself is its own nearest neighbor
-    assert res and res[0]["vec_id"] == 3 and res[0]["cosine"] == 1.0
-
-
-def test_ivf_topk_recall(spark):
-    """IVF with enough probes must recover most of the exact top-k on
-    clustered data; the query's own cluster is always probed."""
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    # 4 well-separated clusters of 30 vectors
-    rows = []
-    for c in range(4):
-        center = rng.rand(16) * 10
-        for i in range(30):
-            v = center + rng.rand(16) * 0.5
-            rows.append((c * 30 + i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    ivf = sim.IVFIndex.fit(emb, n_centroids=4, seed=1)
-    q = rows[5][1]  # inside cluster 0
-    exact = [r["vec_id"] for r in sim.cosine_topk(emb, q, 10).collect()]
-    got1 = [r["vec_id"] for r in ivf.topk(q, 10, n_probe=1).collect()]
-    got4 = [r["vec_id"] for r in ivf.topk(q, 10, n_probe=4).collect()]
-    assert got4 == exact  # probing every bucket == brute force
-    assert len(set(got1) & set(exact)) >= 8  # own cluster covers most
-
-
 def test_knn_join_self(spark):
     rows = [(i, [1.0 * (i == j) for j in range(4)]) for i in range(4)]
     # two orthogonal + two parallel vectors

@@ -90,34 +90,25 @@ def test_positional_artifact_roundtrip(spark, tiny, tmp_path):
 
 
 def test_positional_artifact_upsert_and_merge(spark, tiny, tmp_path):
-    """Positional artifacts survive upsert (union keeps positions) and
-    merge carries the doc store forward minus tombstones."""
-    from prosearch_spark.index.artifact import save_index, upsert_docs
+    """Merging a positional artifact carries the doc store forward
+    minus tombstones and keeps the positions phrase queries need."""
+    from prosearch_spark.index.artifact import save_index
     from prosearch_spark.query.block_engine import BlockSearchEngine
-
-    art = save_index(spark, tiny, str(tmp_path / "g0"), text_col="text",
-                     with_positions=True)
-    art.write_doc_store(tiny, ["text"])
 
     new_docs = spark.createDataFrame(
         [(1, "zeta eta zeta eta")], "doc_id long, text string")
-    art2 = upsert_docs(spark, art, new_docs, str(tmp_path / "g1"),
-                       text_col="text")
-    blk = BlockSearchEngine(spark, art2)
-    # phrase query still works post-upsert and sees the NEW content
-    m = blk.phrase_topk("zeta eta", 10).collect()
-    assert [r["doc_id"] for r in m] == [1]
-    assert blk.phrase_topk("beta alpha beta", 10).count() == 0  # old doc 1 gone
-
-    # merge keeps the store, dropping deleted docs
-    art2.write_doc_store(
-        tiny.filter("doc_id != 1").unionByName(new_docs), ["text"])
+    docs = tiny.filter("doc_id != 1").unionByName(new_docs)
+    art2 = save_index(spark, docs, str(tmp_path / "g1"), text_col="text",
+                      with_positions=True)
+    art2.write_doc_store(docs, ["text"])
     art2.delete_docs(spark.createDataFrame([(0,)], "doc_id long"))
     art3 = art2.merge(str(tmp_path / "g2"))
     store = art3.doc_store()
     assert store is not None
     ids = {r["doc_id"] for r in store.collect()}
     assert 0 not in ids and 1 in ids
+    m = BlockSearchEngine(spark, art3).phrase_topk("zeta eta", 10).collect()
+    assert [r["doc_id"] for r in m] == [1]
 
 
 def test_phrase_brute_force_parity(spark, corpus):

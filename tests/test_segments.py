@@ -191,25 +191,56 @@ def test_segmented_stream_end_to_end_with_compaction(spark, tmp_path):
     # fewer alive segments than commits
     assert len(ix.index._pointer()["segments"]) < 4
 
+    # second wave through the same checkpoint: only the new file is read
+    with open(os.path.join(src, "w9.json"), "w") as f:
+        f.write(json.dumps({"doc_id": 30, "text": "late arriving document",
+                            "lang": "en"}) + "\n")
+    batches = []
+    seal = ix.process_batch
+
+    def spy(batch, batch_id):
+        batches.append((batch_id, batch.count()))
+        seal(batch, batch_id)
+
+    ix.process_batch = spy
+    q2 = ix.attach(spark.readStream.schema(STREAM_SCHEMA).json(src),
+                   checkpoint=str(tmp_path / "ckpt"))
+    q2.awaitTermination(180)
+    assert batches == [(4, 1)]
+    assert _scan(spark, ix.index, "late") == [30]
+    assert _scan(spark, ix.index, "common") == [20, 21, 22, 23]
+
 
 def test_upsert_then_force_merge_matches_fresh_build(spark, corpus, tmp_path):
     """Delete-then-index upsert + force_merge refreshes n_docs/avgdl
     from the survivors: scores equal a fresh single build over the
-    final logical corpus (no stat drift after compaction)."""
+    final logical corpus (no stat drift after compaction). Fast fields
+    and stored fields carry the upserted docs' NEW values and the
+    survivors' old ones, one row per doc."""
     root = str(tmp_path / "segroot5")
     si = SegmentedIndex(spark, root, merge_factor=8)
     stale = F.col("doc_id") % 5 == 0
+    docs = corpus.withColumn("clen", F.length("content").cast("long"))
+    kw = dict(text_col="content", fast_fields={"flen": "clen"},
+              store_cols=["content"])
     si.commit(
-        corpus.withColumn(
+        docs.withColumn(
             "content",
             F.when(stale, F.lit("stale placeholder"))
             .otherwise(F.col("content")),
-        ),
-        text_col="content",
+        ).withColumn("clen", F.length("content").cast("long")),
+        **kw,
     )
-    si.upsert(corpus.filter(stale), text_col="content")
+    si.upsert(docs.filter(stale), **kw)
     assert si.force_merge()
     assert len(si._pointer()["segments"]) == 1
+    merged = si.segments()[0]
+    want = {r["doc_id"]: (r["clen"], r["content"]) for r in docs.collect()}
+    assert {r["doc_id"]: r["flen"] for r in merged.doc_stats().collect()} \
+        == {d: v[0] for d, v in want.items()}
+    store = [(r["doc_id"], r["content"])
+             for r in merged.doc_store().collect()]
+    assert sorted(store) == sorted((d, v[1]) for d, v in want.items())
     flat = SearchEngine(spark, build_index(corpus, text_col="content"))
     for q in ["spark shuffle", "the python"]:
         a = [(r["doc_id"], r["score"])

@@ -1,75 +1,12 @@
-"""Streaming ingest: micro-batch upsert commits with an atomically
-swapped CURRENT pointer (reference S3 + B8 + Q12 semantics)."""
+"""Streaming ingest: windowed rollups, the fielded, curated and
+recrawl-dedupe segment sinks (reference S3 + B8 + Q12 semantics; the
+flat segment sink's tests live in test_segments.py)."""
 
 from __future__ import annotations
 
-import json
 import os
 
-from prosearch_spark.query.block_engine import BlockSearchEngine
-from prosearch_spark.streaming.ingest import StreamingIndexer
-
 SCHEMA = "doc_id long, text string, lang string"
-
-
-def _write_wave(d: str, name: str, rows: list[dict]) -> None:
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, name), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-
-
-def test_batch_commits_and_upserts(spark, tmp_path):
-    idx_path = str(tmp_path / "sidx")
-    ix = StreamingIndexer(spark, idx_path, n_buckets=4)
-
-    wave1 = spark.createDataFrame(
-        [(0, "alpha beta", "en"), (1, "beta gamma", "en")], SCHEMA)
-    ix.process_batch(wave1, 0)
-    eng = BlockSearchEngine(spark, ix.current())
-    assert sorted(r["doc_id"] for r in eng.match_scan("beta").collect()) == [0, 1]
-
-    # wave 2: new doc + upsert of doc 1 with new content
-    wave2 = spark.createDataFrame(
-        [(1, "delta epsilon", "en"), (2, "alpha delta", "en")], SCHEMA)
-    ix.process_batch(wave2, 1)
-    eng = BlockSearchEngine(spark, ix.current())
-    assert sorted(r["doc_id"] for r in eng.match_scan("delta").collect()) == [1, 2]
-    # doc 1's OLD content no longer matches
-    assert sorted(r["doc_id"] for r in eng.match_scan("beta").collect()) == [0]
-    assert ix.current().manifest["n_docs"] == 3
-
-    # re-delivery of batch 1 is a no-op republish (idempotent)
-    ix.process_batch(wave2, 1)
-    assert ix.current().manifest["n_docs"] == 3
-
-
-def test_streaming_end_to_end(spark, tmp_path):
-    src = str(tmp_path / "in")
-    _write_wave(src, "w1.json", [
-        {"doc_id": 10, "text": "spark streaming index", "lang": "en"},
-        {"doc_id": 11, "text": "structured streaming", "lang": "en"},
-    ])
-    idx_path = str(tmp_path / "sidx2")
-    ix = StreamingIndexer(spark, idx_path, n_buckets=4)
-    stream = spark.readStream.schema(SCHEMA).json(src)
-    q = ix.attach(stream, checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    eng = BlockSearchEngine(spark, ix.current())
-    assert sorted(r["doc_id"] for r in eng.match_scan("streaming").collect()) \
-        == [10, 11]
-
-    # second wave through the same checkpoint: only the new file is read
-    _write_wave(src, "w2.json", [
-        {"doc_id": 12, "text": "late arriving document", "lang": "en"},
-    ])
-    q2 = ix.attach(spark.readStream.schema(SCHEMA).json(src),
-                   checkpoint=str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
-    eng = BlockSearchEngine(spark, ix.current())
-    assert [r["doc_id"] for r in eng.match_scan("late").collect()] == [12]
-    assert ix.current().manifest["n_docs"] == 3
 
 
 def test_windowed_counts_stream_equals_batch(spark, tmp_path):

@@ -1,20 +1,16 @@
-"""Ingest-cost evidence: generation-chain upsert vs segment-per-batch.
+"""Ingest-cost evidence for the segment-per-batch streaming sink.
 
-The round-2 StreamingIndexer re-runs upsert_docs every trigger — each
-micro-batch pays O(corpus) (carry every stored posting forward into a
-new generation). SegmentedStreamingIndexer seals each batch as its own
-segment — O(batch) — and amortizes compaction through the log merge
-policy, which is the reference's ingest loop (every ``/index`` commit
-seals a Tantivy segment, serve.rs:503-525 + index.rs:191; merges
-compact in the background, merge.rs:18-31).
+SegmentedStreamingIndexer seals each micro-batch as its own segment —
+O(batch) — and amortizes compaction through the log merge policy,
+which is the reference's ingest loop (every ``/index`` commit seals a
+Tantivy segment, serve.rs:503-525 + index.rs:191; merges compact in
+the background, merge.rs:18-31).
 
-This script makes the asymptotic claim measurable at sandbox scale:
-commit one BASE corpus, then W equal upsert WAVES through both sinks,
-and report per-wave seconds. The chain's per-wave cost grows with the
-accumulated corpus; the stack's stays ~flat at the wave size. At the
-100 TB design point the chain is unusable by construction (each
-trigger rewrites the index); the stack's per-trigger work is the batch
-plus n_segments metadata probes.
+Commits one BASE corpus, then W equal upsert WAVES through the sink,
+and reports per-wave seconds: they stay ~flat at the wave size. The
+per-trigger work is the batch plus n_segments metadata probes. Also
+reports the read amplification of an uncompacted stack and the vector
+sink's per-wave and lifecycle costs.
 
 Usage: python tools/segment_bench.py [n_base] [n_wave] [n_waves]
 Prints one JSON line.
@@ -40,10 +36,7 @@ def main() -> None:
 
     from prosearch_spark.corpus import synth_corpus
     from prosearch_spark.session import get_spark
-    from prosearch_spark.streaming.ingest import (
-        SegmentedStreamingIndexer,
-        StreamingIndexer,
-    )
+    from prosearch_spark.streaming.ingest import SegmentedStreamingIndexer
 
     spark = get_spark()
     docs = synth_corpus(spark, n_base).select(
@@ -62,32 +55,24 @@ def main() -> None:
     for w in waves:
         w.count()
 
-    out: dict = {"metric": "segment_vs_chain_ingest", "n_base": n_base,
+    out: dict = {"metric": "segment_ingest", "n_base": n_base,
                  "n_wave": n_wave, "n_waves": n_waves}
 
-    for label, ix_factory in [
-        ("chain", lambda d: StreamingIndexer(spark, d, n_buckets=16)),
-        ("segmented",
-         lambda d: SegmentedStreamingIndexer(spark, d, n_buckets=16,
-                                             merge_factor=8)),
-    ]:
-        root = tempfile.mkdtemp(prefix=f"segbench_{label}_")
-        ix = ix_factory(root)
+    ix = SegmentedStreamingIndexer(
+        spark, tempfile.mkdtemp(prefix="segbench_segmented_"),
+        n_buckets=16, merge_factor=8)
+    t0 = time.perf_counter()
+    ix.process_batch(docs, 0)
+    base_s = time.perf_counter() - t0
+    per_wave = []
+    for w, wave in enumerate(waves, start=1):
         t0 = time.perf_counter()
-        ix.process_batch(docs, 0)
-        base_s = time.perf_counter() - t0
-        per_wave = []
-        for w, wave in enumerate(waves, start=1):
-            t0 = time.perf_counter()
-            ix.process_batch(wave, w)
-            per_wave.append(round(time.perf_counter() - t0, 3))
-        out[label] = {"base_commit_sec": round(base_s, 3),
-                      "wave_sec": per_wave,
-                      "wave_mean_sec": round(sum(per_wave) / len(per_wave),
-                                             3)}
-
-    out["chain_over_segmented_wave"] = round(
-        out["chain"]["wave_mean_sec"] / out["segmented"]["wave_mean_sec"], 2)
+        ix.process_batch(wave, w)
+        per_wave.append(round(time.perf_counter() - t0, 3))
+    out["segmented"] = {"base_commit_sec": round(base_s, 3),
+                        "wave_sec": per_wave,
+                        "wave_mean_sec": round(sum(per_wave) / len(per_wave),
+                                               3)}
 
     # -- read amplification: the SAME corpus committed as S segments
     # vs compacted to one; query latency delta is what the merge
