@@ -51,8 +51,8 @@ MSEARCH_QUERIES = [Q_SINGLE, Q_AND2, Q_RARE, Q_AND3, Q_DUPTERMS,
 # quoted msearch batch (round 5): bare terms, 2- and 3-term phrases
 # (two phrase SHAPES -> two position-join plans), a dead-phrase member
 # that must not empty the batch, and the lenient-junk torture query —
-# block_engine.multi_mixed_topk serves the whole list in a fixed
-# number of plans
+# the batched mixed ladder (query/mixed.ladder_multi_topk) serves the
+# whole list in a fixed number of plans
 MSEARCH_MIXED = [Q_SINGLE, Q_MIXED_PHRASE, '"spark dup table" the',
                  Q_AND2, '"zzz qqq" spark', Q_LENIENT_JUNK]
 # fielded mixed batch: bare terms + exact phrase + slop members (one
@@ -508,12 +508,13 @@ def q_title_fallback_len(spark, sf_dir):
 
 def q_msearch_quoted(spark, sf_dir):
     """Batched msearch for a MIXED term + quoted-phrase batch
-    (round 5): multi_mixed_topk groups the batch's phrases by LENGTH
-    and runs one position-join plan per length over ONE shared
-    bucket/term-pruned decode — a quoted member no longer costs its
-    own route() job. Per-query results hash-match the single-query
-    mixed oracle; the dead-phrase member returns no rows without
-    emptying the batch."""
+    (round 5): BlockSearchEngine.multi_mixed_topk (the one-source
+    batched mixed ladder, query/mixed.ladder_multi_topk) scores every
+    term clause in one pass and groups the batch's phrases by LENGTH,
+    one position-join plan per length over ONE bucket/term-pruned body
+    decode — a quoted member no longer costs its own route() job.
+    Per-query results hash-match the single-query mixed oracle; the
+    dead-phrase member returns no rows without emptying the batch."""
     import tempfile
 
     from prosearch_spark.index.artifact import save_index
@@ -944,8 +945,9 @@ def q_msearch_fielded_quoted(spark, sf_dir):
     one position-join plan per phrase shape; the dead member
     contributes no rows and cannot empty the batch. Per-query rows
     identical to the single-query fielded mixed engine
-    (FieldedBlockSearchEngine.multi_mixed_topk; serve.msearch routes
-    fielded quoted members here)."""
+    (FieldedBlockSearchEngine.multi_mixed_topk — the batched mixed
+    ladder, query/mixed.ladder_multi_topk, with one source per field;
+    serve.msearch routes fielded quoted members here)."""
     from prosearch_spark.query.fielded import FieldedBlockSearchEngine
 
     arts = _fielded_arts(spark, sf_dir)
@@ -1610,7 +1612,8 @@ def q_mixed_slop(spark, sf_dir):
 
 def q_mixed_slop_blocks(spark, sf_dir):
     """The proximity mixed query against a COMMITTED positional
-    artifact (bucket/term-pruned decode, manifest stats — the code
+    artifact through BlockSearchEngine.mixed_topk (the staged mixed
+    ladder parses the proximity grammar; manifest stats — the code
     path ArtifactSearcher.route serves for '"..."~N' queries, which
     the plain lenient parse would return EMPTY for). Same oracle as
     the flat mixed_slop path: physical layout must not change
@@ -1624,7 +1627,7 @@ def q_mixed_slop_blocks(spark, sf_dir):
         spark, _docs(spark, sf_dir),
         tempfile.mkdtemp(prefix="prosearch_posms_"), text_col="text",
         with_positions=True))
-    return BlockSearchEngine(spark, art).mixed_slop_topk(
+    return BlockSearchEngine(spark, art).mixed_topk(
         'spark "join hash"~2', 10, round_to=ROUND)
 
 

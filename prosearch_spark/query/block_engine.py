@@ -14,15 +14,15 @@ correct and conservative, per SURVEY.md §7 stage 3):
    range semi-join on block metadata. This is the DataFrame shape of
    the zipper intersection driving Block-Max WAND (score-based
    pruning over the block-max ``max_tf``/``min_dl`` columns lives in
-   query/wand.py; topk_wand/topk_wand_or here are its adapters).
+   query/wand.py; topk_wand/topk_wand_or here are its adapters, as
+   mixed_topk/multi_mixed_topk are of the mixed ladder in
+   query/mixed.py).
 
 Only surviving blocks are varint-decoded (Arrow-batched), then scoring
 is byte-identical to the flat engine.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -629,171 +629,25 @@ class BlockSearchEngine:
                    round_to: int | None = None,
                    return_stats: bool = False
                    ) -> DataFrame | tuple[DataFrame, dict]:
-        """Lenient mixed term+phrase query over a COMMITTED positional
-        artifact — the serving path at scale: bucket/term pruning
-        fetches only the clause terms' (positional) postings, nothing
-        re-tokenizes the corpus, and collection stats come from the
-        manifest. Scoring algebra is shared with query/mixed (term BM25
-        + phrase BM25, conjunction, clause scores summed).
+        """Mixed term + phrase + ``"..."~N`` query over a COMMITTED
+        positional artifact — the one-source case of the staged mixed
+        ladder (query/mixed.ladder_topk: term-only parses run
+        topk_wand's conjunctive ladder with the parsed clauses; phrase
+        coverage and first-match pruning before any term decode).
+        ``return_stats=True`` also returns {blocks_total,
+        blocks_decoded}."""
+        from prosearch_spark.query.mixed import ladder_topk
 
-        PRUNING before decode (the zipper's skip applied to the mixed
-        grammar, reference: lenient parse serve.rs:407-409 feeding the
-        BooleanQuery zipper serve.rs:413-419):
-
-        - a query that parses to TERM clauses only IS a conjunction —
-          it routes through the score-based Block-Max WAND ladder with
-          the PARSED (term, boost) clause list passed through verbatim
-          (re-analyzing a joined string would re-derive boosts the
-          lenient grammar deliberately set differently: a quoted token
-          folds to 1.0, and raw-case boost decisions are lost after
-          lowercasing — r3 ADVICE finding);
-        - a PHRASE's terms only decode blocks overlapping the block
-          ranges of the phrase's rarest term — a doc containing the
-          phrase contains every phrase term, so its postings all sit in
-          overlapping blocks; phrase df stays EXACT because every doc
-          that could contain the phrase survives;
-        - TERM-clause blocks only decode where they overlap the FIRST
-          PHRASE'S MATCH doc ranges (every final match matches every
-          phrase). Match doc ids are collected capped at
-          SEED_BLOCK_CAP and merged into intervals, exactly like the
-          WAND seed's metadata pull; a phrase matching more docs than
-          the cap falls back to the rarest clause term's block ranges.
-          Sound either way: a dropped row's doc cannot pass the
-          clause-count conjunction filter.
-
-        ``return_stats=True`` additionally returns
-        {blocks_total, blocks_decoded} — the pruning evidence (costs
-        two extra metadata count jobs; the serving path skips them).
-        """
-        from prosearch_spark.analyzer import parse_query_lenient
-        from prosearch_spark.query.engine import TOPK_SCHEMA
-        from prosearch_spark.query.mixed import mixed_topk as _mixed
-
-        def _ret(df: DataFrame, stats: dict):
-            return (df, stats) if return_stats else df
-
-        clauses = parse_query_lenient(q)
-        if not clauses:
-            return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
-                        {"blocks_total": 0, "blocks_decoded": 0})
-        term_clauses = [c for kind, c in clauses if kind == "term"]
-        phrase_clauses = [c for kind, c in clauses if kind == "phrase"]
-        all_terms = sorted(
-            {t for t, _ in term_clauses}
-            | {t for terms in phrase_clauses for t in terms}
-        )
-        blocks = self.artifact.blocks(all_terms)
-        if phrase_clauses and "positions" not in blocks.columns:
-            raise ValueError("artifact was not built with_positions=True")
-        dfs = {r["term"]: int(r["df"])
-               for r in self.artifact.term_stats(all_terms).collect()}
-        if any(t not in dfs for t in all_terms):
-            # a clause term with zero postings -> conjunction is empty
-            return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
-                        {"blocks_total": 0, "blocks_decoded": 0})
-
-        tc_terms = sorted({t for t, _ in term_clauses})
-        if not phrase_clauses:
-            # pure conjunction: the score-based ladder applies as-is,
-            # with the parsed clause list (boosts preserved verbatim)
-            out, wstats = self.topk_wand(q, k, round_to,
-                                         clauses=term_clauses)
-            return _ret(out, wstats)
-
-        def _decode(needed: DataFrame) -> DataFrame:
-            return apply_deletes(decode_blocks(needed),
-                                 self.artifact.deletes())
-
-        # -- phrase coverage (exact phrase df preserved) ------------------
-        pieces: list[DataFrame] = []
-        for terms_p in phrase_clauses:
-            tp = sorted(set(terms_p))
-            side = blocks.filter(F.col("term").isin(tp))
-            if len(tp) > 1:
-                rarest_p = min(tp, key=lambda t: (dfs[t], t))
-                side = overlap_semi(side, term_ranges(blocks, rarest_p))
-            pieces.append(side)
-        ph_needed = pieces[0]
-        for p in pieces[1:]:
-            ph_needed = ph_needed.unionByName(p)
-        # unique block key (per-term ranges are disjoint by the
-        # range-partitioned writer; + seg on a live stack view)
-        ph_needed = ph_needed.dropDuplicates(block_key(ph_needed))
-        pp = _decode(ph_needed).persist()
-        persisted = [pp]
-        try:
-            pp_terms = None
-            tc_needed = None
-            if tc_terms:
-                from prosearch_spark.index.positions import phrase_matches
-
-                tblocks = blocks.filter(F.col("term").isin(tc_terms))
-                m0 = phrase_matches(pp, list(phrase_clauses[0]))
-                ids = [
-                    r["doc_id"]
-                    for r in m0.select("doc_id").orderBy("doc_id")
-                    .limit(SEED_BLOCK_CAP + 1).collect()
-                ]
-                if not ids:
-                    # first phrase matches nothing -> conjunction dead
-                    return _ret(
-                        self.spark.createDataFrame([], TOPK_SCHEMA),
-                        {"blocks_total": blocks.count()
-                         if return_stats else 0,
-                         "blocks_decoded": 0},
-                    )
-                if len(ids) <= SEED_BLOCK_CAP:
-                    # merge match ids into intervals (gap tolerance =
-                    # one block span: finer ranges cannot skip more)
-                    from prosearch_spark.index.blocks import BLOCK_SIZE
-
-                    ranges: list[tuple[int, int]] = []
-                    lo = prev = ids[0]
-                    for d in ids[1:]:
-                        if d - prev > BLOCK_SIZE:
-                            ranges.append((lo, prev))
-                            lo = d
-                        prev = d
-                    ranges.append((lo, prev))
-                    ranges_df = self.spark.createDataFrame(
-                        ranges, "rf long, rl long"
-                    )
-                    tc_needed = overlap_semi(tblocks, ranges_df)
-                else:
-                    # phrase too common to collect: rarest clause
-                    # term's block ranges still bound the candidates
-                    g_rarest = min(all_terms, key=lambda t: (dfs[t], t))
-                    tc_needed = overlap_semi(tblocks,
-                                             term_ranges(blocks, g_rarest))
-                pp_terms = _decode(tc_needed).persist()
-                persisted.append(pp_terms)
-            stats = {}
-            if return_stats:
-                needed = (ph_needed if tc_needed is None else
-                          ph_needed.unionByName(tc_needed)
-                          .dropDuplicates(block_key(ph_needed)))
-                stats = {"blocks_total": blocks.count(),
-                         "blocks_decoded": needed.count()}
-            return _ret(_mixed(
-                self.spark, None, q, k, round_to,
-                pp=pp, stats=self.artifact.stats(),
-                term_stats=self.artifact.term_stats(tc_terms)
-                if term_clauses else None,
-                pp_terms=pp_terms,
-            ), stats)
-        finally:
-            for df in persisted:
-                df.unpersist()
+        src = (None, self.artifact, 1.0)
+        return ladder_topk(self.spark, [src], src, q, k, round_to,
+                           return_stats)
 
     def phrase_topk(self, phrase: str, k: int = 10,
                     round_to: int | None = None) -> DataFrame:
         """Exact-phrase BM25 over a positional artifact
         (save_index(with_positions=True)); positions decode only for
         the phrase's terms after bucket/term pruning."""
-        from prosearch_spark.index.positions import (
-            phrase_matches,
-            phrase_topk as _pt,
-        )
+        from prosearch_spark.index.positions import phrase_topk as _pt
 
         terms = [t for t, _ in analyze_query(phrase)]
         postings = self.artifact.postings(sorted(set(terms)))
@@ -820,272 +674,14 @@ class BlockSearchEngine:
         return _pst(self.spark, postings, self.artifact.stats(), phrase,
                     slop, k, round_to)
 
-    def mixed_slop_topk(self, q: str, k: int = 10,
-                        round_to: int | None = None) -> DataFrame:
-        """Proximity mixed grammar (``spark "join hash"~2``) over a
-        COMMITTED positional artifact: bucket/term-pruned decode of
-        exactly the clause terms' positional postings, manifest
-        collection stats, scoring via the shared mixed body
-        (query/mixed._mixed_impl — term BM25 + ordered-slop synthetic
-        phrase BM25, conjunctive). No staged block pruning in this
-        path (a slop clause's admissible doc ranges are WIDER than an
-        exact phrase's; the exact-phrase route keeps its pruning) —
-        the decode is still bounded by the clause terms' buckets."""
-        from prosearch_spark.analyzer import parse_query_slop
-        from prosearch_spark.query.engine import TOPK_SCHEMA
-        from prosearch_spark.query.mixed import _mixed_impl
-
-        clauses = parse_query_slop(q)
-        if not clauses:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        all_terms = sorted(
-            {t for kind, c in clauses if kind == "term"
-             for t in [c[0]]}
-            | {t for kind, c in clauses if kind == "phrase" for t in c}
-            | {t for kind, c in clauses if kind == "slop"
-               for t in c[0]}
-        )
-        postings = self.artifact.postings(all_terms)
-        needs_pos = any(kind in ("phrase", "slop") for kind, _ in clauses)
-        if needs_pos and "positions" not in postings.columns:
-            raise ValueError("artifact was not built with_positions=True")
-        # persist: each clause kind (term scoring, every phrase/slop
-        # side) reads the decode — unpersisted, the bucket-pruned
-        # scan+decode would re-run once per side
-        postings = postings.persist()
-        try:
-            return _mixed_impl(
-                self.spark, None, clauses, k, round_to, "text",
-                "doc_id", pp=postings, stats=self.artifact.stats(),
-                term_stats=self.artifact.term_stats(all_terms),
-                pp_terms=None)
-        finally:
-            postings.unpersist()
-
     def multi_mixed_topk(self, queries: list[str], k: int = 10,
                          round_to: int | None = None) -> DataFrame:
-        """Batched msearch for MIXED (term + quoted-phrase) query
-        batches over a positional artifact (round 5): the whole batch
-        runs in a FIXED number of jobs — one decode + one plan per
-        phrase SHAPE — instead of one route() job per quoted member.
+        """Batched mixed msearch over a positional artifact — the
+        one-source case of query/mixed.ladder_multi_topk (a fixed
+        number of plans per batch: one position join per phrase
+        length and chain). Per-query rows equal :meth:`mixed_topk`'s."""
+        from prosearch_spark.query.mixed import ladder_multi_topk
 
-        Why per-shape, not per-phrase: a phrase of n terms is an n-way
-        position self-join, so its PLAN depends only on n. Every
-        phrase of the same length across the whole batch shares one
-        join chain, keyed by (query_id, clause_id): slot i's side =
-        the one decoded postings frame semi-joined to a broadcast
-        (query_id, clause_id, term) slot table. A 24-term + 8-phrase
-        batch with phrase lengths {2, 3} costs one term-scoring plan
-        plus two phrase plans, all unioned and ranked in one
-        partitioned window (WindowGroupLimit, never a global sort).
-
-        Per-query semantics are identical to :meth:`mixed_topk`
-        (lenient parse, term BM25 + synthetic-term phrase BM25 with
-        EXACT phrase df, conjunction over ALL clauses, round-before-
-        rank, (score DESC, doc_id ASC)); a query with an unmatched
-        clause simply never reaches its clause count — no per-query
-        early exits, so one dead member cannot empty the batch (the
-        multi_topk rule). Like multi_topk, the batch decodes the UNION
-        of all clause terms' blocks with bucket/term pruning only —
-        one member's conjunction pruning does not compose across a
-        batch."""
-        from prosearch_spark.analyzer import parse_query_slop
-        from prosearch_spark.query.bm25 import SCORE_EXPR
-        from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
-
-        # parse_query_slop is a strict superset of the lenient
-        # grammar (byte-identical clauses on every slop-free query),
-        # so quoted batches keep their exact semantics and "..."~N
-        # members batch too (round 6 — a slop clause's plan also
-        # depends only on its LENGTH: the window bound rides along as
-        # a broadcast column, so same-length slop phrases with
-        # different slops share one join chain)
-        parsed = [(qi, parse_query_slop(q))
-                  for qi, q in enumerate(queries)]
-        term_rows = []     # (query_id, clause_id, term, boost)
-        by_len: dict[int, list] = {}   # n -> [(query_id, clause_id, terms)]
-        # n -> [(query_id, clause_id, terms, window)] for "..."~N
-        by_len_slop: dict[int, list] = {}
-        for qi, cls in parsed:
-            for ci, (kind, payload) in enumerate(cls):
-                if kind == "term":
-                    term_rows.append((qi, ci, payload[0], payload[1]))
-                elif kind == "slop":
-                    terms_p, slop = payload
-                    by_len_slop.setdefault(len(terms_p), []).append(
-                        (qi, ci, list(terms_p),
-                         len(terms_p) - 1 + slop))
-                else:
-                    by_len.setdefault(len(payload), []).append(
-                        (qi, ci, list(payload)))
-        if not term_rows and not by_len and not by_len_slop:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-
-        all_terms = sorted({t for _q, _c, t, _b in term_rows}
-                           | {t for g in by_len.values()
-                              for _q, _c, ts in g for t in ts}
-                           | {t for g in by_len_slop.values()
-                              for _q, _c, ts, _w in g for t in ts})
-        blocks = self.artifact.blocks(all_terms)
-        if (by_len or by_len_slop) and "positions" not in blocks.columns:
-            raise ValueError("artifact was not built with_positions=True")
-        pp = apply_deletes(decode_blocks(blocks),
-                           self.artifact.deletes()).persist()
-        try:
-            stats = self.artifact.stats()
-            parts: list[DataFrame] = []
-            if term_rows:
-                qdf = self.spark.createDataFrame(
-                    term_rows,
-                    "query_id int, clause_id int, term string, "
-                    "boost double")
-                ts = self.artifact.term_stats(
-                    sorted({t for _q, _c, t, _b in term_rows}))
-                parts.append(
-                    pp.select("term", "doc_id", "tf", "dl")
-                    .join(F.broadcast(qdf), "term")
-                    .join(F.broadcast(ts), "term")
-                    .crossJoin(F.broadcast(stats))
-                    .withColumn("s", F.expr(SCORE_EXPR))
-                    .select("query_id", "clause_id", "doc_id", "s")
-                )
-            for n, group in sorted(by_len.items()):
-                slot_rows = [(qi, ci, i, t)
-                             for qi, ci, terms_p in group
-                             for i, t in enumerate(terms_p)]
-                slots = self.spark.createDataFrame(
-                    slot_rows,
-                    "query_id int, clause_id int, slot int, term string")
-                def _shifted(by: int):
-                    # NB: single-parameter lambda — F.transform binds
-                    # a second parameter to the element INDEX
-                    return F.transform("positions",
-                                       lambda p: p - F.lit(by))
-
-                sides = []
-                for i in range(n):
-                    si = slots.filter(F.col("slot") == i) \
-                        .select("query_id", "clause_id", "term")
-                    sides.append(
-                        pp.join(F.broadcast(si), "term").select(
-                            "query_id", "clause_id", "doc_id",
-                            *(["dl"] if i == 0 else []),
-                            _shifted(i).alias(f"p{i}"),
-                        )
-                    )
-                joined = reduce(
-                    lambda a, b: a.join(
-                        b, ["query_id", "clause_id", "doc_id"]),
-                    sides)
-                inter = reduce(
-                    lambda acc, i: F.array_intersect(
-                        acc, F.col(f"p{i}")),
-                    range(1, n), F.col("p0"))
-                matches = (
-                    joined.withColumn("tf",
-                                      F.size(inter).cast("long"))
-                    .filter(F.col("tf") > 0)
-                    .select("query_id", "clause_id", "doc_id", "dl",
-                            "tf")
-                )
-                # exact per-phrase df (one row per matched doc by
-                # construction: each side holds <=1 row per doc)
-                pdf = matches.groupBy("query_id", "clause_id").agg(
-                    F.count("*").alias("df"))
-                parts.append(
-                    matches.join(F.broadcast(pdf),
-                                 ["query_id", "clause_id"])
-                    .crossJoin(F.broadcast(stats))
-                    .withColumn("boost", F.lit(1.0))
-                    .withColumn("s", F.expr(SCORE_EXPR))
-                    .select("query_id", "clause_id", "doc_id", "s")
-                )
-            for n, group in sorted(by_len_slop.items()):
-                # slop phrases of length n share ONE unshifted n-way
-                # join; the window bound w = (n-1)+slop is a broadcast
-                # COLUMN, so mixed slops batch together. tf = the
-                # greedy-chain start count (the single-query
-                # phrase_slop_matches algebra with w as an outer
-                # reference in the HOF)
-                slot_rows = [(qi, ci, i, t)
-                             for qi, ci, terms_p, _w in group
-                             for i, t in enumerate(terms_p)]
-                slots = self.spark.createDataFrame(
-                    slot_rows,
-                    "query_id int, clause_id int, slot int, term string")
-                wdf = self.spark.createDataFrame(
-                    [(qi, ci, w) for qi, ci, _ts, w in group],
-                    "query_id int, clause_id int, w int")
-                sides = []
-                for i in range(n):
-                    si = slots.filter(F.col("slot") == i) \
-                        .select("query_id", "clause_id", "term")
-                    sides.append(
-                        pp.join(F.broadcast(si), "term").select(
-                            "query_id", "clause_id", "doc_id",
-                            *(["dl"] if i == 0 else []),
-                            F.col("positions").alias(f"q{i}"),
-                        )
-                    )
-                joined = reduce(
-                    lambda a, b: a.join(
-                        b, ["query_id", "clause_id", "doc_id"]),
-                    sides).join(F.broadcast(wdf),
-                                ["query_id", "clause_id"])
-                arrs = "array(" + ", ".join(
-                    f"q{i}" for i in range(1, n)) + ")"
-                chain = (
-                    f"size(filter(q0, start -> aggregate({arrs}, "
-                    "start, (acc, arr) -> CASE WHEN acc < 0 THEN -1 "
-                    "ELSE coalesce(array_min(filter(arr, "
-                    "x -> x > acc)), -1) END, "
-                    "acc -> acc >= 0 AND acc - start <= w)))"
-                )
-                smatches = (
-                    joined.withColumn("tf", F.expr(chain).cast("long"))
-                    .filter(F.col("tf") > 0)
-                    .select("query_id", "clause_id", "doc_id", "dl",
-                            "tf")
-                )
-                spdf = smatches.groupBy("query_id", "clause_id").agg(
-                    F.count("*").alias("df"))
-                parts.append(
-                    smatches.join(F.broadcast(spdf),
-                                  ["query_id", "clause_id"])
-                    .crossJoin(F.broadcast(stats))
-                    .withColumn("boost", F.lit(1.0))
-                    .withColumn("s", F.expr(SCORE_EXPR))
-                    .select("query_id", "clause_id", "doc_id", "s")
-                )
-            scored = reduce(lambda a, b: a.unionByName(b), parts)
-            ndf = self.spark.createDataFrame(
-                [(qi, len(cls)) for qi, cls in parsed if cls],
-                "query_id int, n_clauses int")
-            # duplicate clauses carry distinct clause_ids, so the
-            # DISTINCT count equals the clause count exactly when
-            # every clause matched (the fielded-mixed conjunction
-            # rule); their scores still both sum
-            d = (
-                scored.groupBy("query_id", "doc_id")
-                .agg(F.sum("s").alias("score"),
-                     F.countDistinct("clause_id").alias("nmatch"))
-                .join(F.broadcast(ndf), "query_id")
-                .filter(F.col("nmatch") == F.col("n_clauses"))
-            )
-            if round_to is not None:
-                d = d.withColumn("score", F.round("score", round_to))
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.asc("doc_id"))
-            out = (
-                d.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score")
-                .orderBy("query_id", "rank")
-            )
-            from prosearch_spark.query.engine import materialize_topk
-
-            return materialize_topk(self.spark, out, MULTI_TOPK_SCHEMA)
-        finally:
-            pp.unpersist()
+        src = (None, self.artifact, 1.0)
+        return ladder_multi_topk(self.spark, [src], src, queries, k,
+                                 round_to)

@@ -24,13 +24,10 @@ class ArtifactSearcher:
     endpoint; the BooleanQuery built from the lenient parse picks the
     execution over segment skip data (serve.rs:407-419) — here:
 
-      - quoted span + fielded artifacts configured -> fielded lenient
-        mixed engine (title 1.5 / body 1.0 kept for term clauses;
-        phrases score in the positional body field — round-4 fix: the
-        r3 router silently dropped a fielded deployment's quoted
-        queries to single-field scoring);
-      - quoted span, single-field -> staged-pruning mixed engine over
-        the positional artifact (phrase BM25 + term-WAND delegation);
+      - quoted span -> the staged mixed ladder (query/mixed.py) over
+        the fielded artifacts when configured (title 1.5 / body 1.0
+        for term clauses, phrases and slops scored in the positional
+        body field), else over the single-field positional artifact;
       - fielded artifacts configured, no quotes -> fielded Block-Max
         WAND (title 1.5 / body 1.0, serve.rs:336-351);
       - otherwise -> single-field Block-Max WAND.
@@ -68,16 +65,14 @@ class ArtifactSearcher:
         mixed engines for their pruning counters (two extra count
         jobs, so route() skips them — WAND stats come free).
 
-        Proximity suffix ("..."~N, round 6): the lenient parser would
-        read the glued ~N as a bare term clause that matches nothing —
-        conjunction dead, EMPTY results for a user typing the standard
-        Lucene syntax. The slop rows fire whenever the two grammars
-        PARSE DIFFERENTLY (a glued ~suffix exists — including ~0 folds
-        and dropped bad suffixes, which the lenient parse would also
-        turn into dead term clauses), so they are behavior-preserving
-        for every query without one. The fielded mixed engine parses
-        the proximity grammar itself: term clauses keep title 1.5 /
-        body 1.0, slop clauses score body-only like phrases."""
+        Every quoted query goes to the deployment's mixed engine
+        (fielded when configured, else single-field — the same staged
+        ladder, query/mixed.ladder_topk), which parses the proximity
+        grammar ("..."~N) itself. The plan name says ``mixed_slop``
+        whenever that grammar and the lenient one PARSE DIFFERENTLY (a
+        glued ~suffix exists — including ~0 folds and dropped bad
+        suffixes, which the lenient parse would turn into dead term
+        clauses)."""
         from prosearch_spark.analyzer import (
             parse_query_lenient,
             parse_query_slop,
@@ -85,24 +80,19 @@ class ArtifactSearcher:
 
         quoted = '"' in q
         slop = quoted and parse_query_slop(q) != parse_query_lenient(q)
-        fld, blk = self.fielded, self.block
+        fld = self.fielded
+        mix = fld if fld is not None else self.block
+        prefix = "fielded_" if fld is not None else ""
 
-        def mixed(eng):
-            def call():
-                out = eng.mixed_topk(q, k, round_to,
-                                     return_stats=want_stats)
-                return out if want_stats else (out, {})
-            return call
+        def mixed():
+            out = mix.mixed_topk(q, k, round_to, return_stats=want_stats)
+            return out if want_stats else (out, {})
 
         table = (
-            (slop and fld is not None, "fielded_mixed_slop", mixed(fld)),
-            (slop, "mixed_slop",
-             lambda: (blk.mixed_slop_topk(q, k, round_to), {})),
-            (quoted and fld is not None, "fielded_mixed", mixed(fld)),
-            (quoted, "mixed", mixed(blk)),
+            (quoted, prefix + ("mixed_slop" if slop else "mixed"), mixed),
             (fld is not None, "fielded_wand",
              lambda: fld.topk_wand(q, k, round_to)),
-            (True, "wand", lambda: blk.topk_wand(q, k, round_to)),
+            (True, "wand", lambda: self.block.topk_wand(q, k, round_to)),
         )
         plan, call = next((p, c) for ok, p, c in table if ok)
         hits, stats = call()
@@ -191,23 +181,21 @@ class ArtifactSearcher:
         (query_id, rank, doc_id, score) for every query of the batch,
         query_id = list position.
 
-        The batch SPLITS by plan shape: every unquoted query scores in
-        ONE job over one bucket/term-pruned postings fetch
-        (multi_topk — fielded boosts kept when ``fielded`` is
-        configured). Quoted members batch too on a single-field
-        deployment (round 5): multi_mixed_topk groups their phrases by
-        LENGTH and runs one position-join plan per length over one
-        shared decode, so a 24-term + 8-phrase batch with phrase
-        lengths {2, 3} costs three plans, not 9+. On a FIELDED
-        deployment quoted (and "..."~N) members batch too (round 6:
-        fielded.multi_mixed_topk — one fielded term pass + one
-        body-only position-join plan per phrase shape; the batch
-        deliberately skips the single-query staged pruning, which
-        does not compose across members)."""
+        The batch SPLITS by plan shape, on the deployment's engine
+        (fielded when configured, boosts kept): every unquoted query
+        scores in ONE multi_topk job over one bucket/term-pruned
+        postings fetch, and every quoted (or "..."~N) member rides ONE
+        multi_mixed_topk call — the batched mixed ladder
+        (query/mixed.ladder_multi_topk: one term pass, one body decode,
+        one position join per phrase length and chain), so a 24-term +
+        8-phrase batch with phrase lengths {2, 3} costs three plans,
+        not 9+. The batch skips the single-query staged pruning, which
+        does not compose across members."""
         from functools import reduce
 
         from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
 
+        eng = self.fielded if self.fielded is not None else self.block
         term_idx = [i for i, q in enumerate(queries) if '"' not in q]
         quoted_idx = [i for i, q in enumerate(queries) if '"' in q]
         parts: list[DataFrame] = []
@@ -224,25 +212,13 @@ class ArtifactSearcher:
                         "doc_id", "score")
 
         if term_idx:
-            eng = self.fielded if self.fielded is not None else self.block
             parts.append(_remap(
                 eng.multi_topk([queries[i] for i in term_idx], k,
                                round_to), term_idx))
-        if quoted_idx and self.fielded is None:
+        if quoted_idx:
             parts.append(_remap(
-                self.block.multi_mixed_topk(
-                    [queries[i] for i in quoted_idx], k, round_to),
-                quoted_idx))
-        elif quoted_idx:
-            # round 6: fielded quoted/slop members batch too —
-            # fielded.multi_mixed_topk runs one plan per phrase
-            # shape over one body decode + one fielded term pass
-            # (the per-member route() loop this replaces paid a
-            # full plan per quoted member)
-            parts.append(_remap(
-                self.fielded.multi_mixed_topk(
-                    [queries[i] for i in quoted_idx], k, round_to),
-                quoted_idx))
+                eng.multi_mixed_topk([queries[i] for i in quoted_idx], k,
+                                     round_to), quoted_idx))
         if not parts:
             return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
         return reduce(lambda a, b: a.unionByName(b), parts) \

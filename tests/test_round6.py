@@ -971,10 +971,10 @@ def test_route_serves_slop_queries(spark, tmp_path):
 
 def test_msearch_batches_slop_members(spark, tmp_path):
     """multi_mixed_topk accepts '"..."~N' members (round 6): each
-    batch member's rows are identical to its single-query
-    mixed_slop_topk/mixed_topk result (the oracle-gated engines), and
-    same-length slop phrases with DIFFERENT slops share one plan (the
-    window rides as a column)."""
+    batch member's rows are identical to its single-query mixed_topk
+    result (the oracle-gated engine), and same-length slop phrases
+    with DIFFERENT slops share one plan (the window rides as a
+    column)."""
     from prosearch_spark.index.artifact import save_index
     from prosearch_spark.query.block_engine import BlockSearchEngine
 
@@ -997,12 +997,8 @@ def test_msearch_batches_slop_members(spark, tmp_path):
         by_q.setdefault(r["query_id"], []).append(
             (r["rank"], r["doc_id"], r["score"]))
     for qi, q in enumerate(batch):
-        if "~" in q:
-            want = eng.mixed_slop_topk(q, 10, round_to=6)
-        else:
-            want = eng.mixed_topk(q, 10, round_to=6)
         rows = [(r["rank"], r["doc_id"], r["score"])
-                for r in want.collect()]
+                for r in eng.mixed_topk(q, 10, round_to=6).collect()]
         assert by_q.get(qi, []) == rows, q
 
 
@@ -1150,9 +1146,8 @@ def test_fielded_multi_mixed_plan_shape(spark, tmp_path):
     tables, window bounds, term/field stats, clause counts) broadcast
     (BroadcastHashJoins present, never a cartesian product) and the
     final per-query rank is a PARTITIONED window (WindowGroupLimit).
-    The n-way joins BETWEEN position sides are posting-sized on both
-    ends and correctly shuffle on (query_id, clause_id, doc_id) —
-    those SortMergeJoins are the phrase intersection itself, not a
+    The one posting-sized shuffle of position rows, on (query_id,
+    clause_id, doc_id), is the phrase intersection itself, not a
     planning defect."""
     from prosearch_spark.index.artifact import save_fielded_index
     from prosearch_spark.query.fielded import FieldedBlockSearchEngine

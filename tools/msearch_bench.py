@@ -13,7 +13,7 @@ instead: 3/4 bare-term members + 1/4 quoted-phrase members (shapes
 {2, 3}) served by multi_mixed_topk (one position-join plan per phrase
 SHAPE) vs one mixed_topk route per member. Pass ``slop`` (round 6)
 to make the quoted members PROXIMITY clauses ("..."~2 / "..."~3):
-sequential = one mixed_slop_topk / mixed_topk route per member,
+sequential = one mixed_topk route per member,
 batch = the same multi_mixed_topk call (slop clauses batch per
 length with the window as a broadcast column). Pass ``fielded``
 (round 6 late) to commit a title+body FIELDED deployment (title =
@@ -93,12 +93,8 @@ def main() -> None:
             queries.append(f"z{t}_1 z{t}_2")
 
     def _single(q):
-        if fielded:
-            # the fielded mixed engine parses the proximity grammar
-            return blk.mixed_topk(q, 10, round_to=6)
-        if mixed and "~" in q:
-            return blk.mixed_slop_topk(q, 10, round_to=6)
         if mixed:
+            # both mixed engines parse the proximity grammar
             return blk.mixed_topk(q, 10, round_to=6)
         return blk.topk(q, 10, round_to=6)
 
