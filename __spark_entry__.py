@@ -1367,23 +1367,13 @@ def q_knn_stack_live(spark, sf_dir):
     return segs.topk(qvec, 10, round_to=ROUND)
 
 
-def _phrase(spark, sf_dir, phrase):
-    from prosearch_spark.index.build import build_index
-    from prosearch_spark.index.positions import (
-        phrase_topk,
-        positional_postings,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pp = positional_postings(docs, text_col="text")
-    stats = build_index(docs, text_col="text").stats
-    return phrase_topk(spark, pp, stats, phrase, 10, round_to=ROUND)
-
-
 def q_phrase_topk(spark, sf_dir):
     """Exact-phrase BM25 (positional postings; record:position parity,
-    meta.json:21-33)."""
-    return _phrase(spark, sf_dir, "join hash")
+    meta.json:21-33): a quoted query is a one-clause mixed query."""
+    from prosearch_spark.query.mixed import mixed_topk
+
+    return mixed_topk(spark, _docs(spark, sf_dir), '"join hash"', 10,
+                      round_to=ROUND)
 
 
 def q_phrase_prefix_topk(spark, sf_dir):
@@ -1400,14 +1390,19 @@ def q_phrase_prefix_topk(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     pp = positional_postings(docs, text_col="text")
     stats = build_index(docs, text_col="text").stats
-    return phrase_prefix_topk(spark, pp, stats, "join", "s", 10,
-                              round_to=ROUND)
+    return phrase_prefix_topk(
+        spark, lambda _terms: pp, stats,
+        pp.groupBy("term").agg(F.count("*").alias("df")), "join", "s", 10,
+        round_to=ROUND)
 
 
 def q_phrase_topk_repeat(spark, sf_dir):
     """Duplicate-term phrase ('table table') — consecutive-occurrence
     position algebra."""
-    return _phrase(spark, sf_dir, "table table")
+    from prosearch_spark.query.mixed import mixed_topk
+
+    return mixed_topk(spark, _docs(spark, sf_dir), '"table table"', 10,
+                      round_to=ROUND)
 
 
 def q_phrase_slop(spark, sf_dir):
@@ -1417,24 +1412,18 @@ def q_phrase_slop(spark, sf_dir):
     synthetic phrase term. Spark = greedy-chain HOF per doc; oracle =
     n-way inequality join (equivalence proof in
     index/positions.phrase_slop_matches)."""
-    from prosearch_spark.index.build import build_index
-    from prosearch_spark.index.positions import (
-        phrase_slop_topk,
-        positional_postings,
-    )
+    from prosearch_spark.query.mixed import mixed_topk
 
-    docs = _docs(spark, sf_dir)
-    pp = positional_postings(docs, text_col="text")
-    stats = build_index(docs, text_col="text").stats
-    return phrase_slop_topk(spark, pp, stats, "join hash", 2, 10,
-                            round_to=ROUND)
+    return mixed_topk(spark, _docs(spark, sf_dir), '"join hash"~2', 10,
+                      round_to=ROUND)
 
 
 def q_phrase_slop_blocks(spark, sf_dir):
     """3-term proximity phrase over a COMMITTED positional artifact:
-    'scan group value'~3 — bucket/term-pruned decode of exactly the
-    three terms' postings, then the shared greedy-chain matcher (the
-    intermediate term exercises the chain step)."""
+    'scan group value'~3 through the mixed ladder — only the blocks
+    overlapping the rarest term's ranges decode, then the shared
+    greedy-chain matcher (the intermediate term exercises the chain
+    step)."""
     import tempfile
 
     from prosearch_spark.index.artifact import save_index
@@ -1444,8 +1433,8 @@ def q_phrase_slop_blocks(spark, sf_dir):
         spark, _docs(spark, sf_dir),
         tempfile.mkdtemp(prefix="prosearch_pos_"), text_col="text",
         with_positions=True))
-    return BlockSearchEngine(spark, art).phrase_slop_topk(
-        "scan group value", 3, 10, round_to=ROUND)
+    return BlockSearchEngine(spark, art).mixed_topk(
+        '"scan group value"~3', 10, round_to=ROUND)
 
 
 def q_phrase_topk_blocks(spark, sf_dir):
@@ -1460,8 +1449,8 @@ def q_phrase_topk_blocks(spark, sf_dir):
         spark, _docs(spark, sf_dir),
         tempfile.mkdtemp(prefix="prosearch_pos_"), text_col="text",
         with_positions=True))
-    return BlockSearchEngine(spark, art).phrase_topk("join hash", 10,
-                                                     round_to=ROUND)
+    return BlockSearchEngine(spark, art).mixed_topk('"join hash"', 10,
+                                                    round_to=ROUND)
 
 
 def q_bm25_topk_fastfield(spark, sf_dir):
@@ -1604,10 +1593,10 @@ def q_mixed_slop(spark, sf_dir):
     starts), conjunctive, clause scores summed. Oracle shares the
     clause list via analyzer.parse_query_slop and the inequality-join
     chain algebra."""
-    from prosearch_spark.query.mixed import mixed_slop_topk
+    from prosearch_spark.query.mixed import mixed_topk
 
-    return mixed_slop_topk(spark, _docs(spark, sf_dir),
-                           'spark "join hash"~2', 10, round_to=ROUND)
+    return mixed_topk(spark, _docs(spark, sf_dir), 'spark "join hash"~2',
+                      10, round_to=ROUND)
 
 
 def q_mixed_slop_blocks(spark, sf_dir):

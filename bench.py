@@ -42,7 +42,9 @@ def _spin_calibration() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from prosearch_spark.session import get_spark, local_cpus
+
+    cpus = local_cpus()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -55,7 +57,6 @@ def main() -> None:
     from prosearch_spark.ops import dedup as dd
     from prosearch_spark.ops import similarity as sim
     from prosearch_spark.query.engine import SearchEngine
-    from prosearch_spark.session import get_spark
 
     spark = get_spark("prosearch-bench", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 8))
@@ -206,7 +207,7 @@ def main() -> None:
     pblk.mixed_topk('spark "join hash"', 10, round_to=6).collect()
     queries["q_mixed_phrase"] = round(time.perf_counter() - t0, 4)
     t0 = time.perf_counter()
-    pblk.phrase_slop_topk("join hash", 2, 10, round_to=6).collect()
+    pblk.mixed_topk('"join hash"~2', 10, round_to=6).collect()
     queries["q_phrase_slop2"] = round(time.perf_counter() - t0, 4)
 
     # 24 term + 8 phrase members (phrase shapes {2, 3}), ONE batch —

@@ -14,17 +14,25 @@ algebra: for terms t1..tn, a doc matches iff
 that intersection is the PHRASE FREQUENCY, which scores as the tf of
 a synthetic term (Lucene's PhraseQuery semantics: df of the phrase is
 the number of docs containing it).
+
+This module holds the position algebra only — the matchers
+(phrase_matches, phrase_slop_matches, phrase_prefix_matches) and the
+chain expressions they share with the batched mixed ladder (shifted,
+phrase_freq, slop_chain). A phrase or ``"..."~N`` query is a mixed
+query with one clause: its top-k is query/mixed.mixed_topk (flat) or an
+engine's mixed_topk (committed). phrase_prefix_topk is the one
+phrase-prefix top-k, for flat postings and committed artifacts alike.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prosearch_spark.analyzer import analyze_query
-from prosearch_spark.query.bm25 import SCORE_EXPR
 
 
 def positional_postings(docs: DataFrame, text_col: str = "text",
@@ -55,40 +63,72 @@ def positional_postings(docs: DataFrame, text_col: str = "text",
     ).select("term", "doc_id", "tf", "dl", "positions")
 
 
+def shifted(col: str, by: int) -> Column:
+    """The position array ``col`` minus ``by`` — slot ``by``'s
+    positions aligned to the phrase start."""
+    # NB: single-parameter lambda — a second parameter would be bound
+    # to the element index by F.transform
+    return F.transform(col, lambda p: p - F.lit(by))
+
+
+def phrase_freq(arrays: list[Column]) -> Column:
+    """Phrase frequency: the size of the intersection of the slots'
+    start-aligned position arrays (all JVM built-ins)."""
+    return F.size(reduce(F.array_intersect, arrays))
+
+
+# the greedy earliest ordered chain per start position (semantics and
+# the greedy == exists proof: phrase_slop_matches) over position
+# columns q0..q{n-1}; ``window`` is a literal bound or a column name, so
+# batched clauses of different slops share one plan
+_SLOP_CHAIN = (
+    "size(filter(q0, start -> aggregate({arrs}, start, "
+    "(acc, arr) -> CASE WHEN acc < 0 THEN -1 "
+    "ELSE coalesce(array_min(filter(arr, x -> x > acc)), -1) END, "
+    "acc -> acc >= 0 AND acc - start <= {window})))"
+)
+
+
+def slop_chain(n: int, window: int | str) -> Column:
+    """Chain-start count of the ``n`` position columns q0..q{n-1}
+    within ``window`` (= n - 1 + slop) position steps."""
+    return F.expr(_SLOP_CHAIN.format(
+        arrs="array(" + ", ".join(f"q{i}" for i in range(1, n)) + ")",
+        window=window))
+
+
+def _slot_sides(postings: DataFrame, terms: list[str]) -> list[DataFrame]:
+    """One (doc_id, [dl,] p{i}) side per phrase slot: slot i's term
+    postings with their positions shifted by i (slot 0 carries dl)."""
+    return [postings.filter(F.col("term") == t).select(
+        "doc_id", *(["dl"] if i == 0 else []), shifted("positions", i)
+        .alias(f"p{i}")) for i, t in enumerate(terms)]
+
+
+def _matched(sides: list[DataFrame], tf: Column) -> DataFrame:
+    """(doc_id, dl, tf) over the doc_id equi-join of the slot sides,
+    keeping docs with tf > 0."""
+    return (
+        reduce(lambda a, b: a.join(b, "doc_id"), sides)
+        .withColumn("phrase_freq", tf)
+        .filter(F.col("phrase_freq") > 0)
+        .select("doc_id", "dl", F.col("phrase_freq").cast("long").alias("tf"))
+    )
+
+
 def phrase_matches(postings: DataFrame, phrase_terms: list[str]) -> DataFrame:
-    """(doc_id, dl, phrase_freq) for docs containing the exact phrase.
+    """(doc_id, dl, tf = phrase frequency) for docs containing the
+    exact phrase.
 
     n-way broadcast-friendly join on doc_id; the position algebra is
-    array_intersect over shifted position arrays (all JVM built-ins).
+    array_intersect over shifted position arrays (phrase_freq).
     Duplicate terms in the phrase are handled naturally (each slot
     joins the same posting row, shifted differently).
     """
     if not phrase_terms:
         raise ValueError("empty phrase")
-    def shifted(by: int):
-        # NB: single-parameter lambda — a second parameter would be
-        # bound to the element index by F.transform
-        return F.transform("positions", lambda p: p - F.lit(by))
-
-    sides = []
-    for i, t in enumerate(phrase_terms):
-        side = postings.filter(F.col("term") == t).select(
-            "doc_id",
-            *(["dl"] if i == 0 else []),
-            shifted(i).alias(f"p{i}"),
-        )
-        sides.append(side)
-    joined = reduce(lambda a, b: a.join(b, "doc_id"), sides)
-    inter = reduce(
-        lambda acc, i: F.array_intersect(acc, F.col(f"p{i}")),
-        range(1, len(phrase_terms)),
-        F.col("p0"),
-    )
-    return (
-        joined.withColumn("phrase_freq", F.size(inter))
-        .filter(F.col("phrase_freq") > 0)
-        .select("doc_id", "dl", F.col("phrase_freq").cast("long").alias("tf"))
-    )
+    return _matched(_slot_sides(postings, phrase_terms), phrase_freq(
+        [F.col(f"p{i}") for i in range(len(phrase_terms))]))
 
 
 def phrase_prefix_matches(postings: DataFrame, fixed_terms: list[str],
@@ -107,19 +147,6 @@ def phrase_prefix_matches(postings: DataFrame, fixed_terms: list[str],
         raise ValueError("phrase-prefix needs at least one fixed term; "
                          "use expand.prefix_clauses + topk_or instead")
     n = len(fixed_terms)
-
-    def shifted(by: int):
-        return F.transform("positions", lambda p: p - F.lit(by))
-
-    sides = []
-    for i, t in enumerate(fixed_terms):
-        sides.append(
-            postings.filter(F.col("term") == t).select(
-                "doc_id",
-                *(["dl"] if i == 0 else []),
-                shifted(i).alias(f"p{i}"),
-            )
-        )
     if not expansion_terms:
         return (postings.select("doc_id", "dl")
                 .withColumn("tf", F.lit(0).cast("long"))
@@ -127,46 +154,48 @@ def phrase_prefix_matches(postings: DataFrame, fixed_terms: list[str],
     last = (
         postings.filter(
             F.col("term").isin(sorted(set(expansion_terms))))
-        .select("doc_id", shifted(n).alias("pl"))
+        .select("doc_id", shifted("positions", n).alias("pl"))
         .groupBy("doc_id")
         .agg(F.array_sort(F.array_distinct(
             F.flatten(F.collect_list("pl")))).alias(f"p{n}"))
     )
-    joined = reduce(lambda a, b: a.join(b, "doc_id"), sides + [last])
-    inter = reduce(
-        lambda acc, i: F.array_intersect(acc, F.col(f"p{i}")),
-        range(1, n + 1),
-        F.col("p0"),
-    )
-    return (
-        joined.withColumn("phrase_freq", F.size(inter))
-        .filter(F.col("phrase_freq") > 0)
-        .select("doc_id", "dl",
-                F.col("phrase_freq").cast("long").alias("tf"))
-    )
+    return _matched(_slot_sides(postings, fixed_terms) + [last], phrase_freq(
+        [F.col(f"p{i}") for i in range(n + 1)]))
 
 
-def phrase_prefix_topk(spark: SparkSession, postings: DataFrame,
-                       n_docs_avgdl: DataFrame, phrase: str, prefix: str,
-                       k: int = 10, round_to: int | None = None,
+def phrase_prefix_topk(spark: SparkSession,
+                       postings: Callable[[list[str]], DataFrame],
+                       n_docs_avgdl: DataFrame, dictionary: DataFrame,
+                       phrase: str, prefix: str, k: int = 10,
+                       round_to: int | None = None,
                        max_expansions: int | None = None) -> DataFrame:
-    """BM25 top-k for phrase + last-slot prefix: expansion from the
-    postings-derived dictionary with the Lucene (df DESC, term ASC)
-    cap, then synthetic-term scoring exactly like phrase_topk (tf =
-    completion count, df = matching-doc count)."""
+    """BM25 top-k for phrase + last-slot prefix. The prefix expands
+    over ``dictionary`` (term, df) with the Lucene (df DESC, term ASC)
+    cap — a flat build passes its postings grouped by term, a committed
+    artifact its term_stats metadata (the FST dictionary-walk analog).
+    ``postings(terms)`` returns the positional postings of the fixed +
+    expansion terms. Scored as one synthetic phrase term (tf =
+    completion count, df = matching-doc count) by the mixed ladder's
+    phrase scorer."""
     from prosearch_spark.query.engine import materialize_topk, rank_topk
     from prosearch_spark.query.expand import MAX_EXPANSIONS, prefix_clauses
+    from prosearch_spark.query.mixed import _phrase_scored
 
     terms = [t for t, _ in analyze_query(phrase)]
-    ts = postings.groupBy("term").agg(F.count("*").alias("df"))
     exp = [t for t, _ in prefix_clauses(
-        ts, prefix, max_expansions or MAX_EXPANSIONS)]
-    m = phrase_prefix_matches(postings, terms, exp).persist()
+        dictionary, prefix, max_expansions or MAX_EXPANSIONS)]
+    pp = postings(sorted(set(terms) | set(exp)))
+    if "positions" not in pp.columns:
+        raise ValueError("artifact was not built with_positions=True")
+    m = phrase_prefix_matches(pp, terms, exp).persist()
     try:
         phrase_df = m.count()
-        scored = phrase_scores(m, phrase_df, n_docs_avgdl) \
-            .withColumnRenamed("s", "score")
-        return materialize_topk(spark, rank_topk(scored, k, round_to))
+        scored = _phrase_scored(
+            m.withColumn("df", F.lit(phrase_df)), None,
+            n_docs_avgdl.select("n_docs", "avgdl",
+                                F.lit(1.0).alias("fboost")), [])
+        return materialize_topk(spark, rank_topk(
+            scored.withColumnRenamed("s", "score"), k, round_to))
     finally:
         m.unpersist()
 
@@ -208,84 +237,7 @@ def phrase_slop_matches(postings: DataFrame, phrase_terms: list[str],
     if slop < 0:
         raise ValueError("slop must be >= 0")
     n = len(phrase_terms)
-    window = n - 1 + slop
-    sides = []
-    for i, t in enumerate(phrase_terms):
-        sides.append(
-            postings.filter(F.col("term") == t).select(
-                "doc_id",
-                *(["dl"] if i == 0 else []),
-                F.col("positions").alias(f"q{i}"),
-            )
-        )
-    joined = reduce(lambda a, b: a.join(b, "doc_id"), sides)
-    arrs = "array(" + ", ".join(f"q{i}" for i in range(1, n)) + ")"
-    chain = (
-        f"size(filter(q0, start -> aggregate({arrs}, start, "
-        "(acc, arr) -> CASE WHEN acc < 0 THEN -1 "
-        "ELSE coalesce(array_min(filter(arr, x -> x > acc)), -1) END, "
-        f"acc -> acc >= 0 AND acc - start <= {window})))"
-    )
-    return (
-        joined.withColumn("phrase_freq", F.expr(chain))
-        .filter(F.col("phrase_freq") > 0)
-        .select("doc_id", "dl",
-                F.col("phrase_freq").cast("long").alias("tf"))
-    )
-
-
-def phrase_slop_topk(spark: SparkSession, postings: DataFrame,
-                     n_docs_avgdl: DataFrame, phrase: str, slop: int,
-                     k: int = 10,
-                     round_to: int | None = None) -> DataFrame:
-    """BM25 top-k for an ordered proximity phrase: tf = slop-match
-    start count, df = matching-doc count — the synthetic-term scoring
-    shape shared with phrase_topk (phrase_scores)."""
-    from prosearch_spark.query.engine import materialize_topk, rank_topk
-
-    terms = [t for t, _ in analyze_query(phrase)]
-    # persist: the join feeds BOTH the df aggregate and the scoring
-    # pass (same reasoning as phrase_topk)
-    m = phrase_slop_matches(postings, terms, slop).persist()
-    try:
-        phrase_df = m.count()
-        scored = phrase_scores(m, phrase_df, n_docs_avgdl) \
-            .withColumnRenamed("s", "score")
-        return materialize_topk(spark, rank_topk(scored, k, round_to))
-    finally:
-        m.unpersist()
-
-
-def phrase_scores(m: DataFrame, phrase_df: int,
-                  n_docs_avgdl: DataFrame) -> DataFrame:
-    """(doc_id, s): BM25 of the SYNTHETIC phrase term over matched docs
-    — tf = phrase frequency, df = phrase doc frequency, boost 1.0
-    (Lucene PhraseQuery shape). Shared by phrase_topk and the mixed
-    lenient engine so the phrase algebra exists once."""
-    return (
-        m.withColumn("df", F.lit(int(phrase_df)))
-        .crossJoin(F.broadcast(n_docs_avgdl))
-        .withColumn("boost", F.lit(1.0))
-        .withColumn("s", F.expr(SCORE_EXPR))
-        .select("doc_id", "s")
-    )
-
-
-def phrase_topk(spark: SparkSession, postings: DataFrame,
-                n_docs_avgdl: DataFrame, phrase: str, k: int = 10,
-                round_to: int | None = None) -> DataFrame:
-    """BM25 top-k for an exact phrase: tf = phrase frequency, df = the
-    phrase's document frequency (Lucene PhraseQuery scoring shape)."""
-    from prosearch_spark.query.engine import materialize_topk, rank_topk
-
-    terms = [t for t, _ in analyze_query(phrase)]
-    # persist: the n-way phrase join feeds BOTH the phrase-df aggregate
-    # and the scoring pass — unpersisted it would decode + join twice
-    m = phrase_matches(postings, terms).persist()
-    try:
-        phrase_df = m.count()
-        scored = phrase_scores(m, phrase_df, n_docs_avgdl) \
-            .withColumnRenamed("s", "score")
-        return materialize_topk(spark, rank_topk(scored, k, round_to))
-    finally:
-        m.unpersist()
+    sides = [postings.filter(F.col("term") == t).select(
+        "doc_id", *(["dl"] if i == 0 else []), F.col("positions")
+        .alias(f"q{i}")) for i, t in enumerate(phrase_terms)]
+    return _matched(sides, slop_chain(n, n - 1 + slop))

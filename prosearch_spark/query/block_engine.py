@@ -31,7 +31,7 @@ from prosearch_spark.analyzer import analyze_query
 from prosearch_spark.index.artifact import IndexArtifact, apply_deletes
 from prosearch_spark.index.blocks import decode_blocks
 from prosearch_spark.index.build import InvertedIndex
-from prosearch_spark.query.engine import SearchEngine
+from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA, SearchEngine
 
 
 def block_key(df: DataFrame, *lead: str) -> list[str]:
@@ -121,23 +121,15 @@ class BlockSearchEngine:
             blocks = overlap_semi(blocks, term_ranges(blocks, rarest))
         return blocks
 
-    def index_for(self, q: str,
-                  clauses: list[tuple[str, float]] | None = None
-                  ) -> InvertedIndex:
+    def _engine(self, q: str,
+                clauses: list[tuple[str, float]] | None = None,
+                predicate: str | None = None) -> SearchEngine:
+        """:meth:`_engine_on_blocks` over the bucket/term/range-pruned
+        blocks of ``q``'s terms (``clauses`` overrides the parse)."""
         terms = sorted({t for t, _ in (clauses if clauses is not None
                                        else analyze_query(q))})
-        postings = apply_deletes(decode_blocks(self._pruned_blocks(terms)),
-                                 self.artifact.deletes())
-        return InvertedIndex(
-            postings=postings,
-            term_stats=self.artifact.term_stats(terms),
-            stats=self.artifact.stats(),
-        )
-
-    def _engine(self, q: str,
-                clauses: list[tuple[str, float]] | None = None
-                ) -> SearchEngine:
-        return SearchEngine(self.spark, self.index_for(q, clauses))
+        return self._engine_on_blocks(self._pruned_blocks(terms), terms,
+                                      predicate)
 
     def topk(self, q: str, k: int = 10, round_to: int | None = None,
              clauses: list[tuple[str, float]] | None = None) -> DataFrame:
@@ -146,15 +138,9 @@ class BlockSearchEngine:
         delegation verbatim, never a re-analysis of joined text)."""
         return self._engine(q, clauses).topk(q, k, round_to, clauses)
 
-    def multi_topk(self, queries: list[str], k: int = 10,
-                   round_to: int | None = None) -> DataFrame:
-        """Batched multi-query top-k over the committed artifact
-        (SearchEngine.multi_topk's semantics): the UNION of every
-        query's analyzed terms drives ONE bucket/term-pruned block
-        fetch + decode, then the whole batch scores, conjoins, and
-        ranks per query in a single plan — N queries, one job, one
-        postings scan. The amortization evidence lives in
-        tools/msearch_bench.py / BENCH.md.
+    def _batch_engine(self, queries: list[str]) -> SearchEngine | None:
+        """One engine over the UNION of the batch's analyzed terms —
+        one bucket/term-pruned block fetch + decode (None: no terms).
 
         NB: deliberately NOT _pruned_blocks — its rarest-term range
         pruning encodes ONE query's conjunction (and empties the set
@@ -162,16 +148,21 @@ class BlockSearchEngine:
         so only bucket/term pruning applies here."""
         terms = sorted({t for q in queries for t, _ in analyze_query(q)})
         if not terms:
-            from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
+            return None
+        return self._engine_on_blocks(self.artifact.blocks(terms), terms)
 
+    def multi_topk(self, queries: list[str], k: int = 10,
+                   round_to: int | None = None) -> DataFrame:
+        """Batched multi-query top-k over the committed artifact
+        (SearchEngine.multi_topk's semantics): ONE decode
+        (:meth:`_batch_engine`), then the whole batch scores, conjoins,
+        and ranks per query in a single plan — N queries, one job, one
+        postings scan. The amortization evidence lives in
+        tools/msearch_bench.py / BENCH.md."""
+        eng = self._batch_engine(queries)
+        if eng is None:
             return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        postings = apply_deletes(decode_blocks(self.artifact.blocks(terms)),
-                                 self.artifact.deletes())
-        idx = InvertedIndex(postings=postings,
-                            term_stats=self.artifact.term_stats(terms),
-                            stats=self.artifact.stats())
-        return SearchEngine(self.spark, idx).multi_topk(queries, k,
-                                                        round_to)
+        return eng.multi_topk(queries, k, round_to)
 
     def multi_topk_or(self, queries: list[str], k: int = 10,
                       round_to: int | None = None,
@@ -181,18 +172,10 @@ class BlockSearchEngine:
         pruning only; per-query rarest-term or score pruning cannot
         batch), per-query semantics identical to the flat
         :meth:`SearchEngine.topk_or`."""
-        terms = sorted({t for q in queries for t, _ in analyze_query(q)})
-        if not terms:
-            from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
-
+        eng = self._batch_engine(queries)
+        if eng is None:
             return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        postings = apply_deletes(decode_blocks(self.artifact.blocks(terms)),
-                                 self.artifact.deletes())
-        idx = InvertedIndex(postings=postings,
-                            term_stats=self.artifact.term_stats(terms),
-                            stats=self.artifact.stats())
-        return SearchEngine(self.spark, idx).multi_topk_or(
-            queries, k, round_to, min_match=min_match)
+        return eng.multi_topk_or(queries, k, round_to, min_match=min_match)
 
     def _engine_on_blocks(self, blocks: DataFrame, terms: list[str],
                           predicate: str | None = None) -> SearchEngine:
@@ -468,15 +451,8 @@ class BlockSearchEngine:
         pinned), then a semi-join keeps only qualifying docs; BM25
         stats (df/avgdl/N) stay corpus-global, exactly like a filtered
         Tantivy search."""
-        idx = self.index_for(q, clauses)
-        qualifying = self.artifact.doc_stats().filter(
-            F.expr(predicate)
-        ).select("doc_id")
-        postings = idx.postings.join(qualifying, "doc_id", "left_semi")
-        eng = SearchEngine(self.spark, InvertedIndex(
-            postings=postings, term_stats=idx.term_stats, stats=idx.stats,
-        ))
-        return eng.topk(q, k, round_to, clauses=clauses)
+        return self._engine(q, clauses, predicate).topk(
+            q, k, round_to, clauses=clauses)
 
     def count(self, q: str) -> DataFrame:
         return self._engine(q).count(q)
@@ -568,36 +544,16 @@ class BlockSearchEngine:
                            round_to: int | None = None,
                            max_expansions: int | None = None) -> DataFrame:
         """Phrase + last-slot prefix (MultiPhraseQuery) over a
-        committed POSITIONAL artifact: the prefix expansion reads the
-        artifact's term_stats METADATA (vocabulary-sized parquet — the
-        FST dictionary-walk analog, with the Lucene df DESC / term ASC
-        cap), then ONLY the fixed + expansion terms' blocks decode
-        (bucket/term-pruned). The r3 path grouped the passed postings
-        to build its dictionary — a postings-scale shuffle this
-        metadata read replaces."""
-        from prosearch_spark.index.positions import (
-            phrase_prefix_matches,
-            phrase_scores,
-        )
-        from prosearch_spark.query.engine import materialize_topk, rank_topk
-        from prosearch_spark.query.expand import MAX_EXPANSIONS, prefix_clauses
+        committed POSITIONAL artifact (index/positions.phrase_prefix_topk):
+        the prefix expands over the artifact's term_stats METADATA
+        (vocabulary-sized parquet — no postings-scale shuffle), then
+        ONLY the fixed + expansion terms' blocks decode."""
+        from prosearch_spark.index.positions import phrase_prefix_topk
 
-        terms = [t for t, _ in analyze_query(phrase)]
-        exp = [t for t, _ in prefix_clauses(
-            self.artifact.term_stats(None), prefix,
-            max_expansions or MAX_EXPANSIONS)]
-        needed = sorted(set(terms) | set(exp))
-        postings = self.artifact.postings(needed)
-        if "positions" not in postings.columns:
-            raise ValueError("artifact was not built with_positions=True")
-        m = phrase_prefix_matches(postings, terms, exp).persist()
-        try:
-            phrase_df = m.count()
-            scored = phrase_scores(m, phrase_df, self.artifact.stats()) \
-                .withColumnRenamed("s", "score")
-            return materialize_topk(self.spark, rank_topk(scored, k, round_to))
-        finally:
-            m.unpersist()
+        return phrase_prefix_topk(
+            self.spark, self.artifact.postings, self.artifact.stats(),
+            self.artifact.term_stats(None), phrase, prefix, k, round_to,
+            max_expansions)
 
     def facet_counts(self, q: str, facet_col: str = "facets") -> DataFrame:
         """Tantivy FacetCollector analog (r3 verdict 8): per facet PATH
@@ -641,38 +597,6 @@ class BlockSearchEngine:
         src = (None, self.artifact, 1.0)
         return ladder_topk(self.spark, [src], src, q, k, round_to,
                            return_stats)
-
-    def phrase_topk(self, phrase: str, k: int = 10,
-                    round_to: int | None = None) -> DataFrame:
-        """Exact-phrase BM25 over a positional artifact
-        (save_index(with_positions=True)); positions decode only for
-        the phrase's terms after bucket/term pruning."""
-        from prosearch_spark.index.positions import phrase_topk as _pt
-
-        terms = [t for t, _ in analyze_query(phrase)]
-        postings = self.artifact.postings(sorted(set(terms)))
-        if "positions" not in postings.columns:
-            raise ValueError("artifact was not built with_positions=True")
-        return _pt(self.spark, postings, self.artifact.stats(), phrase, k,
-                   round_to)
-
-    def phrase_slop_topk(self, phrase: str, slop: int, k: int = 10,
-                         round_to: int | None = None) -> DataFrame:
-        """Ordered proximity phrase (Tantivy PhraseQuery::set_slop
-        parity) over a positional artifact: bucket/term-pruned decode
-        of only the phrase's terms, then the shared greedy-chain
-        matcher (index/positions.phrase_slop_topk — semantics and the
-        greedy==exists proof live there)."""
-        from prosearch_spark.index.positions import (
-            phrase_slop_topk as _pst,
-        )
-
-        terms = [t for t, _ in analyze_query(phrase)]
-        postings = self.artifact.postings(sorted(set(terms)))
-        if "positions" not in postings.columns:
-            raise ValueError("artifact was not built with_positions=True")
-        return _pst(self.spark, postings, self.artifact.stats(), phrase,
-                    slop, k, round_to)
 
     def multi_mixed_topk(self, queries: list[str], k: int = 10,
                          round_to: int | None = None) -> DataFrame:

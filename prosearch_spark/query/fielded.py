@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prosearch_spark.analyzer import analyze_query
+from prosearch_spark.index.artifact import apply_deletes
+from prosearch_spark.index.blocks import decode_blocks
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.block_engine import block_cols
 from prosearch_spark.query.bm25 import SCORE_EXPR
@@ -28,6 +30,10 @@ from prosearch_spark.query.mixed import ladder_multi_topk, ladder_topk
 from prosearch_spark.query.wand import block_max_wand
 
 DEFAULT_FIELD_BOOSTS = {"title": 1.5, "body": 1.0}
+
+
+def _terms(q: str) -> list[str]:
+    return sorted({t for t, _ in analyze_query(q)})
 
 
 def field_boost_expr(field_boosts: dict[str, float]):
@@ -184,36 +190,35 @@ class FieldedSearchEngine:
                                min_match=min_match)
 
 
-def fielded_index_from_artifacts(artifacts: dict, q: str,
-                                 terms: list[str] | None = None
+def fielded_index_from_artifacts(artifacts: dict, terms: list[str],
+                                 blocks: DataFrame | None = None
                                  ) -> InvertedIndex:
-    """Assemble the fielded logical index from per-field block
-    artifacts (save_fielded_index layout), term-pruned for query ``q``
-    (or for an explicit ``terms`` list — the mixed engine passes its
-    parsed term-clause terms, bypassing re-analysis).
-
-    Per-field postings carry each field's own bucket/term/parquet
-    pruning; the union adds the ``field`` tag the fielded scorer
+    """The fielded logical index of ``terms`` over per-field block
+    artifacts (save_fielded_index layout): each field decodes its own
+    bucket/term-pruned blocks — or, given field-tagged ``blocks`` (the
+    WAND ladder's pruned set), its rows of those — with its tombstones
+    applied, and the union adds the ``field`` tag the fielded scorer
     expects. Per-field df / N / avgdl come from each artifact's
-    manifest — exactly Tantivy's per-field segment stats.
+    manifest — exactly Tantivy's per-field segment stats — so scoring
+    is byte-identical whichever blocks were pruned.
     """
-    if terms is None:
-        terms = sorted({t for t, _ in analyze_query(q)})
-    postings = None
-    term_stats = None
-    stats = None
+    postings = term_stats = stats = None
     for field, art in sorted(artifacts.items()):
-        p = art.postings(terms).select(
-            F.lit(field).alias("field"), "term", "doc_id", "tf", "dl"
-        )
+        fb = (art.blocks(terms) if blocks is None
+              else blocks.filter(F.col("field") == field))
+        p = apply_deletes(decode_blocks(block_cols(fb)), art.deletes())
+        p = p.select(F.lit(field).alias("field"), "term", "doc_id",
+                     "tf", "dl")
         t = art.term_stats(terms).select(
             F.lit(field).alias("field"), "term", "df"
         )
-        s = art.stats().select(F.lit(field).alias("field"), "n_docs", "avgdl")
+        s = art.stats().select(F.lit(field).alias("field"), "n_docs",
+                               "avgdl")
         postings = p if postings is None else postings.unionByName(p)
         term_stats = t if term_stats is None else term_stats.unionByName(t)
         stats = s if stats is None else stats.unionByName(s)
-    return InvertedIndex(postings=postings, term_stats=term_stats, stats=stats)
+    return InvertedIndex(postings=postings, term_stats=term_stats,
+                         stats=stats)
 
 
 class FieldedBlockSearchEngine:
@@ -225,23 +230,27 @@ class FieldedBlockSearchEngine:
         self.artifacts = artifacts
         self.field_boosts = field_boosts or DEFAULT_FIELD_BOOSTS
 
-    def _engine(self, q: str) -> FieldedSearchEngine:
-        idx = fielded_index_from_artifacts(self.artifacts, q)
-        return FieldedSearchEngine(self.spark, idx, self.field_boosts)
+    def _engine(self, terms: list[str], blocks: DataFrame | None = None
+                ) -> FieldedSearchEngine:
+        """FieldedSearchEngine over fielded_index_from_artifacts."""
+        return FieldedSearchEngine(
+            self.spark,
+            fielded_index_from_artifacts(self.artifacts, terms, blocks),
+            self.field_boosts)
 
     def topk(self, q: str, k: int = 10, round_to: int | None = None) -> DataFrame:
-        return self._engine(q).topk(q, k, round_to)
+        return self._engine(_terms(q)).topk(q, k, round_to)
 
     def topk_or(self, q: str, k: int = 10, round_to: int | None = None,
                 min_match: int = 1) -> DataFrame:
         """Disjunctive fielded top-k over the committed artifacts."""
-        return self._engine(q).topk_or(q, k, round_to, min_match)
+        return self._engine(_terms(q)).topk_or(q, k, round_to, min_match)
 
     def count(self, q: str) -> DataFrame:
-        return self._engine(q).count(q)
+        return self._engine(_terms(q)).count(q)
 
     def match_scan(self, q: str) -> DataFrame:
-        return self._engine(q).match_scan(q)
+        return self._engine(_terms(q)).match_scan(q)
 
     def multi_topk(self, queries: list[str], k: int = 10,
                    round_to: int | None = None,
@@ -250,16 +259,13 @@ class FieldedBlockSearchEngine:
         artifacts: the UNION of every query's terms drives one
         bucket/term-pruned decode per field, then the whole batch
         scores in FieldedSearchEngine.multi_topk's single plan."""
-        terms = sorted({t for q in queries for t, _ in analyze_query(q)})
+        terms = sorted({t for q in queries for t in _terms(q)})
         if not terms:
             from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
 
             return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        idx = fielded_index_from_artifacts(self.artifacts, "",
-                                           terms=terms)
-        return FieldedSearchEngine(
-            self.spark, idx, self.field_boosts
-        ).multi_topk(queries, k, round_to, min_match=min_match)
+        return self._engine(terms).multi_topk(queries, k, round_to,
+                                              min_match=min_match)
 
     def multi_topk_or(self, queries: list[str], k: int = 10,
                       round_to: int | None = None,
@@ -271,34 +277,6 @@ class FieldedBlockSearchEngine:
                                min_match=min_match)
 
     # -- fielded Block-Max WAND ------------------------------------------------
-
-    def _engine_on_blocks(self, blocks: DataFrame,
-                          terms: list[str]) -> FieldedSearchEngine:
-        """Decode field-tagged block rows (per-field tombstones applied)
-        and wrap a FieldedSearchEngine over them with the artifacts'
-        manifest-era per-field stats — scoring is byte-identical to the
-        unpruned fielded path regardless of which blocks were pruned."""
-        from prosearch_spark.index.blocks import decode_blocks
-
-        from prosearch_spark.index.artifact import apply_deletes
-
-        postings = term_stats = stats = None
-        for field, art in sorted(self.artifacts.items()):
-            fb = block_cols(blocks.filter(F.col("field") == field))
-            p = apply_deletes(decode_blocks(fb), art.deletes())
-            p = p.select(F.lit(field).alias("field"), "term", "doc_id",
-                         "tf", "dl")
-            t = art.term_stats(terms).select(
-                F.lit(field).alias("field"), "term", "df"
-            )
-            s = art.stats().select(F.lit(field).alias("field"), "n_docs",
-                                   "avgdl")
-            postings = p if postings is None else postings.unionByName(p)
-            term_stats = t if term_stats is None else term_stats.unionByName(t)
-            stats = s if stats is None else stats.unionByName(s)
-        idx = InvertedIndex(postings=postings, term_stats=term_stats,
-                            stats=stats)
-        return FieldedSearchEngine(self.spark, idx, self.field_boosts)
 
     def _sources(self) -> list:
         return [(field, art, float(self.field_boosts.get(field, 1.0)))
@@ -329,7 +307,7 @@ class FieldedBlockSearchEngine:
         terms = sorted({t for t, _ in clauses})
 
         def score(blocks: DataFrame, rt: int | None) -> DataFrame:
-            return self._engine_on_blocks(blocks, terms).topk(q, k, rt)
+            return self._engine(terms, blocks).topk(q, k, rt)
 
         return block_max_wand(self.spark, self._sources(), clauses, score,
                               k, round_to, min_prune_blocks,
@@ -351,7 +329,7 @@ class FieldedBlockSearchEngine:
         terms = sorted({t for t, _ in clauses})
 
         def score(blocks: DataFrame, rt: int | None) -> DataFrame:
-            return self._engine_on_blocks(blocks, terms).topk_or(
+            return self._engine(terms, blocks).topk_or(
                 q, k, round_to=rt, min_match=min_match)
 
         return block_max_wand(self.spark, self._sources(), clauses, score,

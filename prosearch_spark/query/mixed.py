@@ -10,10 +10,12 @@ engine's per-clause sum. ``"..."~N`` (analyzer.parse_query_slop, a
 strict superset of the lenient grammar) adds ORDERED proximity clauses
 scored like phrases (tf = chain starts; index/positions).
 
-:func:`mixed_topk` / :func:`mixed_slop_topk` are the flat path: one
-positional posting table built from the documents serves both clause
-kinds (tf/dl for term scoring, the position arrays for the phrase
-intersection).
+:func:`mixed_topk` is the flat path and the only flat phrase / slop
+top-k (a phrase query is a mixed query with one clause): one positional
+posting table built from the documents serves both clause kinds (tf/dl
+for term scoring, the position arrays for the phrase intersection), and
+it scores and conjoins like the ladder below with one source of field
+boost 1.0.
 
 :func:`ladder_topk` / :func:`ladder_multi_topk` serve COMMITTED
 artifacts. Like query/wand.py, a deployment is a list of ``(field,
@@ -71,14 +73,16 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prosearch_spark.analyzer import parse_query_lenient, parse_query_slop
+from prosearch_spark.analyzer import parse_query_slop
 from prosearch_spark.index.artifact import apply_deletes
 from prosearch_spark.index.blocks import BLOCK_SIZE, decode_blocks
 from prosearch_spark.index.positions import (
+    phrase_freq,
     phrase_matches,
-    phrase_scores,
     phrase_slop_matches,
     positional_postings,
+    shifted,
+    slop_chain,
 )
 from prosearch_spark.query import block_engine as be
 from prosearch_spark.query.bm25 import SCORE_EXPR
@@ -94,7 +98,9 @@ from prosearch_spark.query.wand import _union_tagged, align_seg, block_max_wand
 def build_positional(spark: SparkSession, docs: DataFrame,
                      text_col: str = "text", id_col: str = "doc_id"
                      ) -> tuple[DataFrame, DataFrame]:
-    """(positional postings, one-row stats) for mixed querying.
+    """(positional postings, one-row n_docs / avgdl / fboost stats) for
+    mixed querying — the ladder's stats frame of one source at field
+    boost 1.0.
 
     Stats match the flat index definition exactly: n_docs counts every
     doc (zero-token included), avgdl = total tokens / n_docs.
@@ -103,97 +109,64 @@ def build_positional(spark: SparkSession, docs: DataFrame,
     n_docs = docs.count()
     tok_total = pp.agg(F.sum("tf")).collect()[0][0] or 0
     avgdl = tok_total / n_docs if n_docs else 0.0
-    stats = spark.createDataFrame([(n_docs, float(avgdl))],
-                                  "n_docs long, avgdl double")
+    stats = spark.createDataFrame([(n_docs, float(avgdl), 1.0)],
+                                  "n_docs long, avgdl double, fboost double")
     return pp, stats
 
 
 def mixed_topk(spark: SparkSession, docs: DataFrame, q: str, k: int = 10,
                round_to: int | None = None, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
-    """BM25 top-k over ``docs`` for a lenient query with optional
-    quoted phrases.
+    """BM25 top-k over ``docs`` for a query in the proximity grammar
+    (analyzer.parse_query_slop): bare terms, quoted phrases and
+    ``"..."~N`` ordered proximity clauses.
 
     score(d) = sum over term clauses of boost * bm25(term, d)
-             + sum over phrase clauses of bm25_phrase(phrase, d)
-    where a phrase scores via positions.phrase_scores and a doc must
-    match EVERY clause (conjunction by default). The positional
-    postings are built and persisted for this one call.
+             + sum over phrase / slop clauses of bm25_phrase(clause, d)
+    where a phrase or slop clause scores as one synthetic term (tf =
+    phrase frequency or chain starts, df = matching docs) and a doc
+    must match EVERY clause (conjunction by default). Scoring and the
+    conjunction are the committed ladder's (_scored, _phrase_scored,
+    countDistinct(clause_id)) over the one-source stats frame. The
+    positional postings are built and persisted for this one call.
     """
-    return _mixed_impl(spark, docs, parse_query_lenient(q), k, round_to,
-                       text_col, id_col)
-
-
-def mixed_slop_topk(spark: SparkSession, docs: DataFrame, q: str,
-                    k: int = 10, round_to: int | None = None,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """:func:`mixed_topk` through the proximity grammar
-    (analyzer.parse_query_slop): ``spark "join hash"~2`` scores the
-    bare term conjunctively with an ORDERED slop-2 proximity clause
-    (tf = chain starts, synthetic-term BM25 — semantics and the
-    greedy==exists proof in index/positions.phrase_slop_matches).
-    ``"..."~0`` folds to the exact phrase, so this is a strict
-    superset of the lenient grammar."""
-    return _mixed_impl(spark, docs, parse_query_slop(q), k, round_to,
-                       text_col, id_col)
-
-
-def _mixed_impl(spark: SparkSession, docs: DataFrame,
-                clauses: list[tuple[str, object]], k: int,
-                round_to: int | None, text_col: str,
-                id_col: str) -> DataFrame:
-    """The flat mixed body over PARSED clauses; ("slop", (terms, n))
-    clauses score through phrase_slop_matches instead of
-    phrase_matches."""
+    clauses = parse_query_slop(q)
     if not clauses:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    n_clauses = len(clauses)
-    term_clauses = [c for kind, c in clauses if kind == "term"]
-    phrase_clauses = [c for kind, c in clauses if kind == "phrase"]
-    slop_clauses = [c for kind, c in clauses if kind == "slop"]
+    term_rows = [(ci, c[0], c[1]) for ci, (kind, c) in enumerate(clauses)
+                 if kind == "term"]
 
     pp, stats = build_positional(spark, docs, text_col, id_col)
     pp = pp.persist()
     persisted: list[DataFrame] = [pp]
     try:
-        scored_parts: list[DataFrame] = []
-        if term_clauses:
-            qdf = spark.createDataFrame(term_clauses,
-                                        "term string, boost double")
-            terms = sorted({t for t, _ in term_clauses})
+        parts: list[DataFrame] = []
+        if term_rows:
+            terms = sorted({t for _ci, t, _b in term_rows})
             ts = (pp.filter(F.col("term").isin(terms))
                   .groupBy("term").agg(F.count("*").alias("df")))
-            scored_parts.append(
+            parts.append(_scored(
                 pp.select("term", "doc_id", "tf", "dl")
-                .join(F.broadcast(qdf), "term")
-                .join(F.broadcast(ts), "term")
-                .crossJoin(F.broadcast(stats))
-                .withColumn("s", F.expr(SCORE_EXPR))
-                .select("doc_id", "s")
-            )
-        matchers = ([(phrase_matches, (terms,)) for terms in phrase_clauses]
-                    + [(phrase_slop_matches, (terms, slop))
-                       for terms, slop in slop_clauses])
-        for match, args in matchers:
-            m = match(pp, *args).persist()
+                .join(F.broadcast(spark.createDataFrame(
+                    term_rows, "clause_id int, term string, boost double")),
+                    "term")
+                .join(F.broadcast(ts), "term"), stats, [], ["clause_id"]))
+        for ci, (kind, c) in enumerate(clauses):
+            if kind == "term":
+                continue
+            m = (phrase_matches(pp, c) if kind == "phrase"
+                 else phrase_slop_matches(pp, *c)).persist()
             persisted.append(m)
             phrase_df = m.count()
             if phrase_df == 0:
                 return spark.createDataFrame([], TOPK_SCHEMA)  # AND dead
-            scored_parts.append(phrase_scores(m, phrase_df, stats))
-
-        scored = reduce(lambda a, b: a.unionByName(b), scored_parts)
-        # each clause emits at most one row per doc, so the row count
-        # per doc equals the number of matched clauses (same AND shape
-        # as SearchEngine._docs_scored)
-        d = (
-            scored.groupBy("doc_id")
-            .agg(F.sum("s").alias("score"), F.count("*").alias("nmatch"))
-            .filter(F.col("nmatch") == n_clauses)
-            .drop("nmatch")
-        )
-        return materialize_topk(spark, rank_topk(d, k, round_to))
+            parts.append(_phrase_scored(
+                m.select(F.lit(ci).alias("clause_id"), "doc_id", "dl", "tf",
+                         F.lit(phrase_df).alias("df")),
+                None, stats, ["clause_id"]))
+        return materialize_topk(spark, rank_topk(
+            _conj(reduce(lambda a, b: a.unionByName(b), parts), len(clauses)),
+            k, round_to))
     finally:
         for df in persisted:
             df.unpersist()
@@ -239,14 +212,20 @@ def _scored(rows: DataFrame, stats: DataFrame, lead: list[str],
             .select(*keys, "doc_id", "s"))
 
 
+def _term_stats(sources: list, terms: list[str]) -> DataFrame:
+    """[field,] term, df of ``terms`` in every source."""
+    return _union_tagged(sources, lambda art, _b: art.term_stats(terms))
+
+
 def _term_scored(sources: list, blocks: DataFrame, qdf: DataFrame,
-                 terms: list[str], stats: DataFrame,
+                 ts: DataFrame, stats: DataFrame,
                  keys: list[str]) -> DataFrame:
     """(*keys, doc_id, s) for the term clauses of ``qdf`` (keys, term,
     boost) over the given (field-tagged when fielded) block rows: each
     source's blocks decode without positions, its tombstones applied,
-    and score under the source's manifest-era df/N/avgdl — exact
-    whichever blocks were pruned."""
+    and score under the source's manifest-era df/N/avgdl (``ts`` =
+    _term_stats covering the clause terms) — exact whichever blocks
+    were pruned."""
     lead = _lead(sources)
     postings = reduce(lambda a, b: a.unionByName(b), [
         _tag(field, apply_deletes(decode_blocks(be.block_cols(
@@ -254,7 +233,6 @@ def _term_scored(sources: list, blocks: DataFrame, qdf: DataFrame,
             else blocks.filter(F.col("field") == field))), art.deletes())
             .select("term", "doc_id", "tf", "dl"))
         for field, art, _b in sources])
-    ts = _union_tagged(sources, lambda art, _b: art.term_stats(terms))
     return _scored(postings.join(F.broadcast(qdf), "term")
                    .join(F.broadcast(ts), [*lead, "term"]), stats, lead, keys)
 
@@ -265,6 +243,19 @@ def _phrase_scored(m: DataFrame, body_field: str | None, stats: DataFrame,
     rows: body boost x synthetic-term BM25 at clause boost 1.0."""
     return _scored(_tag(body_field, m.withColumn("boost", F.lit(1.0))),
                    stats, [] if body_field is None else ["field"], keys)
+
+
+def _conj(scored: DataFrame, n_clauses: int) -> DataFrame:
+    """(doc_id, score) of the docs matching every clause: duplicate
+    clauses carry distinct clause_ids and a term clause can emit one
+    row per field, so the DISTINCT clause count decides."""
+    return (
+        scored.groupBy("doc_id")
+        .agg(F.sum("s").alias("score"),
+             F.countDistinct("clause_id").alias("nmatch"))
+        .filter(F.col("nmatch") == n_clauses)
+        .drop("nmatch")
+    )
 
 
 def _doc_ranges(ids: list[int]) -> list[tuple[int, int]]:
@@ -308,25 +299,17 @@ def ladder_topk(spark: SparkSession, sources: list, body: tuple, q: str,
     def ret(df: DataFrame, stats: dict):
         return (df, stats) if return_stats else df
 
-    def conj(scored: DataFrame) -> DataFrame:
-        return (
-            scored.groupBy("doc_id")
-            .agg(F.sum("s").alias("score"),
-                 F.countDistinct("clause_id").alias("nmatch"))
-            .filter(F.col("nmatch") == n_clauses)
-            .drop("nmatch")
-        )
-
     empty = spark.createDataFrame([], TOPK_SCHEMA)
     if not clauses:
         return ret(empty, {"blocks_total": 0, "blocks_decoded": 0})
     if not pos:
         stats = _source_stats(sources)
+        ts = _term_stats(sources, tc_terms)
 
         def score(blocks: DataFrame, rt: int | None) -> DataFrame:
-            return rank_topk(conj(_term_scored(
-                sources, blocks, qdf, tc_terms, stats, ["clause_id"])), k,
-                rt)
+            return rank_topk(_conj(_term_scored(
+                sources, blocks, qdf, ts, stats, ["clause_id"]), n_clauses),
+                k, rt)
 
         return ret(*block_max_wand(
             spark, sources, [(t, b) for _ci, t, b in term_rows], score,
@@ -334,10 +317,17 @@ def ladder_topk(spark: SparkSession, sources: list, body: tuple, q: str,
 
     lead = _lead(sources)
     body_field, body_art, _boost = body
-    p_terms = sorted({t for _ci, ts, _s in pos for t in ts})
-    pblocks = _positional_blocks(body, p_terms)
+    p_terms = sorted({t for _ci, pt, _s in pos for t in pt})
+    all_terms = sorted(set(p_terms) | set(tc_terms))
+    # every artifact frame is read ONCE per call (creating one lists its
+    # partition dirs in a Spark job): the body blocks serve both clause
+    # kinds, the collected term stats also score the term clauses
+    body_blocks = _positional_blocks(body, all_terms)
+    pblocks = (body_blocks.filter(F.col("term").isin(p_terms))
+               if term_rows else body_blocks)
     term_blocks = (_union_tagged(sources, lambda art, _b: be.block_cols(
-        art.blocks(tc_terms))) if term_rows else None)
+        body_blocks.filter(F.col("term").isin(tc_terms)) if art is body_art
+        else art.blocks(tc_terms))) if term_rows else None)
     totals = [_tag(body_field, be.block_cols(pblocks))] + (
         [term_blocks] if term_rows else [])
     decoded: list[DataFrame] = []
@@ -362,8 +352,8 @@ def ladder_topk(spark: SparkSession, sources: list, body: tuple, q: str,
     seen: set[str] = set()
     stat_sources = sources if term_rows else [body]
     stats = _source_stats(stat_sources)
-    for r in _union_tagged(stat_sources, lambda art, _b: art.term_stats(
-            sorted(set(p_terms) | set(tc_terms)))).collect():
+    ts = _term_stats(stat_sources, all_terms)
+    for r in ts.collect():
         seen.add(r["term"])
         if body_field is None or r["field"] == body_field:
             body_df[r["term"]] = int(r["df"])
@@ -411,25 +401,15 @@ def ladder_topk(spark: SparkSession, sources: list, body: tuple, q: str,
                       else be.term_ranges(pblocks, rarest(pos[0][1])))
             need = be.overlap_semi(term_blocks, ranges)
             decoded.append(need)
-            parts.append(_term_scored(sources, need, qdf, tc_terms, stats,
+            parts.append(_term_scored(sources, need, qdf, ts, stats,
                                       ["clause_id"]))
         out = materialize_topk(spark, rank_topk(
-            conj(reduce(lambda a, b: a.unionByName(b), parts)), k,
-            round_to))
+            _conj(reduce(lambda a, b: a.unionByName(b), parts), n_clauses),
+            k, round_to))
         return ret(out, block_stats())
     finally:
         for df in persisted:
             df.unpersist()
-
-
-# greedy ordered-window chain (index/positions.phrase_slop_matches) with
-# the window bound w as a column, so different slops share one plan
-_SLOP_CHAIN = (
-    "size(filter(q0, start -> aggregate({arrs}, start, "
-    "(acc, arr) -> CASE WHEN acc < 0 THEN -1 "
-    "ELSE coalesce(array_min(filter(arr, x -> x > acc)), -1) END, "
-    "acc -> acc >= 0 AND acc - start <= w)))"
-)
 
 
 def _chain_matches(rows: DataFrame, members: list, n: int,
@@ -444,17 +424,13 @@ def _chain_matches(rows: DataFrame, members: list, n: int,
     rows = rows.select(*keys, "doc_id", "dl", *[
         F.col("sl")[i]["positions"].alias(f"q{i}") for i in range(n)])
     if exact:
-        # NB: single-parameter lambda — F.transform binds a second
-        # parameter to the element INDEX
-        tf = F.size(reduce(lambda acc, i: F.array_intersect(
-            acc, F.transform(f"q{i}", lambda p: p - F.lit(i))),
-            range(1, n), F.col("q0")))
+        tf = phrase_freq([F.col("q0")] + [shifted(f"q{i}", i)
+                                          for i in range(1, n)])
     else:
         rows = rows.join(F.broadcast(rows.sparkSession.createDataFrame(
             [(qi, ci, w) for qi, ci, _t, w in members],
             "query_id int, clause_id int, w int")), keys)
-        tf = F.expr(_SLOP_CHAIN.format(arrs="array(" + ", ".join(
-            f"q{i}" for i in range(1, n)) + ")"))
+        tf = slop_chain(n, "w")
     return (rows.withColumn("tf", tf.cast("long"))
             .filter(F.col("tf") > 0)
             .select(*keys, "doc_id", "dl", "tf"))
@@ -491,7 +467,7 @@ def ladder_multi_topk(spark: SparkSession, sources: list, body: tuple,
                 art.blocks(terms))),
             spark.createDataFrame(term_rows, "query_id int, clause_id int, "
                                   "term string, boost double"),
-            terms, stats, keys))
+            _term_stats(sources, terms), stats, keys))
     if by_len:
         body_field, body_art, _boost = body
         pblocks = _positional_blocks(body, sorted(

@@ -38,12 +38,19 @@ def query_mode(spark: SparkSession, shuffle_partitions: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
+def local_cpus() -> int:
+    """Local Spark parallelism: ``SPARK_GRAFT_CPUS`` when set, else the
+    cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "prosearch-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # one-ish partition per core locally; on a real cluster this is

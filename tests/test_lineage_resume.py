@@ -111,12 +111,14 @@ def test_crash_resume_positional_with_fast_fields(spark, corpus, tmp_path):
     assert b.verify_content_sha()
 
     # phrase query over the resumed artifact == over the one-shot one
-    pa = BlockSearchEngine(spark, art).phrase_topk("spark shuffle", 5,
-                                                   round_to=6).collect()
-    pr = BlockSearchEngine(spark, ref).phrase_topk("spark shuffle", 5,
-                                                   round_to=6).collect()
+    from prosearch_spark.query.mixed import mixed_topk
+
+    pa = BlockSearchEngine(spark, art).mixed_topk('"spark shuffle"', 5,
+                                                  round_to=6).collect()
+    pr = mixed_topk(spark, docs, '"spark shuffle"', 5, round_to=6,
+                    text_col="content").collect()
     assert [(x["doc_id"], x["score"]) for x in pa] == \
-        [(x["doc_id"], x["score"]) for x in pr]
+        [(x["doc_id"], x["score"]) for x in pr] and pa
     # fast field carried into doc_stats
     assert "n_chars" in art.doc_stats().columns
 

@@ -7,9 +7,9 @@ import pytest
 from prosearch_spark.index.build import build_index
 from prosearch_spark.index.positions import (
     phrase_matches,
-    phrase_topk,
     positional_postings,
 )
+from prosearch_spark.query.mixed import mixed_topk
 
 
 @pytest.fixture(scope="module")
@@ -50,9 +50,7 @@ def test_phrase_freq(spark, tiny, phrase, expected):
 
 
 def test_phrase_topk_ordering(spark, tiny):
-    pp = positional_postings(tiny, text_col="text")
-    stats = build_index(tiny, text_col="text").stats
-    res = phrase_topk(spark, pp, stats, "alpha beta", 10).collect()
+    res = mixed_topk(spark, tiny, '"alpha beta"', 10).collect()
     # doc 0 has phrase_freq 2 -> highest score
     assert res[0]["doc_id"] == 0
     assert {r["doc_id"] for r in res} == {0, 1, 3}
@@ -79,14 +77,13 @@ def test_positional_artifact_roundtrip(spark, tiny, tmp_path):
     assert decoded == logical
 
     blk = BlockSearchEngine(spark, art)
-    pp = positional_postings(tiny, text_col="text")
-    stats = build_index(tiny, text_col="text").stats
-    for phrase in ["alpha beta", "gamma gamma", "beta alpha beta"]:
+    for phrase in ['"alpha beta"', '"gamma gamma"', '"beta alpha beta"',
+                   '"alpha beta"~1']:
         a = [(r["doc_id"], r["score"])
-             for r in blk.phrase_topk(phrase, 10).collect()]
+             for r in blk.mixed_topk(phrase, 10).collect()]
         b = [(r["doc_id"], r["score"])
-             for r in phrase_topk(spark, pp, stats, phrase, 10).collect()]
-        assert a == b, phrase
+             for r in mixed_topk(spark, tiny, phrase, 10).collect()]
+        assert a == b and a, phrase
 
 
 def test_positional_artifact_upsert_and_merge(spark, tiny, tmp_path):
@@ -107,8 +104,12 @@ def test_positional_artifact_upsert_and_merge(spark, tiny, tmp_path):
     assert store is not None
     ids = {r["doc_id"] for r in store.collect()}
     assert 0 not in ids and 1 in ids
-    m = BlockSearchEngine(spark, art3).phrase_topk("zeta eta", 10).collect()
-    assert [r["doc_id"] for r in m] == [1]
+    m = [tuple(r) for r in BlockSearchEngine(spark, art3).mixed_topk(
+        '"zeta eta"', 10, round_to=6).collect()]
+    assert [r[1] for r in m] == [1]
+    live = docs.filter("doc_id != 0")
+    assert m == [tuple(r) for r in mixed_topk(
+        spark, live, '"zeta eta"', 10, round_to=6).collect()]
 
 
 def test_phrase_brute_force_parity(spark, corpus):
@@ -200,20 +201,30 @@ def test_phrase_prefix_matches_union(spark, tiny):
         phrase_prefix_matches(pp, [], ["beta"])
 
 
-def test_phrase_prefix_topk_exact_phrase_degenerate(spark, tiny):
+def test_phrase_prefix_topk_exact_phrase_degenerate(spark, tiny, tmp_path):
     """A prefix expanding to exactly one term scores identically to
-    the exact phrase (same synthetic-term df/tf)."""
-    from prosearch_spark.index.positions import (
-        phrase_prefix_topk,
-        phrase_topk,
-    )
+    the exact phrase (same synthetic-term df/tf) — over the flat
+    postings and through the committed artifact's adapter."""
+    from pyspark.sql import functions as F
+
+    from prosearch_spark.index.artifact import save_index
+    from prosearch_spark.index.positions import phrase_prefix_topk
+    from prosearch_spark.query.block_engine import BlockSearchEngine
 
     pp = positional_postings(tiny, text_col="text")
     stats = build_index(tiny, text_col="text").stats
     a = [(r["doc_id"], r["score"])
-         for r in phrase_prefix_topk(spark, pp, stats, "alpha", "b",
-                                     10, round_to=6).collect()]
+         for r in phrase_prefix_topk(
+             spark, lambda _terms: pp, stats,
+             pp.groupBy("term").agg(F.count("*").alias("df")), "alpha",
+             "b", 10, round_to=6).collect()]
     b = [(r["doc_id"], r["score"])
-         for r in phrase_topk(spark, pp, stats, "alpha beta",
-                              10, round_to=6).collect()]
+         for r in mixed_topk(spark, tiny, '"alpha beta"', 10,
+                             round_to=6).collect()]
     assert a == b and len(a) == 3
+    art = save_index(spark, tiny, str(tmp_path / "ppidx"), text_col="text",
+                     with_positions=True)
+    c = [(r["doc_id"], r["score"])
+         for r in BlockSearchEngine(spark, art).phrase_prefix_topk(
+             "alpha", "b", 10, round_to=6).collect()]
+    assert c == b

@@ -600,11 +600,7 @@ def test_fielded_multi_topk_or_equals_per_query(spark, corpus, tmp_path):
     equals the single-query fielded topk_or at the same min_match
     (DISTINCT-clause counting preserved through the batch)."""
     from prosearch_spark.index.artifact import save_fielded_index
-    from prosearch_spark.query.fielded import (
-        FieldedBlockSearchEngine,
-        FieldedSearchEngine,
-        fielded_index_from_artifacts,
-    )
+    from prosearch_spark.query.fielded import FieldedBlockSearchEngine
 
     docs = corpus.select(
         "doc_id",
@@ -624,9 +620,7 @@ def test_fielded_multi_topk_or_equals_per_query(spark, corpus, tmp_path):
             got.setdefault(r["query_id"], []).append(
                 (r["rank"], r["doc_id"], r["score"]))
         for qi, q in enumerate(queries):
-            idx = fielded_index_from_artifacts(arts, q)
-            single = FieldedSearchEngine(spark, idx).topk_or(
-                q, 6, round_to=6, min_match=mm)
+            single = be.topk_or(q, 6, round_to=6, min_match=mm)
             want = [(r["rank"], r["doc_id"], r["score"]) for r in
                     single.collect()]
             assert got.get(qi, []) == want, (mm, q)
@@ -742,25 +736,19 @@ def test_phrase_slop_blocks_matches_flat(spark, tmp_path):
     the flat positional build (physical layout must not change
     results)."""
     from prosearch_spark.index.artifact import save_index
-    from prosearch_spark.index.build import build_index
-    from prosearch_spark.index.positions import (
-        phrase_slop_topk,
-        positional_postings,
-    )
     from prosearch_spark.query.block_engine import BlockSearchEngine
+    from prosearch_spark.query.mixed import mixed_topk
 
     texts = [f"join x hash scan {'pad ' * (i % 3)}join hash" for i in
              range(12)] + ["scan join x x hash", "hash join"]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    pp = positional_postings(docs, text_col="text")
-    stats = build_index(docs, text_col="text").stats
-    flat = [tuple(r) for r in phrase_slop_topk(
-        spark, pp, stats, "join hash", 2, 10, round_to=6).collect()]
+    flat = [tuple(r) for r in mixed_topk(
+        spark, docs, '"join hash"~2', 10, round_to=6).collect()]
     art = save_index(spark, docs, str(tmp_path / "pos_art"),
                      text_col="text", with_positions=True)
     blocks = [tuple(r) for r in BlockSearchEngine(spark, art)
-              .phrase_slop_topk("join hash", 2, 10, round_to=6).collect()]
+              .mixed_topk('"join hash"~2', 10, round_to=6).collect()]
     assert blocks == flat and len(flat) > 0
 
 
@@ -799,8 +787,9 @@ def test_parse_query_slop_grammar():
 
 def test_mixed_slop_topk_conjunction(spark):
     """'x "a b"~1' requires BOTH the term and the proximity clause;
-    slop-free queries reproduce mixed_topk exactly."""
-    from prosearch_spark.query.mixed import mixed_slop_topk, mixed_topk
+    the slop-free query keeps exact-phrase semantics and '~0' folds
+    to it."""
+    from prosearch_spark.query.mixed import mixed_topk
 
     texts = [
         "x a q b",      # both clauses (gap-1 chain)
@@ -811,15 +800,15 @@ def test_mixed_slop_topk_conjunction(spark):
     ]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    hits = mixed_slop_topk(spark, docs, 'x "a b"~1', 10, round_to=6)
+    hits = mixed_topk(spark, docs, 'x "a b"~1', 10, round_to=6)
     assert [r["doc_id"] for r in hits.collect()] == sorted([0, 2, 4],
         key=lambda d: (-hits.filter(F.col("doc_id") == d).collect()[0]["score"], d))
     assert {r["doc_id"] for r in hits.collect()} == {0, 2, 4}
     a = [tuple(r) for r in
-         mixed_slop_topk(spark, docs, 'x "a b"', 10, round_to=6).collect()]
-    b = [tuple(r) for r in
          mixed_topk(spark, docs, 'x "a b"', 10, round_to=6).collect()]
-    assert a == b
+    b = [tuple(r) for r in
+         mixed_topk(spark, docs, 'x "a b"~0', 10, round_to=6).collect()]
+    assert {r[1] for r in a} == {2, 4} and a == b
 
 
 # ---------------------------------------------------------------------------
@@ -950,10 +939,10 @@ def test_route_serves_slop_queries(spark, tmp_path):
     assert plan == "mixed_slop"
     assert {r["doc_id"] for r in hits.collect()} == {0, 2, 4}
     # the committed path matches the flat engine exactly
-    from prosearch_spark.query.mixed import mixed_slop_topk
+    from prosearch_spark.query.mixed import mixed_topk
     flat = [tuple(r) for r in
-            mixed_slop_topk(spark, docs, 'x "a b"~1', 10,
-                            round_to=6).collect()]
+            mixed_topk(spark, docs, 'x "a b"~1', 10,
+                       round_to=6).collect()]
     got = [tuple(r) for r in hits.collect()]
     assert got == flat
     # slop-free routing unchanged

@@ -408,11 +408,15 @@ def test_positional_stack_serves_phrase_and_mixed(spark, corpus, tmp_path):
          for r in want.mixed_topk(q, 10, round_to=6).collect()]
     assert a == b and len(a) > 0
 
+    from prosearch_spark.query.mixed import mixed_topk
+
     a = [(r["doc_id"], r["score"])
-         for r in got.phrase_topk("spark shuffle", 10, round_to=6).collect()]
+         for r in got.mixed_topk('"spark shuffle"', 10,
+                                 round_to=6).collect()]
     b = [(r["doc_id"], r["score"])
-         for r in want.phrase_topk("spark shuffle", 10, round_to=6).collect()]
-    assert a == b
+         for r in mixed_topk(spark, corpus, '"spark shuffle"', 10,
+                             round_to=6, text_col="content").collect()]
+    assert a == b and len(a) > 0
 
 
 def test_manifest_total_dl_exact_and_seal_fallback(spark, corpus, tmp_path):
