@@ -36,6 +36,7 @@ import json
 import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -251,53 +252,80 @@ class IndexArtifact:
 
     def merge(self, out_path: str) -> "IndexArtifact":
         """B6: full merge — physically apply tombstones, recompute
-        stats, rewrite blocks compacted (merge.rs:18-31 + GC).
+        stats, rewrite blocks compacted (merge.rs:18-31 + GC): the
+        one-artifact case of :func:`merge_artifacts`.
 
         ``out_path`` must differ from the current path (Spark cannot
         overwrite parquet it is reading; generational dirs are the
         snapshot-commit analog)."""
         if os.path.abspath(out_path) == os.path.abspath(self.path):
             raise ValueError("merge requires a new generation path")
-        # persist: stats aggregations + encode_blocks' range sampling
-        # would otherwise re-decode the whole index ~5x
-        alive = self.postings(None).persist()  # tombstones applied
-        try:
-            # doc_stats from the PERSISTED table minus tombstones, NOT
-            # from alive postings: the stored table carries zero-token
-            # docs (dl=0) which have no postings, and n_docs/avgdl must
-            # keep the ONE definition shared by every commit path
-            # (n_docs = corpus docs, incl. token-less ones).
-            doc_stats = self.doc_stats()
-            _deletes = self.deletes()
-            if _deletes is not None:
-                doc_stats = doc_stats.join(F.broadcast(_deletes), "doc_id",
-                                           "left_anti")
-            agg = doc_stats.agg(
-                F.count("*").alias("n"), F.sum("dl").alias("total")
-            ).collect()[0]
-            n_docs = int(agg["n"] or 0)
-            avgdl = (agg["total"] or 0) / n_docs if n_docs else 0.0
-            # carry the doc store forward, minus tombstoned docs;
-            # filtered against DOC_STATS-minus-tombstones, not alive
-            # postings: a zero-token doc has no postings but still
-            # exists in doc_stats/n_docs, and its stored fields must
-            # survive. Written inside _write_artifact BEFORE the
-            # manifest.
-            store = self.doc_store()
-            if store is not None:
-                store = store.join(doc_stats.select("doc_id"),
-                                   "doc_id", "left_semi")
-            return _write_artifact(
-                self.spark, out_path, alive, doc_stats,
-                n_docs=n_docs, avgdl=avgdl,
-                n_buckets=self.n_buckets, analyzer=self.manifest["analyzer"],
-                doc_store=store,
-                record_basic=self.manifest.get("record_basic", False),
-                fast_fields=self.manifest.get("fast_fields") or None,
-                total_dl=int(agg["total"] or 0),
-            )
-        finally:
-            alive.unpersist()
+        return merge_artifacts(self.spark, [self], out_path)
+
+
+def merge_artifacts(spark: SparkSession, arts: list[IndexArtifact],
+                    out_path: str) -> IndexArtifact:
+    """Rewrite ``arts`` as ONE artifact at ``out_path`` — the merge body
+    of both IndexArtifact.merge and the segment merge policy: the union
+    of each artifact's alive postings, doc_stats and doc store (each
+    minus that artifact's own tombstones — an upserted doc's dead old
+    version shares its doc_id with its live re-add elsewhere), with
+    n_docs / avgdl / total_dl recomputed as exact integer sums over the
+    surviving doc_stats rows (the ONE definition every commit path
+    shares: zero-token docs have no postings but still count)."""
+    # the merged manifest copies arts[0]'s schema knobs — refuse a
+    # heterogeneous set (mixed analyzers/bucket counts would merge into
+    # an artifact whose manifest misdescribes part of its data: wrong
+    # bucket routing / tf semantics — r3 ADVICE)
+    keys = {
+        (a.n_buckets, a.manifest["analyzer"],
+         bool(a.manifest.get("record_basic", False)),
+         tuple(sorted((a.manifest.get("fast_fields") or {}).items())))
+        for a in arts
+    }
+    if len(keys) > 1:
+        raise ValueError(
+            "merge candidates are not uniform on (n_buckets, "
+            f"analyzer, record_basic, fast_fields): {sorted(keys)}")
+
+    # persist: stats aggregations + encode_blocks' range sampling
+    # would otherwise re-decode the inputs ~5x
+    postings = reduce(lambda a, b: a.unionByName(b),
+                      [a.postings(None) for a in arts]).persist()
+    try:
+        doc_stats = [a.doc_stats() for a in arts]
+        dels = [a.deletes() for a in arts]
+
+        def alive(frames: list[DataFrame]) -> DataFrame:
+            return reduce(lambda a, b: a.unionByName(b), [
+                df if d is None
+                else df.join(F.broadcast(d), "doc_id", "left_anti")
+                for df, d in zip(frames, dels)])
+
+        doc_stats = alive(doc_stats)
+        agg = doc_stats.agg(
+            F.count("*").alias("n"), F.sum("dl").alias("total")
+        ).collect()[0]
+        n_docs = int(agg["n"] or 0)
+        avgdl = (agg["total"] or 0) / n_docs if n_docs else 0.0
+        # carry the doc stores forward (minus tombstoned rows) when
+        # every input has one; written inside _write_artifact BEFORE
+        # the manifest
+        stores = [a.doc_store() for a in arts]
+        store = (alive(stores) if all(st is not None for st in stores)
+                 else None)
+        return _write_artifact(
+            spark, out_path, postings, doc_stats,
+            n_docs=n_docs, avgdl=avgdl,
+            n_buckets=arts[0].n_buckets,
+            analyzer=arts[0].manifest["analyzer"],
+            doc_store=store,
+            record_basic=arts[0].manifest.get("record_basic", False),
+            fast_fields=arts[0].manifest.get("fast_fields") or None,
+            total_dl=int(agg["total"] or 0),
+        )
+    finally:
+        postings.unpersist()
 
 
 def save_index(spark: SparkSession, docs: DataFrame, path: str,

@@ -16,11 +16,10 @@ per generation; this module adds the real segment stack:
                                    build performs — scores bit-match)
     <root>/segments/seg-<n>/       one IndexArtifact each (immutable)
 
-Commit = save_index into a fresh seg dir, then atomically rewrite
-SEGMENTS.json (rename). A crash before the pointer publish leaves the
-previous view whole — the same atomic-publish rule as the single
-artifact's manifest. On a real deployment the pointer is an Iceberg
-snapshot; segment dirs are data files.
+Commit = save_index into a fresh seg dir, then the pointer swap of the
+shared stack lifecycle (index/stack.py: history, gc, seal-once). On a
+real deployment the pointer is an Iceberg snapshot; segment dirs are
+data files.
 
 Query semantics: postings are the UNION over alive segments
 (bucket/term-pruned per segment); df sums per term; N and total doc
@@ -37,7 +36,6 @@ readers consistent.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import reduce
 
@@ -45,90 +43,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prosearch_spark.index.artifact import (
+    MANIFEST,
     IndexArtifact,
-    _write_artifact,
+    merge_artifacts,
     save_index,
 )
 from prosearch_spark.index.build import InvertedIndex
-from prosearch_spark.index.locks import exclusive_writer_lock
-
-POINTER = "SEGMENTS.json"
+from prosearch_spark.index.stack import SegmentStack, seg_tag
 
 
-class SegmentedIndex:
+class SegmentedIndex(SegmentStack):
     """A stack of immutable committed segments under one root."""
+
+    POINTER = "SEGMENTS.json"
+    COMPLETE = MANIFEST
 
     def __init__(self, spark: SparkSession, root: str,
                  merge_factor: int = 8):
         self.spark = spark
-        self.root = root
         self.merge_factor = merge_factor
-        self._lock_held = [False]  # reentrancy cell (see locks.py)
-        os.makedirs(os.path.join(root, "segments"), exist_ok=True)
-        if not os.path.exists(os.path.join(root, POINTER)):
-            self._publish([], gen=0)
-
-    # -- pointer ---------------------------------------------------------------
-
-    def _pointer(self) -> dict:
-        with open(os.path.join(self.root, POINTER)) as f:
-            return json.load(f)
-
-    def _publish(self, segs: list[str], gen: int) -> None:
-        payload = {"segments": segs, "gen": gen}
-        tmp = os.path.join(self.root, POINTER + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        # append-only snapshot history FIRST, current pointer last: a
-        # crash between the two leaves the current pointer authoritative
-        # and at worst an orphan history file for a gen that never
-        # published (harmless — as_of reads are explicit by gen)
-        hdir = os.path.join(self.root, "history")
-        os.makedirs(hdir, exist_ok=True)
-        with open(os.path.join(hdir, f"SEGMENTS-{gen:06d}.json"),
-                  "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, os.path.join(self.root, POINTER))
-
-    # -- writer lock (Tantivy INDEX_WRITER_LOCK analog) ------------------------
-
-    def writer_lock(self):
-        """Exclusive-writer guard (see locks.exclusive_writer_lock:
-        flock, kernel-released on holder death, reentrant per
-        instance). Commit/adopt/upsert/merge/gc acquire it implicitly;
-        hold it explicitly around multi-step admin sequences."""
-        return exclusive_writer_lock(self.root, self._lock_held)
+        super().__init__(root)
 
     def segments(self) -> list[IndexArtifact]:
-        p = self._pointer()
-        return [
-            IndexArtifact.load(self.spark,
-                               os.path.join(self.root, "segments",
-                                            e["name"]))
-            for e in p["segments"]
-        ]
-
-    def has_segment(self, name: str) -> bool:
-        return any(e["name"] == name
-                   for e in self._pointer()["segments"])
+        return [IndexArtifact.load(self.spark, self._seg_path(n))
+                for n in self.segment_names()]
 
     # -- commit ----------------------------------------------------------------
-
-    def _seal(self, art: IndexArtifact, name: str,
-              meta: dict | None = None) -> IndexArtifact:
-        """Publish an already-written segment dir: append its pointer
-        entry (exact integer doc/length totals) and swap the pointer."""
-        p = self._pointer()
-        total = art.manifest.get("total_dl")
-        if total is None:
-            # artifact written before manifests recorded the exact
-            # integer sum(dl) — recompute it (one doc_stats scan)
-            agg = art.doc_stats().agg(F.sum("dl").alias("t")).collect()[0]
-            total = int(agg["t"] or 0)
-        entry = {"name": name, "n_docs": art.manifest["n_docs"],
-                 "total_dl": int(total), **(meta or {})}
-        self._publish(p["segments"] + [entry], p["gen"] + 1)
-        return art
 
     def commit(self, docs: DataFrame, name: str | None = None,
                meta: dict | None = None,
@@ -146,38 +86,34 @@ class SegmentedIndex:
         """
         with self.writer_lock():
             if name is None:
-                # skip auto-generated names whose dir already exists: a
-                # crash between save_index and _seal leaves an orphan
-                # dir at gen+1 while gen is unchanged, and save_index
-                # refuses an existing manifest — without the skip every
-                # further default-named commit would wedge until a
-                # manual gc()/adopt() (r3 ADVICE finding). The orphan
-                # stays adopt()/gc() fodder either way.
-                n = self._pointer()["gen"]
-                while True:
-                    n += 1
-                    name = f"seg-{n:06d}"
-                    if not os.path.exists(
-                            os.path.join(self.root, "segments", name)):
-                        break
-            art = save_index(self.spark, docs,
-                             os.path.join(self.root, "segments", name),
+                name = self._next_name()
+            art = save_index(self.spark, docs, self._seg_path(name),
                              **save_kwargs)
             if store_cols:
                 art.write_doc_store(
                     docs, store_cols,
                     id_col=save_kwargs.get("id_col", "doc_id"))
-            return self._seal(art, name, meta)
+            return self.adopt(name, meta)
 
     def adopt(self, name: str, meta: dict | None = None) -> IndexArtifact:
-        """Complete a commit that crashed between segment write and
-        pointer publish: the dir holds a full manifest but no pointer
-        entry — load it and publish. No-op-safe only when the caller
-        has checked ``has_segment`` first."""
+        """Publish an already-written segment dir: append its pointer
+        entry (exact integer doc/length totals, plus ``meta``) and swap
+        the pointer. Also completes a commit that crashed between
+        segment write and pointer publish; ``seal_once`` is the entry
+        that first checks the segment is not already published."""
         with self.writer_lock():
-            art = IndexArtifact.load(
-                self.spark, os.path.join(self.root, "segments", name))
-            return self._seal(art, name, meta)
+            art = IndexArtifact.load(self.spark, self._seg_path(name))
+            p = self._pointer()
+            total = art.manifest.get("total_dl")
+            if total is None:
+                # artifact written before manifests recorded the exact
+                # integer sum(dl) — recompute it (one doc_stats scan)
+                agg = art.doc_stats().agg(F.sum("dl").alias("t")).collect()[0]
+                total = int(agg["t"] or 0)
+            entry = {"name": name, "n_docs": art.manifest["n_docs"],
+                     "total_dl": int(total), **(meta or {})}
+            self._publish(p["segments"] + [entry], p["gen"] + 1)
+            return art
 
     def upsert(self, docs: DataFrame, id_col: str = "doc_id",
                name: str | None = None, meta: dict | None = None,
@@ -194,15 +130,10 @@ class SegmentedIndex:
         refresh on compaction (delete_docs NOTE, artifact.py).
         """
         with self.writer_lock():
-            return self._upsert_locked(docs, id_col, name, meta,
-                                       **save_kwargs)
-
-    def _upsert_locked(self, docs, id_col, name, meta,
-                       **save_kwargs) -> IndexArtifact:
-        ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        self._tombstone(ids)
-        return self.commit(docs, name=name, meta=meta,
-                           id_col=id_col, **save_kwargs)
+            self._tombstone(
+                docs.select(F.col(id_col).cast("long").alias("doc_id")))
+            return self.commit(docs, name=name, meta=meta,
+                               id_col=id_col, **save_kwargs)
 
     def _tombstone(self, ids: DataFrame) -> None:
         """Mark ``ids`` deleted in every alive segment that holds them.
@@ -218,21 +149,16 @@ class SegmentedIndex:
         segs = self.segments()
         if not segs:
             return
-        names = [e["name"] for e in self._pointer()["segments"]]
+        names = self.segment_names()
         uniform = len({
             tuple(sorted((s.manifest.get("fast_fields") or {})
                          .items()))
             for s in segs}) == 1
         if uniform:
             tagged = self.spark.read.parquet(*[
-                os.path.join(self.root, "segments", n, "doc_stats")
+                os.path.join(self._seg_path(n), "doc_stats")
                 for n in names
-            ]).select(
-                "doc_id",
-                F.regexp_extract(F.col("_metadata.file_path"),
-                                 r"segments/([^/]+)/doc_stats",
-                                 1).alias("seg"),
-            )
+            ]).select("doc_id", seg_tag("doc_stats"))
         else:
             tagged = reduce(
                 lambda a, b: a.unionByName(b),
@@ -291,76 +217,20 @@ class SegmentedIndex:
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
 
-    def gc(self, retain_history: int = 0) -> list[str]:
-        """Remove segment dirs no longer referenced by the current
-        pointer (merged-away inputs, orphaned crash leftovers). A
-        deployment age-gates this behind its slowest reader's pointer;
-        here it is an explicit sweep, never run by commit/merge.
-
-        ``retain_history=N`` additionally keeps every segment
-        referenced by the last N recorded snapshots (Iceberg snapshot
-        expiry): those generations stay ``as_of``-readable; older
-        history files are pruned so the history listing matches what
-        is actually readable."""
-        import shutil
-
-        with self.writer_lock():
-            alive = {e["name"] for e in self._pointer()["segments"]}
-            gens = self.history()
-            keep_gens = gens[-retain_history:] if retain_history > 0 else []
-            for g in keep_gens:
-                with open(os.path.join(self.root, "history",
-                                       f"SEGMENTS-{g:06d}.json")) as f:
-                    alive |= {e["name"] for e in json.load(f)["segments"]}
-            for g in gens:
-                if g not in keep_gens and g != self._pointer()["gen"]:
-                    os.unlink(os.path.join(self.root, "history",
-                                           f"SEGMENTS-{g:06d}.json"))
-            segdir = os.path.join(self.root, "segments")
-            removed = []
-            for d in sorted(os.listdir(segdir)):
-                if d not in alive:
-                    shutil.rmtree(os.path.join(segdir, d))
-                    removed.append(d)
-            return removed
-
     # -- query view ------------------------------------------------------------
 
     def as_index(self, terms: list[str] | None = None) -> InvertedIndex:
-        """The union view: per-segment pruned postings unioned, df
-        summed per term, N / total-dl summed from the manifests —
+        """The union view as an InvertedIndex, read through
+        :meth:`as_artifact`: pruned postings unioned, df summed per
+        term, N / total-dl from the pointer's exact integer totals —
         BM25-identical to a single-artifact build of the same corpus.
-        A TOMBSTONED stack routes through the live artifact view so
-        df/n_docs/avgdl are the alive-only values — flat and block
-        engines agree, and both hash-match compact-then-query."""
-        segs = self.segments()
-        if not segs:
-            raise ValueError("no committed segments")
-        if any(s.deletes() is not None for s in segs):
-            v = self.as_artifact()
-            return InvertedIndex(postings=v.postings(terms),
-                                 term_stats=v.term_stats(terms),
-                                 stats=v.stats())
-        postings = reduce(
-            lambda a, b: a.unionByName(b),
-            [s.postings(terms) for s in segs],
-        )
-        term_stats = (
-            reduce(lambda a, b: a.unionByName(b),
-                   [s.term_stats(terms) for s in segs])
-            .groupBy("term").agg(F.sum("df").alias("df"))
-        )
-        p = self._pointer()
-        n_docs = sum(e["n_docs"] for e in p["segments"])
-        total_dl = sum(e["total_dl"] for e in p["segments"])
-        # exact integer sums -> the identical float division the
-        # single-artifact save performs
-        avgdl = total_dl / n_docs if n_docs else 0.0
-        stats = self.spark.createDataFrame(
-            [(n_docs, float(avgdl))], "n_docs long, avgdl double"
-        )
-        return InvertedIndex(postings=postings, term_stats=term_stats,
-                             stats=stats)
+        On a TOMBSTONED stack the view serves the alive-only values,
+        so flat and block engines agree and both hash-match
+        compact-then-query."""
+        v = self.as_artifact()
+        return InvertedIndex(postings=v.postings(terms),
+                             term_stats=v.term_stats(terms),
+                             stats=v.stats())
 
     def as_artifact(self) -> "SegmentedArtifactView":
         """Duck-typed IndexArtifact over the stack, so every
@@ -395,31 +265,15 @@ class SegmentedIndex:
     def _view_from_pointer(self, p: dict) -> "SegmentedArtifactView":
         if not p["segments"]:
             raise ValueError("no committed segments")
-        segs = []
-        for e in p["segments"]:
-            d = os.path.join(self.root, "segments", e["name"])
-            if not os.path.exists(os.path.join(d, "manifest.json")):
-                raise ValueError(
-                    f"segment {e['name']} of gen {p['gen']} no longer "
-                    "exists — gc() expired this snapshot (retain more "
-                    "history or re-read the current pointer)")
-            segs.append(IndexArtifact.load(self.spark, d))
+        names = [e["name"] for e in self._readable(p)["segments"]]
         return SegmentedArtifactView(
-            self.spark, segs, names=[e["name"] for e in p["segments"]],
+            self.spark,
+            [IndexArtifact.load(self.spark, self._seg_path(n))
+             for n in names], names=names,
             n_docs=sum(e["n_docs"] for e in p["segments"]),
             total_dl=sum(e["total_dl"] for e in p["segments"]))
 
     # -- snapshots (Iceberg time travel over the pointer history) --------------
-
-    def history(self) -> list[int]:
-        """Generations with a recorded snapshot, ascending."""
-        hdir = os.path.join(self.root, "history")
-        if not os.path.isdir(hdir):
-            return []
-        return sorted(
-            int(f[len("SEGMENTS-"):-len(".json")])
-            for f in os.listdir(hdir)
-            if f.startswith("SEGMENTS-") and f.endswith(".json"))
 
     def as_of(self, gen: int) -> "SegmentedArtifactView":
         """The stack AS OF generation ``gen`` — the Iceberg
@@ -436,14 +290,7 @@ class SegmentedIndex:
         (and delete_docs alone bumps no generation). This is the
         Lucene live-docs model, not Iceberg's snapshot-scoped delete
         files; pinned by test_snapshot_sees_later_tombstones."""
-        hfile = os.path.join(self.root, "history",
-                             f"SEGMENTS-{gen:06d}.json")
-        if not os.path.exists(hfile):
-            raise ValueError(
-                f"no snapshot recorded for gen {gen}; "
-                f"available: {self.history()}")
-        with open(hfile) as f:
-            return self._view_from_pointer(json.load(f))
+        return self._view_from_pointer(self._snapshot(gen))
 
     def topk(self, q: str, k: int = 10,
              round_to: int | None = None) -> DataFrame:
@@ -511,80 +358,20 @@ class SegmentedIndex:
         if not cand or len(cand) < 2:
             return False
         with self.writer_lock():
-            return self._merge_locked(cand)
-
-    def _merge_locked(self, cand: list[str]) -> bool:
-        p = self._pointer()
-        gen = p["gen"] + 1
-        name = f"seg-{gen:06d}"
-        cand_set = set(cand)
-        arts = [
-            IndexArtifact.load(self.spark,
-                               os.path.join(self.root, "segments", d))
-            for d in cand
-        ]
-        # the merged manifest copies arts[0]'s schema knobs — refuse a
-        # heterogeneous candidate set (mixed analyzers/bucket counts
-        # would merge into a segment whose manifest misdescribes part
-        # of its data: wrong bucket routing / tf semantics — r3 ADVICE)
-        keys = {
-            (a.n_buckets, a.manifest["analyzer"],
-             bool(a.manifest.get("record_basic", False)),
-             tuple(sorted((a.manifest.get("fast_fields") or {}).items())))
-            for a in arts
-        }
-        if len(keys) > 1:
-            raise ValueError(
-                "merge candidates are not uniform on (n_buckets, "
-                f"analyzer, record_basic, fast_fields): {sorted(keys)}")
-        postings = reduce(lambda a, b: a.unionByName(b),
-                          [a.postings(None) for a in arts]).persist()
-        try:
-            # doc_stats and doc stores minus each segment's tombstones
-            # (merge applies deletes physically, like artifact.merge);
-            # n_docs/avgdl recomputed from the surviving rows — the ONE
-            # definition. Per segment: an upserted doc's dead old
-            # version shares its doc_id with the live re-add.
-            def alive(a: IndexArtifact, df: DataFrame) -> DataFrame:
-                d = a.deletes()
-                if d is not None:
-                    df = df.join(F.broadcast(d), "doc_id", "left_anti")
-                return df
-
-            doc_stats = reduce(lambda a, b: a.unionByName(b),
-                               [alive(a, a.doc_stats()) for a in arts])
-            agg = doc_stats.agg(
-                F.count("*").alias("n"), F.sum("dl").alias("total")
-            ).collect()[0]
-            n_docs = int(agg["n"] or 0)
-            avgdl = (agg["total"] or 0) / n_docs if n_docs else 0.0
-            # carry doc stores forward (minus tombstoned rows) when
-            # every merged segment has one — mirrors artifact.merge
-            stores = [a.doc_store() for a in arts]
-            store = None
-            if all(st is not None for st in stores):
-                store = reduce(lambda a, b: a.unionByName(b),
-                               [alive(a, st) for a, st in zip(arts, stores)])
-            _write_artifact(
-                self.spark, os.path.join(self.root, "segments", name),
-                postings, doc_stats,
-                n_docs=n_docs, avgdl=avgdl,
-                n_buckets=arts[0].n_buckets,
-                analyzer=arts[0].manifest["analyzer"],
-                doc_store=store,
-                record_basic=arts[0].manifest.get("record_basic", False),
-                fast_fields=arts[0].manifest.get("fast_fields") or None,
-                total_dl=int(agg["total"] or 0),
-            )
-        finally:
-            postings.unpersist()
-        survivors = [e for e in p["segments"]
-                     if e["name"] not in cand_set] + [
-            {"name": name, "n_docs": n_docs,
-             "total_dl": int(agg["total"] or 0)}
-        ]
-        self._publish(survivors, gen)
-        return True
+            p = self._pointer()
+            name = self._next_name()
+            merged = merge_artifacts(
+                self.spark,
+                [IndexArtifact.load(self.spark, self._seg_path(d))
+                 for d in cand],
+                self._seg_path(name))
+            survivors = [e for e in p["segments"]
+                         if e["name"] not in cand] + [
+                {"name": name, "n_docs": merged.manifest["n_docs"],
+                 "total_dl": merged.manifest["total_dl"]}
+            ]
+            self._publish(survivors, p["gen"] + 1)
+            return True
 
     def force_merge(self) -> bool:
         """Compact ALL alive segments into one regardless of log
@@ -592,8 +379,7 @@ class SegmentedIndex:
         Physically applies every tombstone and refreshes n_docs/avgdl
         from the survivors, so post-merge BM25 stats equal a fresh
         single build over the logical corpus."""
-        return self.merge_once(
-            candidates=[e["name"] for e in self._pointer()["segments"]])
+        return self.merge_once(candidates=self.segment_names())
 
     def compact(self, max_rounds: int = 8,
                 size_by: str = "n_docs") -> int:
@@ -657,14 +443,6 @@ class SegmentedArtifactView:
     def _union(self, frames: list[DataFrame]) -> DataFrame:
         return reduce(lambda a, b: a.unionByName(b), frames)
 
-    @staticmethod
-    def _seg_tag(sub: str):
-        """Segment name from the scan's file path (the upsert probe's
-        trick, see SegmentedIndex.upsert) — tags multi-path reads
-        without storing a column."""
-        return F.regexp_extract(F.col("_metadata.file_path"),
-                                rf"segments/([^/]+)/{sub}", 1).alias("seg")
-
     def _bucket_read(self, sub: str,
                      terms: list[str] | None) -> DataFrame | None:
         """One multi-path scan over the segments' ``sub`` trees with
@@ -697,7 +475,7 @@ class SegmentedArtifactView:
             df = self._bucket_read("blocks", terms)
             if df is not None:
                 if self._del_map:
-                    df = df.withColumn("seg", self._seg_tag("blocks"))
+                    df = df.withColumn("seg", seg_tag("blocks"))
                 return df
         frames = [s.blocks(terms) for s in self._segments]
         if self._del_map:
@@ -751,7 +529,7 @@ class SegmentedArtifactView:
             from prosearch_spark.index.artifact import apply_deletes
 
             df = apply_deletes(
-                df.withColumn("seg", self._seg_tag("doc_stats")),
+                df.withColumn("seg", seg_tag("doc_stats")),
                 self.deletes())
         return df
 

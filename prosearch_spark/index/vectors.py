@@ -50,6 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prosearch_spark.index.stack import SegmentStack, seg_tag
 from prosearch_spark.ops.similarity import (
     _dot,
     _round_half_up,
@@ -60,7 +61,6 @@ from prosearch_spark.ops.similarity import (
 )
 
 MANIFEST = "vector_manifest.json"
-POINTER = "VSEGMENTS.json"
 
 
 def _l2sq_col(v, c: list[float]):
@@ -783,71 +783,23 @@ class VectorArtifact:
         )
 
 
-class VectorSegments:
-    """A tombstoned stack of immutable embedding segments."""
+class VectorSegments(SegmentStack):
+    """A tombstoned stack of immutable embedding segments. The pointer
+    also names the current ``deletes`` dir (round 6 — gc() swaps in a
+    compacted one; absent = ``deletes``); every publish carries it
+    forward unless gc passes a new one."""
+
+    POINTER = "VSEGMENTS.json"
+    COMPLETE = "_SUCCESS"  # the parquet writer's job-commit marker
 
     def __init__(self, spark: SparkSession, root: str,
                  id_col: str = "vec_id", vec_col: str = "embedding"):
         self.spark = spark
-        self.root = root
         self.id_col = id_col
         self.vec_col = vec_col
-        self._lock_held = [False]  # reentrancy cell (see locks.py)
-        os.makedirs(os.path.join(root, "segments"), exist_ok=True)
-        if not os.path.exists(os.path.join(root, POINTER)):
-            self._publish([], gen=0)
-
-    def writer_lock(self):
-        """One writer per vector stack (locks.exclusive_writer_lock:
-        flock, kernel-released on holder death, reentrant per
-        instance). commit/adopt/upsert acquire it implicitly."""
-        from prosearch_spark.index.locks import exclusive_writer_lock
-
-        return exclusive_writer_lock(self.root, self._lock_held)
-
-    # -- pointer ------------------------------------------------------------
-
-    def _pointer(self) -> dict:
-        with open(os.path.join(self.root, POINTER)) as f:
-            return json.load(f)
-
-    def _publish(self, segs: list[dict], gen: int,
-                 deletes: str | None = None) -> None:
-        """Swap the pointer, recording the snapshot FIRST (segments.py
-        order: a crash between the two leaves the current pointer
-        authoritative and at worst an orphan history file). The pointer
-        also names the current ``deletes`` dir (round 6 — gc() swaps in
-        a compacted one); ``deletes=None`` carries the current name
-        forward."""
-        if deletes is None:
-            ppath = os.path.join(self.root, POINTER)
-            if os.path.exists(ppath):
-                with open(ppath) as f:
-                    deletes = json.load(f).get("deletes", "deletes")
-            else:
-                deletes = "deletes"
-        payload = {"segments": segs, "gen": gen, "deletes": deletes}
-        tmp = os.path.join(self.root, POINTER + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        hdir = os.path.join(self.root, "history")
-        os.makedirs(hdir, exist_ok=True)
-        with open(os.path.join(hdir, f"VSEGMENTS-{gen:06d}.json"),
-                  "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, os.path.join(self.root, POINTER))
-
-    def has_segment(self, name: str) -> bool:
-        return any(e["name"] == name
-                   for e in self._pointer()["segments"])
-
-    def segment_names(self) -> list[str]:
-        return [e["name"] for e in self._pointer()["segments"]]
+        super().__init__(root)
 
     # -- commit / upsert ----------------------------------------------------
-
-    def _seg_path(self, name: str) -> str:
-        return os.path.join(self.root, "segments", name)
 
     def commit(self, emb: DataFrame, name: str | None = None) -> str:
         """Seal ``emb`` as a new immutable segment; vectors are fully
@@ -855,12 +807,7 @@ class VectorSegments:
         and the old view — adopt() completes it)."""
         with self.writer_lock():
             if name is None:
-                n = self._pointer()["gen"]
-                while True:
-                    n += 1
-                    name = f"seg-{n:06d}"
-                    if not os.path.exists(self._seg_path(name)):
-                        break
+                name = self._next_name()
             out = emb.select(
                 F.col(self.id_col).cast("long").alias("vec_id"),
                 F.col(self.vec_col).alias("embedding"),
@@ -890,11 +837,7 @@ class VectorSegments:
                 [], "seg string, vec_id long, embedding array<float>")
         return self.spark.read.parquet(*[
             self._seg_path(n) for n in names
-        ]).select(
-            F.regexp_extract(F.col("_metadata.file_path"),
-                             r"segments/([^/]+)/", 1).alias("seg"),
-            "vec_id", "embedding",
-        )
+        ]).select(seg_tag(), "vec_id", "embedding")
 
     def _deletes_dir(self) -> str:
         return os.path.join(self.root,
@@ -995,26 +938,11 @@ class VectorSegments:
             p = self._pointer()
             if not p["segments"]:
                 return None
-            gen = p["gen"]
-            while True:
-                gen += 1
-                name = f"seg-{gen:06d}"
-                if not os.path.exists(self._seg_path(name)):
-                    break
+            name = self._next_name()
             self.live().write.parquet(self._seg_path(name))
             n = int(self.spark.read.parquet(self._seg_path(name)).count())
             self._publish([{"name": name, "n_vectors": n}], p["gen"] + 1)
             return name
-
-    def history(self) -> list[int]:
-        """Generations with a recorded snapshot, ascending."""
-        hdir = os.path.join(self.root, "history")
-        if not os.path.isdir(hdir):
-            return []
-        return sorted(
-            int(f[len("VSEGMENTS-"):-len(".json")])
-            for f in os.listdir(hdir)
-            if f.startswith("VSEGMENTS-") and f.endswith(".json"))
 
     def as_of(self, gen: int) -> "VectorStackSnapshot":
         """The stack AS OF generation ``gen`` — the same time-travel
@@ -1025,75 +953,32 @@ class VectorSegments:
         removes segments the current pointer no longer holds;
         ``gc(retain_history=N)`` keeps the last N snapshots' segments
         alive for exactly this read."""
-        hfile = os.path.join(self.root, "history",
-                             f"VSEGMENTS-{gen:06d}.json")
-        if not os.path.exists(hfile):
-            raise ValueError(
-                f"no snapshot recorded for gen {gen}; "
-                f"available: {self.history()}")
-        with open(hfile) as f:
-            names = [e["name"] for e in json.load(f)["segments"]]
-        for n in names:
-            if not os.path.exists(self._seg_path(n)):
-                raise ValueError(
-                    f"segment {n} of gen {gen} no longer exists — gc() "
-                    "expired this snapshot (retain more history or "
-                    "re-read the current pointer)")
-        return VectorStackSnapshot(self, names)
+        return VectorStackSnapshot(
+            self, [e["name"] for e in self._snapshot(gen)["segments"]])
 
-    def gc(self, retain_history: int = 0) -> list[str]:
-        """Remove segment dirs no longer referenced by the current
-        pointer (merged-away inputs, orphaned crash leftovers);
-        ``retain_history=N`` keeps the segments of the last N recorded
-        snapshots as_of-readable and prunes older history files —
-        segments.gc semantics exactly.
-
-        Vector twist: tombstones live in ONE pointer-named delete dir
-        rather than per-segment files, so sweeping a segment also
-        COMPACTS the deletes — surviving rows are rewritten to a new
-        dir and the pointer swaps to it (crash-safe: the old dir stays
-        authoritative until the swap; after the swap it is dead
+    def _swept(self, p: dict, alive: set[str], removed: list[str]) -> None:
+        """gc()'s vector twist: tombstones live in ONE pointer-named
+        delete dir rather than per-segment files, so sweeping a segment
+        also COMPACTS the deletes — surviving rows are rewritten to a
+        new dir and the pointer swaps to it (crash-safe: the old dir
+        stays authoritative until the swap; after the swap it is dead
         weight and is removed). This closes the r5 'deletes/ appends
-        forever' growth: after force_merge + gc the delete set is
-        empty and the dir is gone."""
+        forever' growth: after force_merge + gc the delete set is empty
+        and the dir is gone."""
         import shutil
 
-        with self.writer_lock():
-            p = self._pointer()
-            alive = {e["name"] for e in p["segments"]}
-            gens = self.history()
-            keep_gens = gens[-retain_history:] if retain_history > 0 else []
-            for g in keep_gens:
-                with open(os.path.join(
-                        self.root, "history",
-                        f"VSEGMENTS-{g:06d}.json")) as f:
-                    alive |= {e["name"] for e in json.load(f)["segments"]}
-            for g in gens:
-                if g not in keep_gens and g != p["gen"]:
-                    os.unlink(os.path.join(self.root, "history",
-                                           f"VSEGMENTS-{g:06d}.json"))
-            segdir = os.path.join(self.root, "segments")
-            removed = []
-            for d in sorted(os.listdir(segdir)):
-                if d not in alive:
-                    shutil.rmtree(os.path.join(segdir, d))
-                    removed.append(d)
-            old_name = p.get("deletes", "deletes")
-            old_dir = os.path.join(self.root, old_name)
-            if removed and os.path.exists(old_dir):
-                kept = (self.spark.read.parquet(old_dir)
-                        .filter(F.col("seg").isin(sorted(alive))))
-                gen = p["gen"] + 1
-                new_name = f"deletes-{gen:06d}"
-                if kept.isEmpty():
-                    # publish a name whose dir does not exist — the
-                    # read side treats it as 'no deletes'
-                    self._publish(p["segments"], gen, deletes=new_name)
-                else:
-                    kept.write.parquet(os.path.join(self.root, new_name))
-                    self._publish(p["segments"], gen, deletes=new_name)
-                shutil.rmtree(old_dir)
-            return removed
+        old_dir = os.path.join(self.root, p.get("deletes", "deletes"))
+        if removed and os.path.exists(old_dir):
+            kept = (self.spark.read.parquet(old_dir)
+                    .filter(F.col("seg").isin(sorted(alive))))
+            gen = p["gen"] + 1
+            new_name = f"deletes-{gen:06d}"
+            # an empty survivor set publishes a name whose dir does not
+            # exist — the read side treats it as 'no deletes'
+            if not kept.isEmpty():
+                kept.write.parquet(os.path.join(self.root, new_name))
+            self._publish(p["segments"], gen, deletes=new_name)
+            shutil.rmtree(old_dir)
 
 
 class VectorStackSnapshot:

@@ -56,10 +56,8 @@ class SegmentedStreamingIndexer(_BatchSink):
     index.rs:191) and background merges compact them (merge.rs:18-31).
 
     Idempotency under at-least-once delivery: the segment dir name is
-    the batch_id. Re-delivered batch already in the pointer -> no-op;
-    segment fully written but crash hit before the pointer swap ->
-    adopt() completes the publish; otherwise the full upsert runs
-    (re-running the tombstone probe just appends duplicate tombstone
+    the batch_id, published exactly once by ``SegmentStack.seal_once``
+    (a re-run upsert's tombstone probe just appends duplicate tombstone
     rows — harmless under the read-side anti-join).
     """
 
@@ -131,24 +129,19 @@ class SegmentedStreamingIndexer(_BatchSink):
         """Seal one (possibly pre-filtered) batch as the batch_id's
         segment under the idempotency protocol above."""
         name = f"seg-b{batch_id:09d}"
-        if self.index.has_segment(name):
-            return
         kwargs = {}
         if self.skip_unchanged:
             batch = batch.withColumn(
                 "__sha", F.sha2(F.col(self.text_col), 256))
             kwargs["fast_fields"] = {self.SHA_COL: "__sha"}
-        seg_dir = os.path.join(self.index.root, "segments", name)
-        if os.path.exists(os.path.join(seg_dir, "manifest.json")):
-            self.index.adopt(name, meta=meta)
-        else:
-            self.index.upsert(batch, name=name,
-                              meta=meta,
-                              text_col=self.text_col, id_col=self.id_col,
-                              analyzer=self.analyzer,
-                              lang_col=self.lang_col,
-                              n_buckets=self.n_buckets, **kwargs)
-        if self.compact_inline:
+        sealed = self.index.seal_once(
+            name, lambda: self.index.upsert(
+                batch, name=name, meta=meta, text_col=self.text_col,
+                id_col=self.id_col, analyzer=self.analyzer,
+                lang_col=self.lang_col, n_buckets=self.n_buckets,
+                **kwargs),
+            meta=meta)
+        if sealed and self.compact_inline:
             # a real deployment runs this loop in the background; the
             # pointer-swap protocol makes either placement safe. When
             # no bucket holds merge_factor segments this is a pointer
@@ -175,7 +168,7 @@ class CuratedSegmentedStreamingIndexer(SegmentedStreamingIndexer):
 
     Idempotency is inherited: the funnel is deterministic, so a
     re-delivered batch re-derives the same survivor set and hits the
-    same has_segment/adopt protocol. Per-stage drop counts land in the
+    same seal_once protocol. Per-stage drop counts land in the
     segment meta when ``track_drops`` (one tiny groupBy per batch).
     """
 
@@ -249,10 +242,8 @@ class FieldedSegmentedStreamingIndexer(_BatchSink):
     fielded WAND/mixed continuously, no compaction barrier.
 
     Idempotency under at-least-once delivery is PER FIELD, same
-    protocol as the flat sink (segment name = batch id): a re-delivered
-    batch skips fields already in their pointer, adopt() completes a
-    field whose segment wrote fully but crashed before its pointer
-    swap, and only the genuinely-missing fields re-run the upsert.
+    ``seal_once`` protocol as the flat sink: only the fields that have
+    not yet published the batch re-run (or adopt) it.
     Cross-field visibility: the per-field pointer swaps are not one
     atomic step, so between them a reader can see batch N in one field
     and N-1 in another — the same transient skew the reference's
@@ -297,22 +288,17 @@ class FieldedSegmentedStreamingIndexer(_BatchSink):
         if batch.isEmpty():
             return
         name = f"seg-b{batch_id:09d}"
+        meta = {"batch_id": batch_id}
         for field, col in sorted(self.fields.items()):
             si = self.indexes[field]
-            if si.has_segment(name):
-                continue
-            seg_dir = os.path.join(si.root, "segments", name)
-            if os.path.exists(os.path.join(seg_dir, "manifest.json")):
-                si.adopt(name, meta={"batch_id": batch_id})
-            else:
-                si.upsert(batch, name=name,
-                          meta={"batch_id": batch_id},
-                          text_col=col, id_col=self.id_col,
-                          analyzer=self.analyzer,
-                          lang_col=self.lang_col,
-                          n_buckets=self.n_buckets,
-                          **self._field_kwargs(field))
-            if self.compact_inline:
+            sealed = si.seal_once(
+                name, lambda: si.upsert(
+                    batch, name=name, meta=meta, text_col=col,
+                    id_col=self.id_col, analyzer=self.analyzer,
+                    lang_col=self.lang_col, n_buckets=self.n_buckets,
+                    **self._field_kwargs(field)),
+                meta=meta)
+            if sealed and self.compact_inline:
                 si.merge_once(size_by=self.merge_size_by)
 
     def artifacts(self) -> dict:
@@ -328,11 +314,9 @@ class VectorStreamingIndexer(_BatchSink):
     twin of SegmentedStreamingIndexer, so a training-data pipeline
     streams text and embeddings through the same segment protocol.
 
-    Idempotency under at-least-once delivery mirrors the lexical sink:
-    dir name = batch_id; already in the pointer -> no-op; dir fully
-    written (parquet _SUCCESS) but unpublished -> adopt() completes;
-    otherwise the upsert runs (a re-run merely appends duplicate
-    tombstone rows — harmless under the read-side anti-join).
+    Idempotency under at-least-once delivery is the lexical sink's
+    ``seal_once`` protocol (dir name = batch_id; parquet's _SUCCESS
+    marks a fully written segment).
     Live queries (VectorSegments.topk / multi_topk) see each publish
     on their next pointer read; compact_to() folds the stack into the
     partition-pruned IVF artifact.
@@ -349,10 +333,5 @@ class VectorStreamingIndexer(_BatchSink):
         if batch.isEmpty():
             return
         name = f"seg-b{batch_id:09d}"
-        if self.segs.has_segment(name):
-            return
-        seg_dir = self.segs._seg_path(name)
-        if os.path.exists(os.path.join(seg_dir, "_SUCCESS")):
-            self.segs.adopt(name)
-        else:
-            self.segs.upsert(batch, name=name)
+        self.segs.seal_once(name,
+                            lambda: self.segs.upsert(batch, name=name))

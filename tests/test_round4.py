@@ -199,6 +199,18 @@ def test_commit_name_skips_orphan_dir(spark, corpus, tmp_path):
         ["seg-000001", "seg-000003"]
     # the orphan remains adoptable/GC-able
     assert si.gc() == ["seg-000002"]
+    # a merge takes the next FREE name too: seg-000003 (gen 2 + 1) is
+    # the live segment the skipped commit published
+    from prosearch_spark.index.build import build_index
+    from prosearch_spark.query.engine import SearchEngine
+
+    assert si.force_merge()
+    assert [e["name"] for e in si._pointer()["segments"]] == ["seg-000004"]
+    flat = SearchEngine(spark, build_index(corpus, text_col="content"))
+    assert [tuple(r) for r in si.topk("spark shuffle", 10,
+                                      round_to=6).collect()] == \
+        [tuple(r) for r in flat.topk("spark shuffle", 10,
+                                     round_to=6).collect()]
 
 
 def test_merge_refuses_heterogeneous_candidates(spark, corpus, tmp_path):

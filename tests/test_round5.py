@@ -380,6 +380,22 @@ def test_vector_streaming_sink_idempotent_and_compacts(spark, tmp_path):
     ix.process_batch(b2, 2)  # adopt completes the publish
     assert "seg-b000000002" in ix.segs.segment_names()
     assert ix.segs.live().count() == 30
+    # crash mid-write: data files but no _SUCCESS marker — the replay
+    # removes the never-published partial dir and re-runs the upsert
+    import os
+
+    b3 = _toy_emb(spark, n=30).filter(F.col("vec_id") >= 27).select(
+        "vec_id", F.reverse("embedding").alias("embedding"))
+    partial = orphan._seg_path("seg-b000000003")
+    b3.write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+    ix.process_batch(b3, 3)
+    assert ix.segs.segment_names()[-1] == "seg-b000000003"
+    assert ix.segs.live().count() == 30
+    assert sorted((r["vec_id"], tuple(r["embedding"]))
+                  for r in ix.segs.live().filter(F.col("vec_id") >= 27)
+                  .collect()) == sorted(
+        (r["vec_id"], tuple(r["embedding"])) for r in b3.collect())
     # physical compaction: every live row lands, tombstones are gone
     art = ix.segs.compact_to(str(tmp_path / "vivf"), n_centroids=4)
     assert art.manifest["n_vectors"] == 30

@@ -229,7 +229,12 @@ def test_vector_streaming_sink_then_lifecycle(spark, tmp_path):
     ix.process_batch(b0, 0)
     ix.process_batch(b1, 1)
     before = [tuple(r) for r in ix.segs.topk(QVEC, 6, round_to=6).collect()]
-    ix.segs.force_merge()
+    merged = ix.segs.force_merge()
+    # re-delivery between the merge and gc: batch 1's dir is still on
+    # disk and a recorded snapshot published it — done, not re-adopted
+    ix.process_batch(b1, 1)
+    assert ix.segs.segment_names() == [merged]
+    assert ix.segs.live().count() == 24
     ix.segs.gc()
     assert len(ix.segs.segment_names()) == 1
     assert ix.segs._deletes() is None

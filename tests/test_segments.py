@@ -190,6 +190,17 @@ def test_segmented_stream_end_to_end_with_compaction(spark, tmp_path):
     # 4 commits with merge_factor=2 and inline compaction: strictly
     # fewer alive segments than commits
     assert len(ix.index._pointer()["segments"]) < 4
+    # replay of batch 1 after the inline merge folded its segment away
+    # but before any gc (a crash between merge_once and the checkpoint
+    # commit): the batch is done — re-adopting its still-on-disk dir
+    # would count its docs twice
+    assert os.path.isdir(os.path.join(ix.index.root, "segments",
+                                      "seg-b000000001"))
+    assert not ix.index.has_segment("seg-b000000001")
+    ix.process_batch(spark.createDataFrame(
+        [(21, "stream doc1 common", "en")], STREAM_SCHEMA), 1)
+    assert sum(e["n_docs"] for e in ix.index._pointer()["segments"]) == 4
+    assert _scan(spark, ix.index, "common") == [20, 21, 22, 23]
 
     # second wave through the same checkpoint: only the new file is read
     with open(os.path.join(src, "w9.json"), "w") as f:
