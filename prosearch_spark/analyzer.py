@@ -38,6 +38,8 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from prosearch_spark.session import local_frame
+
 # --------------------------------------------------------------------------
 # 1. white_lower — reference-exact analyzer, JVM-side.
 # --------------------------------------------------------------------------
@@ -165,7 +167,7 @@ def code_token_stream(docs: DataFrame, text_col: str, id_col: str,
     stop_rows = [
         (lg, w) for lg, ws in LANG_STOPWORDS.items() for w in sorted(ws)
     ]
-    stop_df = spark.createDataFrame(stop_rows, "_lang string, term string")
+    stop_df = local_frame(spark, stop_rows, "_lang string, term string")
     b = (
         raw.filter(~F.col("_raw").rlike(_UNCHANGED_RE))
         .select(
@@ -313,12 +315,6 @@ def parse_query_lenient(q: str) -> list[tuple[str, object]]:
     return clauses
 
 
-def query_terms_df(spark, q: str):
-    """[(term, boost)] as a broadcastable one-row-per-clause DataFrame."""
-    rows = analyze_query(q)
-    return spark.createDataFrame(rows, "term string, boost double")
-
-
 def parse_query_slop(q: str) -> list[tuple[str, object]]:
     """parse_query_lenient extended with the Lucene/Tantivy proximity
     suffix ``"..."~N``: a quoted phrase immediately followed (no
@@ -384,6 +380,5 @@ __all__: Iterable[str] = [
     "analyze_query",
     "parse_query_lenient",
     "parse_query_slop",
-    "query_terms_df",
     "LANG_STOPWORDS",
 ]

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prosearch_spark.session import local_frame
+
 
 def per_host_limit(docs: DataFrame, host_col: str = "repo",
                    order_col: str = "path", limit: int = 10_000) -> DataFrame:
@@ -69,7 +71,8 @@ def stats_with_zero_fill(spark: SparkSession, docs: DataFrame,
                          host_col: str = "repo") -> DataFrame:
     """J5 (StatisticsHttpHandler.java:97-114): start hosts absent from
     stats get zero rows — left join + coalesce(0)."""
-    hosts = spark.createDataFrame([(h,) for h in sorted(all_hosts)], "host string")
+    hosts = local_frame(spark, [(h,) for h in sorted(all_hosts)],
+                        "host string")
     counts = host_counts(docs, host_col)
     return (
         hosts.join(counts, "host", "left")

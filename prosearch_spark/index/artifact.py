@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from prosearch_spark.index.blocks import decode_blocks, encode_blocks
 from prosearch_spark.index.build import InvertedIndex, build_index
+from prosearch_spark.session import local_frame
 
 MANIFEST = "manifest.json"
 VERSION = 1
@@ -81,16 +82,16 @@ _BUCKET_MEMO: dict[tuple[str, int], int] = {}
 
 def term_buckets_py(terms: list[str], n_buckets: int,
                     spark: SparkSession) -> dict[str, int]:
-    """Driver-side buckets for a set of terms, in ONE local job.
-
-    Computed by the SAME JVM expression as the write path (xxhash64
-    semantics live in Spark, not Python) and memoized — a query must
-    not pay one scheduler round-trip per term.
+    """Driver-side buckets for a set of terms, with no Spark job: the
+    SAME JVM expression as the write path (xxhash64 semantics live in
+    Spark, not Python) over a local frame folds on the driver. An
+    uncached lookup still costs ~60 ms of planning and a query makes
+    two or more lookups per field, so results are memoized.
     """
     missing = [t for t in terms if (t, n_buckets) not in _BUCKET_MEMO]
     if missing:
-        rows = spark.createDataFrame(
-            [(t,) for t in missing], "term string"
+        rows = local_frame(
+            spark, [(t,) for t in missing], "term string"
         ).select("term", term_bucket(F.col("term"), n_buckets).alias("b")
                  ).collect()
         for r in rows:
@@ -118,17 +119,21 @@ class IndexArtifact:
     def n_buckets(self) -> int:
         return self.manifest["n_buckets"]
 
+    def _term_rows(self, sub: str, terms: list[str] | None) -> DataFrame:
+        """``sub``'s rows, bucket-pruned + term-filtered when terms
+        given."""
+        df = self.spark.read.parquet(os.path.join(self.path, sub))
+        if terms is not None:
+            terms = sorted(set(terms))
+            buckets = sorted(set(term_buckets_py(
+                terms, self.n_buckets, self.spark).values()))
+            df = df.filter(F.col("tb").isin(buckets) &
+                           F.col("term").isin(terms))
+        return df
+
     def blocks(self, terms: list[str] | None = None) -> DataFrame:
         """Block rows, bucket-pruned + term-filtered when terms given."""
-        df = self.spark.read.parquet(os.path.join(self.path, "blocks"))
-        if terms is not None:
-            buckets = sorted(set(
-                term_buckets_py(sorted(set(terms)), self.n_buckets,
-                                self.spark).values()
-            ))
-            df = df.filter(F.col("tb").isin(buckets) &
-                           F.col("term").isin(sorted(set(terms))))
-        return df
+        return self._term_rows("blocks", terms)
 
     def postings(self, terms: list[str] | None = None) -> DataFrame:
         """Decoded flat postings, with tombstones anti-joined out."""
@@ -136,15 +141,7 @@ class IndexArtifact:
                              self.deletes())
 
     def term_stats(self, terms: list[str] | None = None) -> DataFrame:
-        df = self.spark.read.parquet(os.path.join(self.path, "term_stats"))
-        if terms is not None:
-            buckets = sorted(set(
-                term_buckets_py(sorted(set(terms)), self.n_buckets,
-                                self.spark).values()
-            ))
-            df = df.filter(F.col("tb").isin(buckets) &
-                           F.col("term").isin(sorted(set(terms))))
-        return df.select("term", "df")
+        return self._term_rows("term_stats", terms).select("term", "df")
 
     def doc_stats(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
@@ -160,8 +157,8 @@ class IndexArtifact:
     def stats(self) -> DataFrame:
         """One-row (n_docs, avgdl) frame from the manifest (broadcast
         scalar analog of per-segment collection stats)."""
-        return self.spark.createDataFrame(
-            [(self.manifest["n_docs"], self.manifest["avgdl"])],
+        return local_frame(
+            self.spark, [(self.manifest["n_docs"], self.manifest["avgdl"])],
             "n_docs long, avgdl double",
         )
 
@@ -517,7 +514,7 @@ def _write_artifact(spark: SparkSession, path: str, postings: DataFrame,
         except Exception:
             # empty corpus: the blocks dir has no part files to infer
             # from
-            ts = spark.createDataFrame([], "tb int, term string, df long")
+            ts = local_frame(spark, [], "tb int, term string, df long")
         (
             ts.select("term", "df", "tb")
             .repartition("tb").sortWithinPartitions("term")

@@ -50,6 +50,7 @@ from prosearch_spark.index.artifact import (
 )
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.index.stack import SegmentStack, seg_tag
+from prosearch_spark.session import local_frame
 
 
 class SegmentedIndex(SegmentStack):
@@ -593,8 +594,8 @@ class SegmentedArtifactView:
         else:
             n_docs, total_dl = self._n_docs, self._total_dl
         avgdl = total_dl / n_docs if n_docs else 0.0
-        return self._spark.createDataFrame(
-            [(n_docs, float(avgdl))], "n_docs long, avgdl double")
+        return local_frame(
+            self._spark, [(n_docs, float(avgdl))], "n_docs long, avgdl double")
 
     def doc_store(self) -> DataFrame | None:
         """Union of the per-segment doc stores (S4), minus each

@@ -59,6 +59,7 @@ from prosearch_spark.ops.similarity import (
     cosine_topk,
     multi_cosine_topk,
 )
+from prosearch_spark.session import local_frame
 
 MANIFEST = "vector_manifest.json"
 
@@ -454,11 +455,10 @@ class VectorArtifact:
             for b in self.probe_buckets([float(x) for x in r["qv"]],
                                         n_probe)]
         if not probe_pairs:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, vec_id long, cosine double")
+            return local_frame(self.spark, [], "query_id long, rank int, "
+                               "vec_id long, cosine double")
         buckets = sorted({b for _, b in probe_pairs})
-        pm = self.spark.createDataFrame(
-            probe_pairs, "query_id long, bucket int")
+        pm = local_frame(self.spark, probe_pairs, "query_id long, bucket int")
         # qv widened to double so the elementwise math is the same
         # float-times-double the single-query literal path runs; the
         # per-query norm is materialized on the broadcast side (r7) —
@@ -536,14 +536,12 @@ class VectorArtifact:
             for b in self.probe_buckets(qv, n_probe):
                 probe_pairs.append((r["query_id"], b))
         if not probe_pairs:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, vec_id long, "
-                    "sq_score double, cosine double")
+            return local_frame(self.spark, [], "query_id long, rank int, "
+                               "vec_id long, sq_score double, cosine double")
         buckets = sorted({b for _, b in probe_pairs})
-        pm = self.spark.createDataFrame(
-            probe_pairs, "query_id long, bucket int")
-        qu = self.spark.createDataFrame(
-            units, "query_id long, qunit array<double>")
+        pm = local_frame(self.spark, probe_pairs, "query_id long, bucket int")
+        qu = local_frame(self.spark, units,
+                         "query_id long, qunit array<double>")
         codes = F.transform(F.col("code"),
                             lambda c: c.cast("double") + F.lit(128.0))
         iscore = F.aggregate(
@@ -833,8 +831,8 @@ class VectorSegments(SegmentStack):
         if names is None:
             names = self.segment_names()
         if not names:
-            return self.spark.createDataFrame(
-                [], "seg string, vec_id long, embedding array<float>")
+            return local_frame(self.spark, [], "seg string, vec_id long, "
+                               "embedding array<float>")
         return self.spark.read.parquet(*[
             self._seg_path(n) for n in names
         ]).select(seg_tag(), "vec_id", "embedding")

@@ -22,6 +22,8 @@ import math as _math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from prosearch_spark.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -487,8 +489,8 @@ def sq_topk(emb: DataFrame, query_id: int = 0, k: int = 10,
     qrow = (emb.filter(F.col(id_col) == query_id)
             .select(F.col(vec_col)).head())
     if qrow is None:
-        return emb.sparkSession.createDataFrame(
-            [], "rank int, vec_id long, sq_score double, cosine double")
+        return local_frame(emb.sparkSession, [], "rank int, vec_id long, "
+                           "sq_score double, cosine double")
     qv = [float(x) for x in qrow[0]]
     acc = 0.0
     for x in qv:
@@ -506,8 +508,8 @@ def sq_topk(emb: DataFrame, query_id: int = 0, k: int = 10,
         .head())
     gmin, gmax = srow["gmin"], srow["gmax"]
     if gmin is None or gmax is None:
-        return emb.sparkSession.createDataFrame(
-            [], "rank int, vec_id long, sq_score double, cosine double")
+        return local_frame(emb.sparkSession, [], "rank int, vec_id long, "
+                           "sq_score double, cosine double")
 
     base = (emb.filter(F.col(id_col) != query_id)
             .withColumn("_nrm", _norm(v)))

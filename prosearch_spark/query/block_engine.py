@@ -32,6 +32,7 @@ from prosearch_spark.index.artifact import IndexArtifact, apply_deletes
 from prosearch_spark.index.blocks import decode_blocks
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA, SearchEngine
+from prosearch_spark.session import local_frame
 
 
 def block_key(df: DataFrame, *lead: str) -> list[str]:
@@ -161,7 +162,7 @@ class BlockSearchEngine:
         tools/msearch_bench.py / BENCH.md."""
         eng = self._batch_engine(queries)
         if eng is None:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         return eng.multi_topk(queries, k, round_to)
 
     def multi_topk_or(self, queries: list[str], k: int = 10,
@@ -174,7 +175,7 @@ class BlockSearchEngine:
         :meth:`SearchEngine.topk_or`."""
         eng = self._batch_engine(queries)
         if eng is None:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         return eng.multi_topk_or(queries, k, round_to, min_match=min_match)
 
     def _engine_on_blocks(self, blocks: DataFrame, terms: list[str],
@@ -331,7 +332,7 @@ class BlockSearchEngine:
                 "the analyzed text column) for the S5 seed fetch")
         rows = (store.filter(F.col("doc_id") == seed_doc_id)
                 .select(text_col).collect())
-        empty = (self.spark.createDataFrame([], TOPK_SCHEMA),
+        empty = (local_frame(self.spark, [], TOPK_SCHEMA),
                  {"blocks_total": 0, "blocks_decoded": 0})
         if not rows or rows[0][0] is None:
             return empty
@@ -339,8 +340,8 @@ class BlockSearchEngine:
         tf = Counter(white_lower_py(rows[0][0]))
         if not tf:
             return empty
-        seed_tf = self.spark.createDataFrame(
-            [(t, int(c)) for t, c in sorted(tf.items())],
+        seed_tf = local_frame(
+            self.spark, [(t, int(c)) for t, c in sorted(tf.items())],
             "term string, tf long")
         sel = (
             self.artifact.term_stats(sorted(tf))
@@ -410,12 +411,12 @@ class BlockSearchEngine:
             for r in srows if r[text_col] is not None
             for t, c in sorted(Counter(white_lower_py(r[text_col])).items())
         ]
-        empty = self.spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        empty = local_frame(self.spark, [], "query_id long, rank int, "
+                            "doc_id long, score double")
         if not tf_rows:
             return empty
-        seed_tf = self.spark.createDataFrame(
-            tf_rows, "query_id long, term string, tf long")
+        seed_tf = local_frame(
+            self.spark, tf_rows, "query_id long, term string, tf long")
         vocab = sorted({t for _q, t, _c in tf_rows})
         sel_rows = (
             self.artifact.term_stats(vocab)
@@ -434,8 +435,8 @@ class BlockSearchEngine:
             return empty
         terms = sorted({r["term"] for r in sel_rows})
         eng = self._engine_on_blocks(self.artifact.blocks(terms), terms)
-        sel = self.spark.createDataFrame(
-            [(int(r["query_id"]), r["term"]) for r in sel_rows],
+        sel = local_frame(
+            self.spark, [(int(r["query_id"]), r["term"]) for r in sel_rows],
             "query_id long, term string")
         return eng._multi_mlt_rank(sel, k, round_to)
 

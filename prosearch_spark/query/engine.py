@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from prosearch_spark.analyzer import analyze_query
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.bm25 import MLT_TERM_EXPR, SCORE_EXPR
+from prosearch_spark.session import local_frame
 
 
 def rank_topk(d: DataFrame, k: int, round_to: int | None) -> DataFrame:
@@ -43,6 +44,23 @@ def rank_topk(d: DataFrame, k: int, round_to: int | None) -> DataFrame:
     )
 
 
+def rank_multi_topk(d: DataFrame, k: int,
+                    round_to: int | None) -> DataFrame:
+    """(query_id, doc_id, score) -> (query_id, rank, doc_id, score):
+    :func:`rank_topk` per query of a batch — a PARTITIONED window
+    (WindowGroupLimit), rows ordered by (query_id, rank)."""
+    if round_to is not None:
+        d = d.withColumn("score", F.round("score", round_to))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id"))
+    return (
+        d.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "score")
+        .orderBy("query_id", "rank")
+    )
+
+
 TOPK_SCHEMA = "rank int, doc_id long, score double"
 MULTI_TOPK_SCHEMA = "query_id int, rank int, doc_id long, score double"
 
@@ -54,9 +72,7 @@ def materialize_topk(spark: SparkSession, ranked: DataFrame,
     ``schema`` defaults to the single-query TOPK_SCHEMA; batched
     callers pass MULTI_TOPK_SCHEMA."""
     schema = schema if schema is not None else TOPK_SCHEMA
-    rows = ranked.collect()
-    return spark.createDataFrame(rows, schema) if rows else \
-        spark.createDataFrame([], schema)
+    return local_frame(spark, ranked.collect(), schema)
 
 
 class SearchEngine:
@@ -77,7 +93,7 @@ class SearchEngine:
         the analyzer's boost table must NOT apply."""
         if clauses is None:
             clauses = analyze_query(q)
-        qdf = self.spark.createDataFrame(clauses, "term string, boost double")
+        qdf = local_frame(self.spark, clauses, "term string, boost double")
         terms = sorted({t for t, _ in clauses})
         ts = self.index.term_stats.filter(F.col("term").isin(terms))
         scored = (
@@ -162,7 +178,7 @@ class SearchEngine:
         )
         clauses = [(r["term"], 1.0) for r in sel.select("term").collect()]
         if not clauses:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         d = (self._docs_scored_or("", clauses=clauses)
              .filter(F.col("doc_id") != seed_doc_id))
         return rank_topk(d, k, round_to)
@@ -227,16 +243,7 @@ class SearchEngine:
         )
         d = (scored.groupBy("query_id", "doc_id")
              .agg(F.sum("s").alias("score")))
-        if round_to is not None:
-            d = d.withColumn("score", F.round("score", round_to))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        return (
-            d.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-            .orderBy("query_id", "rank")
-        )
+        return rank_multi_topk(d, k, round_to)
 
     def topk(self, q: str, k: int = 10, round_to: int | None = None,
              clauses: list[tuple[str, float]] | None = None) -> DataFrame:
@@ -298,11 +305,11 @@ class SearchEngine:
         parsed = [(qi, analyze_query(q)) for qi, q in enumerate(queries)]
         rows = [(qi, t, b) for qi, cl in parsed for t, b in cl]
         if not rows:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        qdf = self.spark.createDataFrame(
-            rows, "query_id int, term string, boost double")
-        ndf = self.spark.createDataFrame(
-            [(qi, len(cl)) for qi, cl in parsed if cl],
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
+        qdf = local_frame(
+            self.spark, rows, "query_id int, term string, boost double")
+        ndf = local_frame(
+            self.spark, [(qi, len(cl)) for qi, cl in parsed if cl],
             "query_id int, n_clauses int")
         terms = sorted({t for _qi, t, _b in rows})
         ts = self.index.term_stats.filter(F.col("term").isin(terms))
@@ -322,16 +329,7 @@ class SearchEngine:
             d = d.filter(F.col("nmatch") == F.col("n_clauses"))
         elif min_match > 1:
             d = d.filter(F.col("nmatch") >= min_match)
-        if round_to is not None:
-            d = d.withColumn("score", F.round("score", round_to))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        return (
-            d.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-            .orderBy("query_id", "rank")
-        )
+        return rank_multi_topk(d, k, round_to)
 
     def topk_not(self, q: str, exclude: str, k: int = 10,
                  round_to: int | None = None) -> DataFrame:
@@ -365,16 +363,10 @@ class SearchEngine:
         d = d.cache()
         try:
             total = d.count()
-            top = d.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-            out = top.withColumn("rank", F.row_number().over(w)).select(
-                "rank", "doc_id", "score"
-            )
+            out = rank_topk(d, k, None)  # d is already rounded
             # materialize before unpersist so the caller's DataFrame
             # doesn't recompute the whole match
-            rows = out.collect()
-            result = self.spark.createDataFrame(rows, out.schema) if rows \
-                else self.spark.createDataFrame([], out.schema)
+            result = local_frame(self.spark, out.collect(), out.schema)
         finally:
             d.unpersist()
         return result, total

@@ -17,7 +17,7 @@ fielded postings, one groupBy(doc_id) computing both the total score
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prosearch_spark.analyzer import analyze_query
@@ -26,8 +26,14 @@ from prosearch_spark.index.blocks import decode_blocks
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.block_engine import block_cols
 from prosearch_spark.query.bm25 import SCORE_EXPR
+from prosearch_spark.query.engine import (
+    MULTI_TOPK_SCHEMA,
+    rank_multi_topk,
+    rank_topk,
+)
 from prosearch_spark.query.mixed import ladder_multi_topk, ladder_topk
 from prosearch_spark.query.wand import block_max_wand
+from prosearch_spark.session import local_frame
 
 DEFAULT_FIELD_BOOSTS = {"title": 1.5, "body": 1.0}
 
@@ -57,8 +63,8 @@ class FieldedSearchEngine:
     def _scored(self, q: str) -> tuple[DataFrame, int]:
         """Per-(clause, field, doc) scored rows + clause count."""
         clauses = analyze_query(q)
-        qdf = self.spark.createDataFrame(
-            [(i, t, b) for i, (t, b) in enumerate(clauses)],
+        qdf = local_frame(
+            self.spark, [(i, t, b) for i, (t, b) in enumerate(clauses)],
             "clause_id int, term string, boost double",
         )
         terms = sorted({t for t, _ in clauses})
@@ -104,19 +110,10 @@ class FieldedSearchEngine:
                 min_match: int = 1) -> DataFrame:
         """Multi-field should-clause top-k (title 1.5 / body 1.0 kept;
         match ANY clause by default) — the disjunctive twin of topk."""
-        from prosearch_spark.query.engine import rank_topk
-
         return rank_topk(self._docs_scored_or(q, min_match), k, round_to)
 
     def topk(self, q: str, k: int = 10, round_to: int | None = None) -> DataFrame:
-        d = self._docs_scored(q)
-        if round_to is not None:
-            d = d.withColumn("score", F.round("score", round_to))
-        top = d.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score"
-        )
+        return rank_topk(self._docs_scored(q), k, round_to)
 
     def count(self, q: str) -> DataFrame:
         return self._docs_scored(q).agg(F.count("*").alias("hits"))
@@ -135,17 +132,15 @@ class FieldedSearchEngine:
         DISTINCT clause ids (a clause matched in both fields is one
         clause). One postings scan, one shuffle, a partitioned-window
         rank — N fielded queries, one job."""
-        from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
-
         parsed = [(qi, analyze_query(q)) for qi, q in enumerate(queries)]
         rows = [(qi, ci, t, b) for qi, cl in parsed
                 for ci, (t, b) in enumerate(cl)]
         if not rows:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        qdf = self.spark.createDataFrame(
-            rows, "query_id int, clause_id int, term string, boost double")
-        ndf = self.spark.createDataFrame(
-            [(qi, len(cl)) for qi, cl in parsed if cl],
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
+        qdf = local_frame(self.spark, rows, "query_id int, clause_id int, "
+                          "term string, boost double")
+        ndf = local_frame(
+            self.spark, [(qi, len(cl)) for qi, cl in parsed if cl],
             "query_id int, n_clauses int")
         terms = sorted({t for _qi, _ci, t, _b in rows})
         ts = self.index.term_stats.filter(F.col("term").isin(terms))
@@ -167,16 +162,7 @@ class FieldedSearchEngine:
             d = d.filter(F.col("nmatch") == F.col("n_clauses"))
         elif min_match > 1:
             d = d.filter(F.col("nmatch") >= min_match)
-        if round_to is not None:
-            d = d.withColumn("score", F.round("score", round_to))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        return (
-            d.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-            .orderBy("query_id", "rank")
-        )
+        return rank_multi_topk(d, k, round_to)
 
     def multi_topk_or(self, queries: list[str], k: int = 10,
                       round_to: int | None = None,
@@ -261,9 +247,7 @@ class FieldedBlockSearchEngine:
         scores in FieldedSearchEngine.multi_topk's single plan."""
         terms = sorted({t for q in queries for t in _terms(q)})
         if not terms:
-            from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
-
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         return self._engine(terms).multi_topk(queries, k, round_to,
                                               min_match=min_match)
 

@@ -90,9 +90,11 @@ from prosearch_spark.query.engine import (
     MULTI_TOPK_SCHEMA,
     TOPK_SCHEMA,
     materialize_topk,
+    rank_multi_topk,
     rank_topk,
 )
 from prosearch_spark.query.wand import _union_tagged, align_seg, block_max_wand
+from prosearch_spark.session import local_frame
 
 
 def build_positional(spark: SparkSession, docs: DataFrame,
@@ -109,8 +111,8 @@ def build_positional(spark: SparkSession, docs: DataFrame,
     n_docs = docs.count()
     tok_total = pp.agg(F.sum("tf")).collect()[0][0] or 0
     avgdl = tok_total / n_docs if n_docs else 0.0
-    stats = spark.createDataFrame([(n_docs, float(avgdl), 1.0)],
-                                  "n_docs long, avgdl double, fboost double")
+    stats = local_frame(spark, [(n_docs, float(avgdl), 1.0)],
+                        "n_docs long, avgdl double, fboost double")
     return pp, stats
 
 
@@ -132,7 +134,7 @@ def mixed_topk(spark: SparkSession, docs: DataFrame, q: str, k: int = 10,
     """
     clauses = parse_query_slop(q)
     if not clauses:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, [], TOPK_SCHEMA)
     term_rows = [(ci, c[0], c[1]) for ci, (kind, c) in enumerate(clauses)
                  if kind == "term"]
 
@@ -147,9 +149,9 @@ def mixed_topk(spark: SparkSession, docs: DataFrame, q: str, k: int = 10,
                   .groupBy("term").agg(F.count("*").alias("df")))
             parts.append(_scored(
                 pp.select("term", "doc_id", "tf", "dl")
-                .join(F.broadcast(spark.createDataFrame(
-                    term_rows, "clause_id int, term string, boost double")),
-                    "term")
+                .join(F.broadcast(local_frame(
+                    spark, term_rows,
+                    "clause_id int, term string, boost double")), "term")
                 .join(F.broadcast(ts), "term"), stats, [], ["clause_id"]))
         for ci, (kind, c) in enumerate(clauses):
             if kind == "term":
@@ -159,7 +161,7 @@ def mixed_topk(spark: SparkSession, docs: DataFrame, q: str, k: int = 10,
             persisted.append(m)
             phrase_df = m.count()
             if phrase_df == 0:
-                return spark.createDataFrame([], TOPK_SCHEMA)  # AND dead
+                return local_frame(spark, [], TOPK_SCHEMA)  # AND dead
             parts.append(_phrase_scored(
                 m.select(F.lit(ci).alias("clause_id"), "doc_id", "dl", "tf",
                          F.lit(phrase_df).alias("df")),
@@ -292,14 +294,14 @@ def ladder_topk(spark: SparkSession, sources: list, body: tuple, q: str,
            else (ci, list(c[0]), int(c[1]))
            for ci, (kind, c) in enumerate(clauses) if kind != "term"]
     tc_terms = sorted({t for _ci, t, _b in term_rows})
-    qdf = (spark.createDataFrame(term_rows,
-                                 "clause_id int, term string, boost double")
+    qdf = (local_frame(spark, term_rows,
+                       "clause_id int, term string, boost double")
            if term_rows else None)
 
     def ret(df: DataFrame, stats: dict):
         return (df, stats) if return_stats else df
 
-    empty = spark.createDataFrame([], TOPK_SCHEMA)
+    empty = local_frame(spark, [], TOPK_SCHEMA)
     if not clauses:
         return ret(empty, {"blocks_total": 0, "blocks_decoded": 0})
     if not pos:
@@ -395,8 +397,8 @@ def ladder_topk(spark: SparkSession, sources: list, body: tuple, q: str,
             cap = be.SEED_BLOCK_CAP
             ids = [r["doc_id"] for r in first.select("doc_id")
                    .orderBy("doc_id").limit(cap + 1).collect()]
-            ranges = (spark.createDataFrame(_doc_ranges(ids),
-                                            "rf long, rl long")
+            ranges = (local_frame(spark, _doc_ranges(ids),
+                                  "rf long, rl long")
                       if len(ids) <= cap
                       else be.term_ranges(pblocks, rarest(pos[0][1])))
             need = be.overlap_semi(term_blocks, ranges)
@@ -427,8 +429,8 @@ def _chain_matches(rows: DataFrame, members: list, n: int,
         tf = phrase_freq([F.col("q0")] + [shifted(f"q{i}", i)
                                           for i in range(1, n)])
     else:
-        rows = rows.join(F.broadcast(rows.sparkSession.createDataFrame(
-            [(qi, ci, w) for qi, ci, _t, w in members],
+        rows = rows.join(F.broadcast(local_frame(
+            rows.sparkSession, [(qi, ci, w) for qi, ci, _t, w in members],
             "query_id int, clause_id int, w int")), keys)
         tf = slop_chain(n, "w")
     return (rows.withColumn("tf", tf.cast("long"))
@@ -455,7 +457,7 @@ def ladder_multi_topk(spark: SparkSession, sources: list, body: tuple,
                             else (list(c[0]), len(c[0]) - 1 + int(c[1])))
                 by_len.setdefault(len(terms), []).append((qi, ci, terms, w))
     if not term_rows and not by_len:
-        return spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+        return local_frame(spark, [], MULTI_TOPK_SCHEMA)
 
     parts: list[DataFrame] = []
     stats = _source_stats(sources if term_rows else [body])
@@ -465,8 +467,8 @@ def ladder_multi_topk(spark: SparkSession, sources: list, body: tuple,
             sources,
             _union_tagged(sources, lambda art, _b: be.block_cols(
                 art.blocks(terms))),
-            spark.createDataFrame(term_rows, "query_id int, clause_id int, "
-                                  "term string, boost double"),
+            local_frame(spark, term_rows, "query_id int, clause_id int, "
+                        "term string, boost double"),
             _term_stats(sources, terms), stats, keys))
     if by_len:
         body_field, body_art, _boost = body
@@ -476,7 +478,8 @@ def ladder_multi_topk(spark: SparkSession, sources: list, body: tuple,
                   for exact in (True, False)
                   if (members := [g for g in group
                                   if (g[3] is None) == exact])]
-        slots = spark.createDataFrame(
+        slots = local_frame(
+            spark,
             [(gi, qi, ci, i, t) for gi, (_n, _e, members) in enumerate(groups)
              for qi, ci, terms, _w in members for i, t in enumerate(terms)],
             # NOT NULL: no branch can infer its own isnotnull filter
@@ -508,8 +511,8 @@ def ladder_multi_topk(spark: SparkSession, sources: list, body: tuple,
                 m.withColumn("df", F.count("*").over(
                     Window.partitionBy(*keys))), body_field, stats, keys))
 
-    ndf = spark.createDataFrame(
-        [(qi, len(cls)) for qi, cls in enumerate(parsed) if cls],
+    ndf = local_frame(
+        spark, [(qi, len(cls)) for qi, cls in enumerate(parsed) if cls],
         "query_id int, n_clauses int")
     # duplicate clauses carry distinct clause_ids, so the DISTINCT
     # count equals the clause count exactly when every clause matched
@@ -521,13 +524,4 @@ def ladder_multi_topk(spark: SparkSession, sources: list, body: tuple,
         .join(F.broadcast(ndf), "query_id")
         .filter(F.col("nmatch") == F.col("n_clauses"))
     )
-    if round_to is not None:
-        d = d.withColumn("score", F.round("score", round_to))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    return (
-        d.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-        .orderBy("query_id", "rank")
-    )
+    return rank_multi_topk(d, k, round_to)

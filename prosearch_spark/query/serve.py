@@ -15,7 +15,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
 from prosearch_spark.query.snippet import with_snippet
+from prosearch_spark.session import local_frame
 
 
 class ArtifactSearcher:
@@ -193,8 +195,6 @@ class ArtifactSearcher:
         does not compose across members."""
         from functools import reduce
 
-        from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
-
         eng = self.fielded if self.fielded is not None else self.block
         term_idx = [i for i, q in enumerate(queries) if '"' not in q]
         quoted_idx = [i for i, q in enumerate(queries) if '"' in q]
@@ -205,8 +205,8 @@ class ArtifactSearcher:
                 return batch
             # remap the sub-batch's positional ids to the original
             # list positions
-            mapping = self.spark.createDataFrame(
-                list(enumerate(idx)), "query_id int, orig int")
+            mapping = local_frame(self.spark, enumerate(idx),
+                                  "query_id int, orig int")
             return batch.join(F.broadcast(mapping), "query_id") \
                 .select(F.col("orig").alias("query_id"), "rank",
                         "doc_id", "score")
@@ -220,7 +220,7 @@ class ArtifactSearcher:
                 eng.multi_mixed_topk([queries[i] for i in quoted_idx], k,
                                      round_to), quoted_idx))
         if not parts:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         return reduce(lambda a, b: a.unionByName(b), parts) \
             .orderBy("query_id", "rank")
 

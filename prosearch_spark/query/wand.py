@@ -97,6 +97,7 @@ from pyspark.sql import functions as F
 from prosearch_spark.index.blocks import BLOCK_SIZE, block_upper_bound_expr
 from prosearch_spark.query import block_engine as be
 from prosearch_spark.query.engine import TOPK_SCHEMA, materialize_topk
+from prosearch_spark.session import local_frame
 
 # conjunctive driver ranges split into at most this many strides
 # before bounding, each at least MIN_STRIDE docids wide — narrow
@@ -227,7 +228,7 @@ def block_max_wand(spark: SparkSession, sources: list,
     weights = {t: 0.0 for t in terms}
     for t, b in clauses:
         weights[t] += b
-    empty = (spark.createDataFrame([], TOPK_SCHEMA),
+    empty = (local_frame(spark, [], TOPK_SCHEMA),
             {"blocks_total": 0, "blocks_decoded": 0})
     if not terms:
         return empty
@@ -297,14 +298,14 @@ def block_max_wand(spark: SparkSession, sources: list,
                 .limit(B).collect()
             ]
             seed_blocks = be.overlap_semi(
-                meta, spark.createDataFrame(ranges, "rf long, rl long"))
+                meta, local_frame(spark, ranges, "rf long, rl long"))
             # a seed spanning every candidate is final: score it under
             # the caller's rounding (theta is only needed to prune)
             seed_rows = score(seed_blocks,
                               round_to if covers_all else None).collect()
             if covers_all:
                 n_seed = seed_blocks.count()
-                return spark.createDataFrame(seed_rows, TOPK_SCHEMA), {
+                return local_frame(spark, seed_rows, TOPK_SCHEMA), {
                     "blocks_total": n_blocks, "blocks_decoded": n_seed,
                     "blocks_seed": n_seed, "blocks_final": 0}
             if len(seed_rows) >= k:

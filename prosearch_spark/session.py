@@ -11,8 +11,13 @@ from __future__ import annotations
 import os
 
 from contextlib import contextmanager
+from functools import lru_cache
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 @contextmanager
@@ -76,3 +81,27 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+# fromDDL is a ~4 ms JVM round trip; the keys are the library's literal
+# schema strings, a small fixed set
+@lru_cache(maxsize=None)
+def _ddl_schema(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``createDataFrame(rows, schema)`` built in the JVM: the rows
+    become one ``pyarrow.Table`` typed by the schema (NOT NULL kept),
+    planned as a ``LocalTableScan``. A list ``createDataFrame`` is a
+    Python RDD instead, whose every scan starts Python workers to read
+    0 bytes. ``rows`` are positional (tuples, lists, collected Rows);
+    ``schema`` is a DDL string or a StructType."""
+    if isinstance(schema, str):
+        schema = _ddl_schema(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

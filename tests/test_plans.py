@@ -309,3 +309,72 @@ def test_chunking_has_no_shuffle_and_packing_exactly_one(spark, corpus,
     n_shuffles = pp.count("Exchange hashpartitioning")
     assert n_shuffles == 1, pp
     assert "Window" in pp
+
+
+@pytest.fixture(scope="module")
+def routed(spark, corpus, tmp_path_factory):
+    """(fielded, single-field) ArtifactSearchers with doc stores."""
+    from pyspark.sql import functions as F
+
+    from prosearch_spark.index.artifact import save_fielded_index
+    from prosearch_spark.query.serve import ArtifactSearcher
+
+    titled = corpus.withColumn(
+        "title", F.concat_ws(" ", F.slice(F.split("content", " "), 1, 4)))
+    root = tmp_path_factory.mktemp("routed")
+    arts = save_fielded_index(
+        spark, titled, str(root / "fielded"),
+        {"title": "title", "body": "content"},
+        positional_fields=frozenset({"body"}))
+    arts["body"].write_doc_store(titled, ["content", "title"])
+    flat = save_index(spark, titled, str(root / "flat"), text_col="content")
+    flat.write_doc_store(titled, ["content"])
+    return (ArtifactSearcher(spark, arts["body"], fielded=arts,
+                             body_col="content"),
+            ArtifactSearcher(spark, flat, body_col="content"))
+
+
+@pytest.mark.parametrize("q,plan", [
+    ("spark shuffle", "fielded_wand"),
+    ('python "spark shuffle"', "fielded_mixed"),
+    ('"spark shuffle"~2', "fielded_mixed_slop"),
+    ("spark shuffle", "wand"),
+])
+def test_routed_plans_scan_no_python_rdd(routed, q, plan):
+    """Every small driver-side relation of a routed query (stats,
+    clause tables, the materialized top-k) is a JVM LocalTableScan,
+    never a Python-RDD ``Scan ExistingRDD`` — in the hits and in the
+    doc-store fetch."""
+    fielded, flat = routed
+    searcher = flat if plan == "wand" else fielded
+    hits, got = searcher.route(q, 10, round_to=6)
+    assert got == plan
+    assert hits.count() > 0
+    for df in (hits, searcher.artifact.fetch_docs(hits)):
+        assert "ExistingRDD" not in _plan(df), _plan(df)
+
+
+def test_wand_seed_ladder_plan_scans_no_python_rdd(spark, tmp_path):
+    """The full WAND ladder's lazy result joins the driver's seed
+    ranges back to the block metadata: that relation is local too."""
+    docs = spark.range(1000).selectExpr(
+        "id as doc_id", "concat('a b w', id % 7) as text")
+    art = save_index(spark, docs, str(tmp_path / "ladder"))
+    hits, stats = BlockSearchEngine(spark, art).topk_wand(
+        "a b", 10, round_to=6, min_prune_blocks=0)
+    # seeded from part of the rarest term's blocks, not short-circuited
+    assert "short_circuit" not in stats
+    assert stats["blocks_seed"] < stats["blocks_total"]
+    assert "ExistingRDD" not in _plan(hits), _plan(hits)
+    assert hits.count() == 10
+
+
+def test_msearch_plan_scans_no_python_rdd(routed):
+    """A mixed batch (the split remaps query ids through a mapping
+    frame) builds every relation in the JVM too."""
+    fielded, _flat = routed
+    hits = fielded.msearch(["spark shuffle", 'python "spark shuffle"',
+                            "python"], 10, round_to=6)
+    assert hits.select("query_id").distinct().count() == 3
+    for df in (hits, fielded.artifact.fetch_docs(hits)):
+        assert "ExistingRDD" not in _plan(df), _plan(df)

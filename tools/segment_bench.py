@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -31,7 +32,16 @@ def main() -> None:
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     n_wave = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000
     n_waves = int(sys.argv[3]) if len(sys.argv) > 3 else 4
+    # every stack the bench commits lives under one temp dir, removed
+    # however the run ends
+    work = tempfile.mkdtemp(prefix="segbench_")
+    try:
+        print(json.dumps(run(work, n_base, n_wave, n_waves)))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
+
+def run(work: str, n_base: int, n_wave: int, n_waves: int) -> dict:
     from pyspark.sql import functions as F
 
     from prosearch_spark.corpus import synth_corpus
@@ -59,7 +69,7 @@ def main() -> None:
                  "n_wave": n_wave, "n_waves": n_waves}
 
     ix = SegmentedStreamingIndexer(
-        spark, tempfile.mkdtemp(prefix="segbench_segmented_"),
+        spark, os.path.join(work, "segmented"),
         n_buckets=16, merge_factor=8)
     t0 = time.perf_counter()
     ix.process_batch(docs, 0)
@@ -81,7 +91,7 @@ def main() -> None:
     from prosearch_spark.query.block_engine import BlockSearchEngine
 
     n_segs = 8
-    si = SegmentedIndex(spark, tempfile.mkdtemp(prefix="segbench_read_"),
+    si = SegmentedIndex(spark, os.path.join(work, "read"),
                         merge_factor=n_segs + 1)
     for i in range(n_segs):
         si.commit(docs.filter(F.col("doc_id") % n_segs == i),
@@ -120,7 +130,7 @@ def main() -> None:
                            - 5).cast("float")).alias("embedding"))
 
     vix = VectorStreamingIndexer(
-        spark, tempfile.mkdtemp(prefix="segbench_vec_"))
+        spark, os.path.join(work, "vec"))
     t0 = time.perf_counter()
     vix.process_batch(emb_of(docs.select("doc_id"), 0), 0)
     vbase_s = time.perf_counter() - t0
@@ -149,7 +159,7 @@ def main() -> None:
         "deletes_rows_before_gc": ndel_before,
         "deletes_rows_after_gc": 0 if d is None else int(d.count()),
     }
-    print(json.dumps(out))
+    return out
 
 
 if __name__ == "__main__":
