@@ -35,7 +35,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,6 +77,19 @@ def apply_deletes(postings: DataFrame, deletes: DataFrame | None) -> DataFrame:
     return postings
 
 
+def read_parquet(spark: SparkSession, paths: list[str], schemas: dict,
+                 shape: str = "") -> DataFrame:
+    """THE parquet read of index trees. A schema-less read runs a
+    footer job (schema inference), so ``shape``'s schema is inferred
+    once into ``schemas`` and passed afterwards. Only the schema is
+    held, never the file listing: appended files stay visible."""
+    if shape in schemas:
+        return spark.read.schema(schemas[shape]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    schemas[shape] = df.schema
+    return df
+
+
 _BUCKET_MEMO: dict[tuple[str, int], int] = {}
 
 
@@ -104,6 +117,9 @@ class IndexArtifact:
     path: str
     spark: SparkSession
     manifest: dict
+    # one generation's read snapshot: schemas by read shape, stats frame
+    _schemas: dict = field(default_factory=dict, repr=False, compare=False)
+    _stats: DataFrame | None = field(default=None, repr=False, compare=False)
 
     # -- load ----------------------------------------------------------------
 
@@ -119,10 +135,17 @@ class IndexArtifact:
     def n_buckets(self) -> int:
         return self.manifest["n_buckets"]
 
+    def _read(self, shape: str, *paths: str) -> DataFrame:
+        """This generation's ``shape`` tree, or ``paths`` of that read
+        shape (a segment stack's multi-path scan), schema held."""
+        return read_parquet(self.spark,
+                            paths or [os.path.join(self.path, shape)],
+                            self._schemas, shape)
+
     def _term_rows(self, sub: str, terms: list[str] | None) -> DataFrame:
         """``sub``'s rows, bucket-pruned + term-filtered when terms
         given."""
-        df = self.spark.read.parquet(os.path.join(self.path, sub))
+        df = self._read(sub)
         if terms is not None:
             terms = sorted(set(terms))
             buckets = sorted(set(term_buckets_py(
@@ -144,23 +167,25 @@ class IndexArtifact:
         return self._term_rows("term_stats", terms).select("term", "df")
 
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
+        return self._read("doc_stats")
 
     def deletes(self) -> DataFrame | None:
         d = os.path.join(self.path, "deletes")
         if os.path.isdir(d) and any(
             f.endswith(".parquet") for f in os.listdir(d)
         ):
-            return self.spark.read.parquet(d)
+            return self._read("deletes")
         return None
 
     def stats(self) -> DataFrame:
         """One-row (n_docs, avgdl) frame from the manifest (broadcast
-        scalar analog of per-segment collection stats)."""
-        return local_frame(
-            self.spark, [(self.manifest["n_docs"], self.manifest["avgdl"])],
-            "n_docs long, avgdl double",
-        )
+        scalar analog of per-segment collection stats), built once per
+        generation."""
+        if self._stats is None:
+            m = self.manifest
+            self._stats = local_frame(self.spark, [(m["n_docs"], m["avgdl"])],
+                                      "n_docs long, avgdl double")
+        return self._stats
 
     def as_index(self, terms: list[str] | None = None) -> InvertedIndex:
         """View the artifact as the logical InvertedIndex interface."""
@@ -199,11 +224,11 @@ class IndexArtifact:
             .option("compression", "zstd")
             .parquet(os.path.join(self.path, "doc_store"))
         )
+        self._schemas.pop("doc_store", None)
 
     def doc_store(self) -> DataFrame | None:
-        d = os.path.join(self.path, "doc_store")
-        if os.path.isdir(d):
-            return self.spark.read.parquet(d)
+        if os.path.isdir(os.path.join(self.path, "doc_store")):
+            return self._read("doc_store")
         return None
 
     def fetch_docs(self, hits: DataFrame) -> DataFrame:
@@ -508,7 +533,7 @@ def _write_artifact(spark: SparkSession, path: str, postings: DataFrame,
         # per commit; the tb partition column rides along for free (a
         # term lives in one bucket).
         try:
-            ts = spark.read.parquet(os.path.join(path, "blocks")) \
+            ts = read_parquet(spark, [os.path.join(path, "blocks")], {}) \
                 .groupBy("tb", "term") \
                 .agg(F.sum("n").cast("long").alias("df"))
         except Exception:

@@ -46,11 +46,22 @@ from prosearch_spark.index.artifact import (
     MANIFEST,
     IndexArtifact,
     merge_artifacts,
+    read_parquet,
     save_index,
 )
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.index.stack import SegmentStack, seg_tag
 from prosearch_spark.session import local_frame
+
+
+def _scan(segs: list[IndexArtifact], shape: str,
+          paths: list[str]) -> DataFrame:
+    """ONE multi-path scan over segment trees of one read shape. Its
+    schema is held by the segment owning the first path in sort order:
+    a fresh read infers from that segment's first file."""
+    first = min(paths)
+    owner = next(s for s in segs if first.startswith(s.path + os.sep))
+    return owner._read(shape, *paths)
 
 
 class SegmentedIndex(SegmentStack):
@@ -156,9 +167,8 @@ class SegmentedIndex(SegmentStack):
                          .items()))
             for s in segs}) == 1
         if uniform:
-            tagged = self.spark.read.parquet(*[
-                os.path.join(self._seg_path(n), "doc_stats")
-                for n in names
+            tagged = _scan(segs, "doc_stats", [
+                os.path.join(s.path, "doc_stats") for s in segs
             ]).select("doc_id", seg_tag("doc_stats"))
         else:
             tagged = reduce(
@@ -214,7 +224,7 @@ class SegmentedIndex(SegmentStack):
             tmp = os.path.join(self.root, f"tmp-delete-{uuid.uuid4().hex}")
             try:
                 ids.write.parquet(tmp)
-                self._tombstone(self.spark.read.parquet(tmp))
+                self._tombstone(read_parquet(self.spark, [tmp], {}))
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
 
@@ -468,7 +478,7 @@ class SegmentedArtifactView:
         ]
         if not paths:
             return None
-        return self._spark.read.parquet(*paths).filter(
+        return _scan(self._segments, f"{sub}/tb", paths).filter(
             F.col("term").isin(sorted(set(terms))))
 
     def blocks(self, terms: list[str] | None = None) -> DataFrame:
@@ -524,8 +534,8 @@ class SegmentedArtifactView:
 
     def doc_stats(self) -> DataFrame:
         # plain (unpartitioned) parquet trees: multi-path read is safe
-        df = self._spark.read.parquet(
-            *[os.path.join(s.path, "doc_stats") for s in self._segments])
+        df = _scan(self._segments, "doc_stats", [
+            os.path.join(s.path, "doc_stats") for s in self._segments])
         if self._del_map:
             from prosearch_spark.index.artifact import apply_deletes
 
@@ -613,12 +623,3 @@ class SegmentedArtifactView:
             self._union([st.withColumn("seg", F.lit(n))
                          for n, st in zip(self._names, stores)]),
             self.deletes())
-
-    def fetch_docs(self, hits: DataFrame) -> DataFrame:
-        """S5/J3 over the stack: broadcast the k hits against each
-        segment's store — same shape as IndexArtifact.fetch_docs, so
-        ArtifactSearcher.api serves a live stack unchanged."""
-        store = self.doc_store()
-        if store is None:
-            raise ValueError("no doc_store written for every segment")
-        return store.join(F.broadcast(hits), "doc_id")

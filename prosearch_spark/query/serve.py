@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
-from prosearch_spark.query.snippet import with_snippet
+from prosearch_spark.query.snippet import make_snippet_py
 from prosearch_spark.session import local_frame
 
 
@@ -257,38 +257,51 @@ class ArtifactSearcher:
         return out
 
     def api(self, q: str, nhits: int = 10) -> dict:
-        """The Serp response (serve.rs:301-312): routed hits joined to
-        the artifact's doc store, snippets rendered, body dropped (P1),
+        """The Serp response (serve.rs:301-312): the routed hits'
+        stored rows fetched by key in ONE doc-store job (the store is
+        doc_id-sorted: row groups prune), a hit without one dropped,
+        snippets rendered and ranked on the driver (with AQE off a
+        Spark sort runs its whole child plan twice), body dropped (P1),
         latency + chosen plan reported (Q13)."""
-        t0 = time.perf_counter()
-        hits, plan = self.route(q, nhits, round_to=6)
-        fetched = self.artifact.fetch_docs(hits)
-        display = [c for c in fetched.columns
-                   if c not in {"doc_id", "rank", "score", self.body_col}]
         # parse_query_slop so a "..."~N query highlights its phrase
         # terms instead of a bogus "~N" token
-        from prosearch_spark.analyzer import parse_query_slop
+        from prosearch_spark.analyzer import analyze_query, parse_query_slop
 
+        t0 = time.perf_counter()
+        hits, plan = self.route(q, nhits, round_to=6)
+        store = self.artifact.doc_store()
+        if store is None:
+            raise ValueError("no doc_store written for this deployment")
+        ranked = sorted(hits.collect(), key=lambda h: h["rank"])
+        fetched = store.filter(F.col("doc_id").isin(
+            [h["doc_id"] for h in ranked])).collect() if ranked else []
+        stored: dict[int, list] = {}
+        for r in fetched:
+            stored.setdefault(r["doc_id"], []).append(r.asDict())
         flat_terms = " ".join(
             c[0] if kind == "term"
             else " ".join(c[0]) if kind == "slop"
             else " ".join(c)
             for kind, c in parse_query_slop(q)
         )
-        fetched = with_snippet(fetched, flat_terms, self.body_col)
-        rows = fetched.orderBy("rank").collect()
+        terms = {t for t, _ in analyze_query(flat_terms)}
+        lead = ("rank", "doc_id", "score")
+        display = [c for c in store.columns
+                   if c not in {*lead, self.body_col}]
+        out = []
+        for h in ranked:
+            for doc in stored.get(h["doc_id"], []):
+                row = {**doc, **h.asDict()}
+                out.append({
+                    "doc": {c: row[c] for c in (*lead, *display)},
+                    "snip": make_snippet_py(row[self.body_col] or "",
+                                            terms),
+                })
         ms = (time.perf_counter() - t0) * 1000.0
         return {
             "q": q,
             "plan": plan,
-            "num_hits": len(rows),
-            "hits": [
-                {
-                    "doc": {c: r[c] for c in
-                            ("rank", "doc_id", "score", *display)},
-                    "snip": r["snip"],
-                }
-                for r in rows
-            ],
+            "num_hits": len(out),
+            "hits": out,
             "timings_ms": round(ms, 3),
         }

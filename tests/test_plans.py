@@ -378,3 +378,115 @@ def test_msearch_plan_scans_no_python_rdd(routed):
     assert hits.select("query_id").distinct().count() == 3
     for df in (hits, fielded.artifact.fetch_docs(hits)):
         assert "ExistingRDD" not in _plan(df), _plan(df)
+
+
+@pytest.mark.parametrize("q,plan", [
+    ("spark shuffle", "fielded_wand"),
+    ('python "spark shuffle"', "fielded_mixed"),
+    ('"spark shuffle"~2', "fielded_mixed_slop"),
+    ("spark shuffle", "wand"),
+])
+def test_api_matches_the_join_form(routed, serp_by_join, q, plan):
+    """``api`` fetches the page by key and renders snippets on the
+    driver: doc dicts (values AND key order), snippets, order and
+    num_hits are those of the fetch_docs + with_snippet +
+    orderBy("rank") form."""
+    fielded, flat = routed
+    searcher = flat if plan == "wand" else fielded
+    got = searcher.api(q, 10)
+    want = serp_by_join(searcher, q, 10)
+    assert got["plan"] == want["plan"] == plan
+    assert 0 < got["num_hits"] == want["num_hits"]
+    assert got["hits"] == want["hits"]
+    assert [list(h["doc"]) for h in got["hits"]] == \
+        [list(h["doc"]) for h in want["hits"]]
+
+
+def _api_jobs(spark, searcher, q, group, monkeypatch):
+    """Run ``api(q)`` with its jobs tagged ``group-route`` until
+    ``route`` returns and ``group-tail`` after."""
+    sc = spark.sparkContext
+    route = searcher.route
+
+    def tagged(*a, **kw):
+        out = route(*a, **kw)
+        sc.setJobGroup(f"{group}-tail", "api after route")
+        return out
+
+    monkeypatch.setattr(searcher, "route", tagged)
+    sc.setJobGroup(f"{group}-route", "api route")
+    try:
+        return searcher.api(q, 10)
+    finally:
+        sc.setJobGroup("", "")
+        monkeypatch.undo()
+
+
+@pytest.mark.parametrize("q,plan", [
+    ("spark shuffle", "fielded_wand"),
+    ('python "spark shuffle"', "fielded_mixed"),
+    ("spark shuffle", "wand"),
+])
+def test_api_job_budget(spark, routed, group_jobs, monkeypatch, q, plan):
+    """After one warm call every committed subtree's schema is held,
+    so a repeated ``api`` runs no parquet schema-inference job, and
+    everything after ``route`` is ONE doc-store job."""
+    fielded, flat = routed
+    searcher = flat if plan == "wand" else fielded
+    searcher.api(q, 10)
+    group = f"api-budget-{plan}"
+    assert _api_jobs(spark, searcher, q, group,
+                     monkeypatch)["plan"] == plan
+    names = [n for sfx in ("route", "tail")
+             for job in group_jobs(f"{group}-{sfx}") for n in job]
+    assert names and not [n for n in names if n.startswith("parquet at")]
+    assert len(group_jobs(f"{group}-tail")) == 1
+
+
+def test_routed_mix_recompiles_nothing(spark, routed):
+    """A repeated pass over the four routed plans compiles no generated
+    class: the session's codegen cache outlives a query mix (at Spark's
+    default 100 entries each call recompiled 20-56 classes)."""
+    fielded, flat = routed
+    mix = [(fielded, "spark shuffle"), (fielded, 'python "spark shuffle"'),
+           (fielded, '"spark shuffle"~2'), (flat, "spark shuffle")]
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    for searcher, q in mix:
+        searcher.api(q, 10)
+    before = compiled.getCount()
+    for searcher, q in mix:
+        searcher.api(q, 10)
+    assert compiled.getCount() == before
+
+
+def test_api_zero_hits_runs_no_fetch(spark, routed, group_jobs,
+                                     monkeypatch):
+    fielded, flat = routed
+    for searcher, name in ((flat, "flat"), (fielded, "fielded")):
+        searcher.api("spark", 10)  # warm
+        got = _api_jobs(spark, searcher, "zzunseenterm", f"api-zero-{name}",
+                        monkeypatch)
+        assert got["num_hits"] == 0 and got["hits"] == []
+        assert group_jobs(f"api-zero-{name}-tail") == []
+
+
+def test_api_drops_a_hit_without_stored_row(spark, routed, serp_by_join,
+                                            monkeypatch):
+    """A hit whose doc_id has no doc-store row is dropped, as in the
+    inner join."""
+    from prosearch_spark.query.engine import TOPK_SCHEMA
+    from prosearch_spark.session import local_frame
+
+    _fielded, flat = routed
+    top = flat.route("spark shuffle", 2, round_to=6)[0].collect()
+    rows = [(1, 10 ** 9, top[0]["score"] + 1.0)] + [
+        (i + 2, r["doc_id"], r["score"]) for i, r in enumerate(top)]
+    hits = local_frame(spark, rows, TOPK_SCHEMA)
+    monkeypatch.setattr(flat, "route", lambda q, k, round_to=None:
+                        (hits, "wand"))
+    got = flat.api("spark shuffle", 10)
+    assert got["hits"] == serp_by_join(flat, "spark shuffle", 10)["hits"]
+    assert [h["doc"]["doc_id"] for h in got["hits"]] == \
+        [r["doc_id"] for r in top]
+    assert [h["doc"]["rank"] for h in got["hits"]] == [2, 3]

@@ -362,6 +362,31 @@ def test_live_stack_serves_api_and_msearch(spark, corpus, tmp_path):
         [(r["doc_id"], r["score"]) for r in single]
 
 
+def test_live_stack_api_matches_the_join_form(spark, corpus, tmp_path,
+                                              serp_by_join):
+    """``api``'s one doc-store fetch over the tombstoned live view
+    returns the same hits as the fetch_docs + with_snippet +
+    orderBy("rank") form: each upserted hit once, with its NEW stored
+    fields."""
+    from prosearch_spark.query.serve import ArtifactSearcher
+
+    si = SegmentedIndex(spark, str(tmp_path / "segroot6c"))
+    stale = F.col("doc_id") % 4 == 0
+    si.commit(corpus.withColumn("repo", F.when(stale, F.lit("old-repo"))
+                                .otherwise(F.col("repo"))),
+              text_col="content", store_cols=["content", "repo"])
+    si.upsert(corpus.filter(stale), text_col="content",
+              store_cols=["content", "repo"])
+    s = ArtifactSearcher(spark, si.as_artifact(), body_col="content")
+    for q in ["spark shuffle", "python"]:
+        got = s.api(q, 20)
+        assert got["hits"] == serp_by_join(s, q, 20)["hits"]
+        docs = [h["doc"] for h in got["hits"]]
+        assert len({d["doc_id"] for d in docs}) == len(docs) > 0
+        assert any(d["doc_id"] % 4 == 0 for d in docs)
+        assert all(d["repo"] != "old-repo" for d in docs)
+
+
 def test_stack_serves_api_with_doc_store_and_gc(spark, corpus, tmp_path):
     """Full serving loop over a LIVE stack: commits write per-segment
     doc stores, ArtifactSearcher routes WAND over the union view and
